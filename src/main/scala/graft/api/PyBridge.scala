@@ -34,72 +34,27 @@ import org.apache.spark.sql.DataFrame
   * divides by the worker count. At cluster scale the same declaration
   * maps to executor-side Arrow workers; the handoff stays O(inputs +
   * output) parquet either way.
+  *
+  * Process lifecycle: no call starts an interpreter of its own. Each
+  * interpreter path ([[pythonFor]]: `python3`, or a cached venv/conda
+  * env) gets one [[ForkServer]] per JVM, started on first use, which
+  * imports pandas + pyarrow once and forks one child per model call
+  * (global) or per worker (partition, in either lane — an executor-lane
+  * task uses the server of the JVM it runs in). A child is the same
+  * process boundary as before: its own address space, its own log,
+  * its exit code, the `graft.step.timeout.sec` deadline (the server
+  * SIGKILLs it by pid); the server outlives it and is restarted if
+  * found dead. Scratch dirs are reclaimed once the result is written
+  * ([[releaseScratch]]).
   */
 object PyBridge {
 
   /** Interpreter + deps probe, memoized: the bridge needs a `python3`
-    * with pandas and pyarrow on PATH (specs cancel when absent).
+    * with pandas and pyarrow on PATH (specs cancel when absent). Read
+    * from the `python3` fork-server's ready line, so the probe also
+    * warms the server the first model call uses.
     */
-  lazy val available: Boolean =
-    try {
-      val p = new ProcessBuilder(
-        "python3", "-c", "import pandas, pyarrow").start()
-      p.waitFor() == 0
-    } catch { case _: Exception => false }
-
-  /** The child-side runner. Kept dependency-free (stdlib + pandas):
-    * builds the `dbt`/`fal` shim objects over the manifest's path maps,
-    * imports the user file with the model's project dir on `sys.path`
-    * (reference models do `from utils.x import y`), and requires a
-    * pandas DataFrame back — the same contract as the reference's
-    * Python-model materialization (`table.sql:34-46`).
-    */
-  private val runnerPy: String =
-    """import importlib.util, json, os, sys
-      |
-      |def main(manifest_path):
-      |    with open(manifest_path) as f:
-      |        m = json.load(f)
-      |    import pandas as pd
-      |
-      |    class Dbt:
-      |        def ref(self, name):
-      |            path = m["inputs"].get(name)
-      |            if path is None:
-      |                raise KeyError(
-      |                    "ref(%r): not declared in the model's deps" % name)
-      |            return pd.read_parquet(path)
-      |        def source(self, source_name, table_name):
-      |            path = m["sources"].get(source_name + "." + table_name)
-      |            if path is None:
-      |                raise KeyError("source(%r, %r): no parquet source"
-      |                               % (source_name, table_name))
-      |            return pd.read_parquet(path)
-      |        def config(self, *args, **kwargs):
-      |            pass
-      |
-      |    class Fal:
-      |        def ref(self, name):
-      |            return Dbt().ref(name)
-      |        def source(self, s, t):
-      |            return Dbt().source(s, t)
-      |
-      |    sys.path.insert(0, os.path.dirname(os.path.abspath(m["model_file"])))
-      |    spec = importlib.util.spec_from_file_location(
-      |        m["model_name"], m["model_file"])
-      |    mod = importlib.util.module_from_spec(spec)
-      |    spec.loader.exec_module(mod)
-      |    if not hasattr(mod, "model"):
-      |        raise AttributeError("%s defines no model(dbt, fal)"
-      |                             % m["model_file"])
-      |    out = mod.model(Dbt(), Fal())
-      |    if not isinstance(out, pd.DataFrame):
-      |        raise TypeError("model() must return a pandas DataFrame, got %s"
-      |                        % type(out).__name__)
-      |    out.to_parquet(m["output"], index=False)
-      |
-      |main(sys.argv[1])
-      |""".stripMargin
+  lazy val available: Boolean = ForkServer.importsOk("python3")
 
   private[api] def jstr(s: String): String =
     "\"" + s.flatMap {
@@ -144,7 +99,7 @@ object PyBridge {
   }
 
   /** Last ~2000 bytes of a (possibly huge) log file, without loading it. */
-  private def tailOf(p: java.nio.file.Path, n: Int = 2000): String =
+  private[api] def tailOf(p: java.nio.file.Path, n: Int = 2000): String =
     try {
       val raf = new java.io.RandomAccessFile(p.toFile, "r")
       try {
@@ -311,10 +266,34 @@ object PyBridge {
     ()
   }
 
+  /** Scratch dirs whose output parquet a returned DataFrame still reads,
+    * keyed by (api, model): reclaimed by [[releaseScratch]] once the
+    * caller has written the result ([[graft.plans.Runner]] does so right
+    * after `writeToModel`), by the next call for the same model, or by
+    * one JVM-exit hook for whatever a direct caller never released.
+    */
+  private val scratch = new java.util.concurrent.ConcurrentHashMap[
+    (FalApi, String), java.nio.file.Path]
+
+  private lazy val scratchHook: Unit =
+    sys.addShutdownHook(scratch.values.forEach(deleteRec(_)))
+
+  private def holdScratch(a: FalApi, name: String,
+      tmp: java.nio.file.Path): Unit = {
+    scratchHook
+    Option(scratch.put((a, name), tmp)).foreach(deleteRec)
+  }
+
+  /** Delete the scratch dir of `a`'s last call for model `name`; the
+    * DataFrame that call returned is unreadable afterwards. */
+  def releaseScratch(a: FalApi, name: String): Unit =
+    Option(scratch.remove((a, name))).foreach(deleteRec)
+
   /** Materialize `deps` refs to parquet, run the Python model in
-    * spawned interpreter(s), and return its result as a DataFrame (the
-    * caller writes it back with `writeToModel`, so versioning /
-    * bucketing / tests apply identically to Scala and SQL models).
+    * forked child(ren) of the interpreter's [[ForkServer]], and return
+    * its result as a DataFrame (the caller writes it back with
+    * `writeToModel`, so versioning / bucketing / tests apply
+    * identically to Scala and SQL models, then calls [[releaseScratch]]).
     * Non-zero exit or a missing output file → exception → the node
     * FAILs and downstream nodes SKIP, the reference's task semantics.
     *
@@ -347,23 +326,16 @@ object PyBridge {
     val outPath = tmp.resolve("out.parquet").toString
     val manifest = tmp.resolve("manifest.json")
     writeManifest(manifest, name, pyFile, outPath, inputs, sourcePaths(a))
-    val runner = tmp.resolve("graft_py_runner.py")
-    Files.writeString(runner, runnerPy)
-
     val logFile = tmp.resolve("model.log")
-    try runLogged(
-      new ProcessBuilder(python, runner.toString, manifest.toString),
-      logFile, s"python model $name")
+    try ForkServer.run(python, manifest, logFile, s"python model $name")
     catch { case t: Throwable => deleteRec(tmp); throw t }
     // Handoff complete: reclaim the input copies now. out.parquet must
     // outlive this call (the returned DataFrame reads it lazily until
-    // writeToModel materializes it), so the rest of tmp is reclaimed at
-    // JVM exit.
+    // writeToModel materializes it).
     inputs.foreach { case (_, p) => deleteRec(java.nio.file.Paths.get(p)) }
     Files.deleteIfExists(manifest)
-    Files.deleteIfExists(runner)
     Files.deleteIfExists(logFile)
-    sys.addShutdownHook(deleteRec(tmp))
+    holdScratch(a, name, tmp)
     a.spark.read.parquet(outPath)
   }
 
@@ -501,8 +473,6 @@ object PyBridge {
     parts.zipWithIndex.foreach { case (f, i) =>
       Files.move(f, splits(i % w).resolve(f.getFileName)); ()
     }
-    val runner = tmp.resolve("graft_py_runner.py")
-    Files.writeString(runner, runnerPy)
     val outPaths = (0 until w).map(i => tmp.resolve(s"out_$i.parquet"))
     (0 until w).foreach { i =>
       writeManifest(tmp.resolve(s"manifest_$i.json"), name, pyFile,
@@ -525,13 +495,13 @@ object PyBridge {
         (i, tmp.resolve(s"manifest_$i.json").toString,
           tmp.resolve(s"model_$i.log").toString)
       }
-      val (py, run, nm) = (python, runner.toString, name)
+      val (py, nm) = (python, name)
       val report =
         try a.spark.sparkContext.parallelize(jobs, w)
           .map { case (i, manifest, log) =>
             val err =
               try {
-                runLogged(new ProcessBuilder(py, run, manifest),
+                ForkServer.run(py, java.nio.file.Paths.get(manifest),
                   java.nio.file.Paths.get(log),
                   s"python model $nm [executor worker $i/$w]")
                 None
@@ -555,9 +525,7 @@ object PyBridge {
         pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
           def call(): Option[Throwable] =
             try {
-              runLogged(
-                new ProcessBuilder(python, runner.toString,
-                  tmp.resolve(s"manifest_$i.json").toString),
+              ForkServer.run(python, tmp.resolve(s"manifest_$i.json"),
                 tmp.resolve(s"model_$i.log"),
                 s"python model $name [worker $i/$w]")
               None
@@ -575,7 +543,7 @@ object PyBridge {
       deleteRec(java.nio.file.Paths.get(p))
     }
     deleteRec(primaryDir)
-    sys.addShutdownHook(deleteRec(tmp))
+    holdScratch(a, name, tmp)
     // Per-worker schema drift (ADVICE r11): a split whose pandas frame
     // infers an atypical dtype (the classic case: an all-null column
     // becoming float64/object) yields per-file schemas that a naive

@@ -28,14 +28,19 @@ object Tests {
         .count().filter(col("count") > 1).count())
 
   /** Generic `relationships`: every value of `column` must exist in
-    * `refModel.refColumn` (anti-join violation count).
+    * `refModel.refColumn` (anti-join violation count). The two sides are
+    * aliased, so same-named key columns (`k` -> `parent.k`) resolve.
     */
   def relationship(model: String, column: String, refModel: String,
-      refColumn: String): TestDef =
+      refColumn: String): TestDef = {
+    def side(alias: String, c: String) =
+      col(s"$alias.`${c.replace("`", "``")}`")
     TestDef(s"relationships_${model}_${column}__$refModel", model,
-      api => api.ref(model)
-        .join(api.ref(refModel),
-          col(column) === col(refColumn), "left_anti").count())
+      api => api.ref(model).as("child")
+        .join(api.ref(refModel).as("parent"),
+          side("child", column) === side("parent", refColumn), "left_anti")
+        .count())
+  }
 
   /** Generic `accepted_values` (ref jaffle fixture,
     * `cli_tests/projects/002_jaffle_shop/models/schema.yml:75` and

@@ -124,7 +124,9 @@ object Runner {
   private def runModel(a: FalApi, m: graft.api.ModelDef,
       name: String, vars: Map[String, String],
       fullRefresh: Boolean): Unit = {
-    {
+    // a Python model's result is read lazily from its scratch dir until
+    // the write below materializes it; reclaim the dir when the node ends
+    try {
       val isIncremental = m.incremental && !fullRefresh &&
         a.registry.relationExists(name)
       val out = m.kind match {
@@ -132,7 +134,7 @@ object Runner {
           substituteVars(sql, vars), isIncremental, name, a))
         case ModelKind.Scala(fn) => fn(a.spark, a)
         // D1's flagship: the user's actual Python file, run isolated in
-        // its own interpreter(s) with parquet handoff (PyBridge); the
+        // forked interpreter child(ren) with parquet handoff (PyBridge); the
         // result re-enters the exact same write/test path as Scala/SQL.
         // `python_mode=partition` meta fans the primary input out to a
         // worker pool instead of the reference's one-process contract.
@@ -187,7 +189,7 @@ object Runner {
       if (results.nonEmpty)
         a.registry.setStatus(name, graft.api.Status.Tested)
       ()
-    }
+    } finally graft.api.PyBridge.releaseScratch(a, name)
   }
 
   /** Build and run the selected pipeline; returns exit status (0 ok). */

@@ -254,6 +254,19 @@ class RunnerSpec extends AnyFunSuite {
     assert(sing.violations(api) == 0)
   }
 
+  test("relationship test on same-named key columns") {
+    val api = freshApi()
+    import spark.implicits._
+    api.writeToModel(Seq((1L, "x"), (2L, "y")).toDF("k", "s"), "parent")
+    api.writeToModel(Seq((10L, 1L), (11L, 2L)).toDF("id", "k"), "child")
+    assert(Tests.relationship("child", "k", "parent", "k")
+      .violations(api) == 0)
+    api.writeToModel(Seq((10L, 1L), (11L, 3L), (12L, 4L)).toDF("id", "k"),
+      "child")
+    assert(Tests.relationship("child", "k", "parent", "k")
+      .violations(api) == 2) // k=3 and k=4 are orphaned
+  }
+
   /** VERDICT r4 #5: the standalone `fal run` analogue
     * (`fal_runner.py:34-62`) — scripts execute over the PREVIOUS run's
     * ledger statuses without rebuilding any model; `--before` runs
