@@ -15,9 +15,6 @@ object Explain {
     val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // expose eagerly-checkpointed dataflows (dd_cluster_density) as
-    // their full plan instead of one ExistingRDD scan
-    spark.conf.set("graft.planOnly", "true")
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     spark.stop()
   }

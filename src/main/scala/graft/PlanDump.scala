@@ -62,6 +62,9 @@ object PlanDump {
       "`HashAggregate`, `TakeOrderedAndProject` for top-k, and " +
       "`WholeStageCodegen` spans covering the hot expressions.\n")
     picks.foreach { case (name, why) =>
+      // drop the previous query's caches, as the runners do, so no plan
+      // reads another query's cached frame
+      spark.sharedState.cacheManager.clearCache()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -20,10 +20,9 @@ object Tables {
     * metastore plays in production: without it, EVERY
     * `spark.read.parquet` runs a footer-inference Spark job at
     * DataFrame CONSTRUCTION (~200 jobs across one pass over the query
-    * map, measured by SchemaWalkProbe). The sf fixtures are immutable
-    * for the life of a process, so the schema is cached process-wide
-    * and re-reads go through `.schema(...)` — zero jobs, identical
-    * plans.
+    * map). The sf fixtures are immutable for the life of a process,
+    * so the schema is cached process-wide and re-reads go through
+    * `.schema(...)` — zero jobs, identical plans.
     *
     * The immutability assumption has ONE in-process writer:
     * [[DataGen]]'s tiling, which therefore calls [[invalidate]] after

@@ -144,7 +144,7 @@ object DedupGraph extends QueryPack {
       .unionAll(tri.join(comp, Seq("node"))
         .select(col("cluster"), lit(0L).as("v"), lit(0L).as("e"),
           lit(1L).as("t")))
-    val rolled = contrib.groupBy("cluster")
+    contrib.groupBy("cluster")
       .agg(sum(col("v")).as("n_sigs"), sum(col("e")).as("n_edges"),
         sum(col("t")).as("n_triangles"))
       .select(col("cluster"), col("n_sigs"), col("n_edges"),
@@ -153,28 +153,6 @@ object DedupGraph extends QueryPack {
           (col("n_sigs") * (col("n_sigs") - lit(1L))).cast("double"))
           .as("density"))
       .orderBy("cluster")
-    // plan-only escape hatch for graft.Explain: the eager checkpoint
-    // below otherwise executes during query CONSTRUCTION and collapses
-    // the visible plan to one ExistingRDD scan — dumping the real
-    // dataflow needs the un-checkpointed frame (never set in
-    // Verify/Bench paths; rows are identical either way)
-    if (spark.conf.getOption("graft.planOnly").exists(_.toBoolean)) {
-      // release the two cache registrations before the early return
-      // (ADVICE r14): the flag is session-wide conf, so a non-Explain
-      // caller that sets it must not silently lose the release
-      // contract; lineage still computes for the plan dump
-      edges.unpersist()
-      arcs.unpersist()
-      return rolled
-    }
-    // materialize the (per-cluster, tiny) result eagerly so the two
-    // cached inputs can be RELEASED before returning — bench loops
-    // invoke this repeatedly and the cache()s otherwise leak blocks
-    // until LRU eviction (ADVICE r13)
-    val out = rolled.localCheckpoint()
-    edges.unpersist()
-    arcs.unpersist()
-    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

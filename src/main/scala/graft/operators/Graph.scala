@@ -193,8 +193,6 @@ object Graph extends QueryPack {
       .filter(col("s_suppkey") <= 3)
       .select((col("s_suppkey") * 2).as("node"), lit(0L).as("dist"))
     var dist = seed
-    val roundCaches =
-      scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
     for (_ <- 1 to 4) {
       // each round consumes `dist` TWICE (the relaxation probe and the
       // keep-current union arm); uncached, the lineage doubles per
@@ -204,42 +202,19 @@ object Graph extends QueryPack {
       // stream side has no exchange to dedup (opt guide §1.2/§5 —
       // cache exactly the reused node-sized frame; the edge model is
       // never cached). Measured ~2.1 s → ~0.9 s steady at sf0.1.
-      val relaxed = edges
+      dist = edges
         .join(dist.hint("shuffle_hash"), edges("src") === dist("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("d"))
         .unionByName(dist.select(col("node"), col("dist").as("d")))
         .groupBy("node").agg(min(col("d")).as("dist"))
-      dist = relaxed.cache()
-      roundCaches += dist
+        .cache()
     }
-    def shaped(d: org.apache.spark.sql.DataFrame) = d.select(
+    dist.select(
       when(col("node") % 2 === 0, lit("supplier")).otherwise(lit("part"))
         .as("kind"),
       expr("node div 2").as("key"),
       col("dist"))
       .orderBy("kind", "key")
-    // plan-only / schema-only escape hatch, same contract as
-    // DedupGraph.clusterDensityOf: the eager checkpoint below would
-    // collapse the dumped plan to one ExistingRDD scan (and a schema
-    // walk must not run jobs). Unpersist the (never-materialized)
-    // round caches so the flag leaks nothing.
-    if (Shared.schemaOnly(spark) ||
-        spark.conf.getOption("graft.planOnly").exists(_.toBoolean)) {
-      roundCaches.foreach(_.unpersist())
-      return shaped(dist)
-    }
-    // Checkpoint the NODE-SIZED final distance table (not the shaped/
-    // sorted output — checkpointing after the export sort would force
-    // work a consumer's action may never need, e.g. a count prunes the
-    // sort entirely), then RELEASE all four round caches: Verify runs
-    // ~177 queries in one session with no clearCache, so retained
-    // per-round blocks otherwise accumulate until LRU eviction
-    // (VERDICT r14 #5 / ADVICE r14 — the clusterDensityOf discipline).
-    // The eager checkpoint pulls each round through its cache exactly
-    // once — the same work the final action previously triggered.
-    val finalDist = dist.localCheckpoint()
-    roundCaches.foreach(_.unpersist())
-    shaped(finalDist)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

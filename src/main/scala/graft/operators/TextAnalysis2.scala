@@ -66,9 +66,7 @@ object TextAnalysis2 extends QueryPack {
     // corpus-sized doc_terms model — once per consumer (the n_uni
     // total and BOTH broadcast sides re-planned it), so the dominant
     // cost was three identical passes over the model. The rollup is
-    // vocabulary-sized (the sanctioned cache class), so cache it,
-    // materialize the 20-row result eagerly, and release the cache
-    // before returning (the q_sssp/clusterDensityOf discipline).
+    // vocabulary-sized (the sanctioned cache class), so cache it.
     // Measured: 3.03 s → (see OPTIMIZATION_r15) at local[32] sf0.1.
     val uni = TextAnalysis.docTerms(spark, dir)
       .groupBy("term").agg(sum(col("cnt")).as("c1")).cache()
@@ -78,7 +76,7 @@ object TextAnalysis2 extends QueryPack {
       bi.agg(sum(col("c12")).as("n_bi")))
     val dN = col("n_uni").cast("double")
     val dM = col("n_bi").cast("double")
-    val out = bi.filter(col("c12") >= 5)
+    bi.filter(col("c12") >= 5)
       .join(broadcast(uni.withColumnRenamed("term", "w1")
         .withColumnRenamed("c1", "cx")), Seq("w1"))
       .join(broadcast(uni.withColumnRenamed("term", "w2")
@@ -90,17 +88,6 @@ object TextAnalysis2 extends QueryPack {
             (col("cy").cast("double") / dN))), 6).as("pmi"))
       .orderBy(col("pmi").desc, col("w1"), col("w2"))
       .limit(20)
-    // plan-only / schema-only escape hatch (graft.Explain / the gate
-    // walk): the eager checkpoint would collapse the dumped plan to
-    // one ExistingRDD scan, and a schema walk must not run jobs
-    if (Shared.schemaOnly(spark) ||
-        spark.conf.getOption("graft.planOnly").exists(_.toBoolean)) {
-      uni.unpersist()
-      return out
-    }
-    val checkpointed = out.localCheckpoint()
-    uni.unpersist()
-    checkpointed
   }
 
   /** E7/E9 — C4-style composite quality gate: word-count bounds, mean

@@ -20,10 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Dedup.connectedComponents`, the sizing count in
   * `Similarity.ivfParams` — into lazy/fixed schema-identical
   * substitutes; `Tables.load`'s process-wide schema cache removes the
-  * per-construction parquet footer-inference jobs on top. Measured
-  * (isolated `testOnly`, SchemaWalkProbe): the walk went from 29 s /
-  * 198 jobs (r9) to 14 s / 10 one-time-inference jobs — the residue is
-  * driver-side Catalyst analysis, no sf0.001 pipeline runs. The parity
+  * per-construction parquet footer-inference jobs on top. The walk
+  * went from 29 s / 198 jobs (r9) to 14 s / 10 one-time-inference jobs
+  * — the residue is driver-side Catalyst analysis, no sf0.001 pipeline
+  * runs; PlanPropertiesSpec's "query construction runs no Spark job"
+  * keeps the construction job count pinned without the flag. The parity
   * tests at the end pin the flag's substitutes to the real path's
   * schemas for the query families the flag touches, so the gate cannot
   * drift from what Verify actually emits.

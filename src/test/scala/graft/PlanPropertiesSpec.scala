@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guard rails on the physical plans of representative queries — the
@@ -13,10 +14,16 @@ class PlanPropertiesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, dir)
-    df.queryExecution.executedPlan.toString
+  /** Builds a query the way the runners do: after clearing the caches
+    * earlier queries (and earlier suites on the shared session) left
+    * behind, so the plan never reads another query's cached frame. */
+  private def query(name: String): DataFrame = {
+    spark.sharedState.cacheManager.clearCache()
+    SparkEntry.queries(name)(spark, dir)
   }
+
+  private def plan(name: String): String =
+    query(name).queryExecution.executedPlan.toString
 
   test("filters reach the parquet scan (predicate pushdown)") {
     val p = plan("c3_filter")
@@ -56,7 +63,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val root = SparkEntry.queries("dd_embedding_neardup_lsh")(spark, dir)
+    val root = query("dd_embedding_neardup_lsh")
       .queryExecution.executedPlan
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -121,7 +128,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.Exchange
-    val root = SparkEntry.queries("dd_substring_scrub")(spark, dir)
+    val root = query("dd_substring_scrub")
       .queryExecution.executedPlan
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -263,7 +270,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
         "tx_bigram_lm" -> "graft_bigram_counts",
         "tx_bpe_apply" -> "graft_bpe_seg_3",
         "tx_boilerplate" -> "graft_doc_shingles")) {
-      val p = SparkEntry.queries(name)(spark, dir)
+      val p = query(name)
         .queryExecution.executedPlan
       assert(finalAggInPlace(p, tbl),
         s"$name: expected a final aggregate directly over the bucketed " +
@@ -304,7 +311,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
       self || kids(p).exists(shuffledRawRows(_, tbl))
     }
     for (name <- Seq("dd_substring", "dd_substring_scrub")) {
-      val p = SparkEntry.queries(name)(spark, dir)
+      val p = query(name)
         .queryExecution.executedPlan
       assert(!shuffledRawRows(p, "graft_gram_starts_10"),
         s"$name: raw gram_starts rows crossed a shuffle:\n" +
@@ -332,7 +339,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
       self + kids.map(emptyPartWindows).sum
     }
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
+      val df = query(name)
       val n = emptyPartWindows(df.queryExecution.executedPlan)
       if (n > 0 && !intendedGlobalWindow(name)) Some(s"$name($n)") else None
     }
@@ -375,7 +382,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
       self + kids.map(lowCardWindows).sum
     }
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
+      val df = query(name)
       val n = lowCardWindows(df.queryExecution.executedPlan)
       if (n > 0 && !intendedLowCardWindow(name)) Some(s"$name($n)") else None
     }
@@ -411,7 +418,9 @@ class PlanPropertiesSpec extends AnyFunSuite {
         "tx_boilerplate" -> "graft_doc_shingles",
         "dd_contamination" -> "graft_doc_shingles",
         "tx_dsir" -> "graft_doc_terms",
-        "q_cms_heavy" -> "graft_doc_terms")) {
+        "q_cms_heavy" -> "graft_doc_terms",
+        "q_sssp" -> "graft_edges_weighted",
+        "dd_cluster_density" -> "graft_lsh_rep_edges")) {
       val p = plan(name)
       assert(p.contains(tbl),
         s"$name no longer reads the shared bucketed materialization " +
@@ -429,5 +438,40 @@ class PlanPropertiesSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"unintended quadratic join strategies in: $offenders")
+  }
+
+  /** Building a query returns a lazy plan: its Spark jobs run when the
+    * caller acts on it, and its caches live until the caller's
+    * per-query `clearCache()`. These three queries each cache a frame
+    * they read several times; building them may run no job beyond
+    * dd_cluster_density's union-find contraction.
+    */
+  test("query construction runs no Spark job") {
+    val sc = spark.sparkContext
+    // the first construction resolves (or builds) the standing models
+    Seq("tx_pmi", "q_sssp", "dd_cluster_density").foreach(query)
+    def constructionJobs(name: String): Seq[Int] = {
+      val group = s"construct-$name"
+      sc.setJobGroup(group, s"construct $name")
+      try query(name)
+      finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).toSeq
+    }
+    for (name <- Seq("tx_pmi", "q_sssp")) {
+      val jobs = constructionJobs(name)
+      assert(jobs.isEmpty, s"building $name ran Spark jobs $jobs")
+    }
+    // dd_cluster_density's cluster labels come from the union-find
+    // contraction, which counts its star edges while it is built; a
+    // job is attributed through the call stack of its SQL execution
+    val jobs = constructionJobs("dd_cluster_density")
+    val execs = spark.sharedState.statusStore.executionsList()
+    val outside = jobs.filterNot { id =>
+      execs.exists(e => e.jobs.contains(id) &&
+        e.details.contains("Dedup$.connectedComponents"))
+    }
+    assert(outside.isEmpty,
+      s"building dd_cluster_density ran jobs $outside outside the " +
+        "union-find contraction")
   }
 }
