@@ -107,44 +107,34 @@ final class FalApi(
     * table when the version was written clustered, else a (chain-aware)
     * plain parquet read.
     */
-  private def readResolved(name: String, path: String): DataFrame = {
-    val marker = FsIO.child(path, "_bucketed_table")
-    if (FsIO.exists(marker)) {
-      // marker: table name, plus (since round 3) the bucket count and
-      // columns the FILES were written with
-      val lines = FsIO.readString(marker).trim
-        .split("\n").toSeq
-      val tbl = lines.head.trim
-      // The default in-memory catalog forgets tables across JVM
-      // restarts while the pointer + parquet data persist on disk —
-      // re-register from the marker's recorded spec (falling back to
-      // the model's meta for pre-spec markers) so a materialized
-      // bucketed model stays readable (and keeps its no-shuffle joins).
-      if (!spark.catalog.tableExists(tbl)) {
-        val spec =
-          if (lines.size >= 3)
-            Some((lines(1).trim.toInt,
-              lines(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-          else bucketSpec(name)
-        spec match {
+  private def readResolved(name: String, path: String): DataFrame =
+    FalApi.bucketMarker(path) match {
+      case None => readVersion(path)
+      case Some((tbl, _)) if spark.catalog.tableExists(tbl) =>
+        spark.table(tbl)
+      case Some((tbl, recorded)) =>
+        // The default in-memory catalog forgets tables across JVM
+        // restarts while the pointer + parquet data persist on disk —
+        // re-register from the marker's recorded spec (falling back to
+        // the model's meta for pre-spec markers) so a materialized
+        // bucketed model stays readable (and keeps its no-shuffle joins).
+        recorded.orElse(bucketSpec(name)) match {
           case Some((n, cols)) =>
             val schemaDdl = spark.read.parquet(path).schema.toDDL
             val colList = cols.map(c => s"`$c`").mkString(", ")
             spark.sql(s"CREATE TABLE `$tbl` ($schemaDdl) USING parquet " +
               s"CLUSTERED BY ($colList) SORTED BY ($colList) " +
               s"INTO $n BUCKETS LOCATION '$path'")
+            spark.table(tbl)
           case None =>
             // bucket meta was removed since the write: data is still
             // valid parquet, so degrade to a plain (unbucketed) read
             ledger.record(name, Status.Success,
               s"warn: bucketed table $tbl lost and model no longer " +
                 "declares bucket_by; reading as plain parquet")
-            return spark.read.parquet(path)
+            spark.read.parquet(path)
         }
-      }
-      spark.table(tbl)
-    } else readVersion(path)
-  }
+    }
 
   /** The version directories an append chain is made of: each
     * metadata-only append records its predecessor in `_prev_version`,
@@ -187,7 +177,7 @@ final class FalApi(
     registry.modelOpt(name).flatMap { m =>
       m.meta.get("bucket_by").map { cols =>
         (m.meta.get("buckets").flatMap(_.toIntOption).getOrElse(8),
-          cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+          FalApi.splitCols(cols))
       }
     }
 
@@ -221,12 +211,11 @@ final class FalApi(
       // record the spec the FILES were written with, so a catalog-loss
       // re-registration can never claim a different bucketing than the
       // data has (the model's meta may change between write and read)
-      FsIO.writeString(FsIO.child(target, "_bucketed_table"),
+      FsIO.writeString(FsIO.child(target, FalApi.BucketMarker),
         s"$tbl\n$n\n${cols.mkString(",")}")
     case None =>
       val partCols = registry.modelOpt(name)
-        .flatMap(_.meta.get("partition_by"))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .flatMap(_.meta.get("partition_by")).map(FalApi.splitCols)
         .getOrElse(Seq.empty)
       if (partCols.nonEmpty)
         df.write.mode("overwrite").partitionBy(partCols: _*).parquet(target)
@@ -235,24 +224,6 @@ final class FalApi(
       // re-infer partition-column types from directory names (string
       // '01' would silently become int 1 on rewrite)
       FsIO.writeString(FsIO.child(target, "_schema.ddl"), df.schema.toDDL)
-  }
-
-  /** The bucket spec a version's FILES were actually written with
-    * (recorded in its `_bucketed_table` marker), independent of what
-    * is registered in this process. Shared with the standing-model
-    * maintenance layer (compaction thresholds, append-path
-    * fingerprints) so the marker format is parsed in ONE place. */
-  private[graft] def markerBucketSpec(versionDir: String)
-      : Option[(Int, Seq[String])] = {
-    val marker = FsIO.child(versionDir, "_bucketed_table")
-    if (!FsIO.exists(marker)) None
-    else {
-      val lines = FsIO.readString(marker).trim.split("\n").toSeq
-      if (lines.size >= 3)
-        Some((lines(1).trim.toInt,
-          lines(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-      else None
-    }
   }
 
   /** Output-layout skew report from the written files' sizes — free
@@ -276,20 +247,6 @@ final class FalApi(
     if (src.path.nonEmpty) reader.load(src.path) else reader.load()
   }
 
-  /** A4/A5 — write a DataFrame as a model relation.
-    *
-    * Overwrite writes a fresh version directory then atomically swaps
-    * the catalog pointer (never in-place — concurrent readers keep the
-    * old version; ref `overwrite_target lib.py:286-329`). Append on a
-    * plain model is METADATA-ONLY: the new version holds just the
-    * increment plus a `_prev_version` link, and reads scan the whole
-    * chain — O(increment) write cost, prior versions' files untouched
-    * (the behavior a daily 100 TB append pipeline needs; compaction
-    * collapses long chains). Models with a declared clustered layout
-    * (bucket_by / partition_by) keep the rewrite-through-layout path —
-    * an appended stray dir would silently void the bucketed-join and
-    * partition-pruning guarantees their readers rely on.
-    */
   /** Write-time schema override (ref `write_to_model`/`write_to_source`
     * forward a partial `dtype` map to the warehouse writer,
     * `project.py:757-801`, `lib.py:620-666`): listed columns are cast
@@ -358,52 +315,126 @@ final class FalApi(
           .map(_.copy(nullable = true)))
   }
 
+  /** A4/A5 — write a DataFrame as a model relation.
+    *
+    * Overwrite writes a fresh version directory then atomically swaps
+    * the catalog pointer (never in-place — concurrent readers keep the
+    * old version; ref `overwrite_target lib.py:286-329`). Append on a
+    * plain model is METADATA-ONLY: the new version holds just the
+    * increment plus a `_prev_version` link, and reads scan the whole
+    * chain — O(increment) write cost, prior versions' files untouched
+    * (the behavior a daily 100 TB append pipeline needs; compaction
+    * collapses long chains). Models with a declared clustered layout
+    * (bucket_by / partition_by) keep the rewrite-through-layout path —
+    * an appended stray dir would silently void the bucketed-join and
+    * partition-pruning guarantees their readers rely on.
+    */
   def writeToModel(df0: DataFrame, name: String,
       mode: String = "overwrite",
       schema: Map[String, org.apache.spark.sql.types.DataType] =
         Map.empty,
       pointerMeta: Map[String, String] = Map.empty): WriteResult = {
-    require(allowWrites,
-      "write_to_model is not allowed in hooks (ref fal_script.py:290-296)")
     val df = applySchema(df0, schema)
-    val target = registry.nextVersionDir(name)
     val clustered = bucketSpec(name).isDefined ||
       registry.modelOpt(name).exists(_.meta.contains("partition_by"))
-    mode match {
-      case "overwrite" => materialize(df, name, target)
-      case "append" =>
-        registry.currentPath(name) match {
-          case Some(cur) if clustered =>
-            materialize(readVersion(cur)
-              .unionByName(df, allowMissingColumns = true), name, target)
-          case Some(cur) =>
-            materialize(df, name, target)
-            // schema evolution across the chain: the head version's
-            // _schema.ddl governs the whole multi-path read, so it must
-            // be the UNION of the chain's schema and this batch's — a
-            // narrower batch would otherwise hide older columns, and
-            // files missing a column null-fill only if the column is
-            // declared nullable. Type conflicts fail here, at the
-            // write, not at some later read.
-            FsIO.writeString(FsIO.child(target, "_schema.ddl"),
-              mergeChainSchema(versionSchema(cur), df.schema).toDDL)
-            FsIO.writeString(FsIO.child(target, "_prev_version"),
-              FsIO.fileName(cur))
-          case None => materialize(df, name, target)
-        }
-      case other => throw new IllegalArgumentException(
+    (mode, registry.currentPath(name)) match {
+      case ("overwrite", _) | ("append", None) =>
+        commitVersion(df, name, mode, pointerMeta)
+      case ("append", Some(cur)) if clustered =>
+        commitVersion(readVersion(cur)
+          .unionByName(df, allowMissingColumns = true), name, mode,
+          pointerMeta)
+      case ("append", Some(cur)) =>
+        commitVersion(df, name, mode, pointerMeta, link = target => {
+          // schema evolution across the chain: the head version's
+          // _schema.ddl governs the whole multi-path read, so it must
+          // be the UNION of the chain's schema and this batch's — a
+          // narrower batch would otherwise hide older columns, and
+          // files missing a column null-fill only if the column is
+          // declared nullable. Type conflicts fail here, at the
+          // write, not at some later read.
+          FsIO.writeString(FsIO.child(target, "_schema.ddl"),
+            mergeChainSchema(versionSchema(cur), df.schema).toDDL)
+          FsIO.writeString(FsIO.child(target, "_prev_version"),
+            FsIO.fileName(cur))
+        })
+      case (other, _) => throw new IllegalArgumentException(
         s"unknown write mode: $other")
     }
-    // data + pointerMeta commit in ONE atomic pointer move: a crash
-    // anywhere above leaves the old pointer (and old meta) — the
-    // orphaned version dir is harmless and vacuumed later
+  }
+
+  /** The one versioned commit every model rewrite ends in (overwrite,
+    * both append paths, merge, insert_overwrite, snapshot): materialize
+    * `df` into a fresh version dir, run `link` on it (the metadata-only
+    * append's chain link), then swap the pointer. Data + `pointerMeta`
+    * commit in ONE atomic pointer move: a crash anywhere before it
+    * leaves the old pointer (and old meta) — the orphaned version dir
+    * is harmless and vacuumed later.
+    */
+  private def commitVersion(df: DataFrame, name: String, mode: String,
+      pointerMeta: Map[String, String] = Map.empty,
+      link: String => Unit = _ => ()): WriteResult = {
+    require(allowWrites,
+      "write_to_model is not allowed in hooks (ref fal_script.py:290-296)")
+    val target = registry.nextVersionDir(name)
+    materialize(df, name, target)
+    link(target)
     registry.swapPointer(name, target, pointerMeta)
-    val rows = readVersion(target).count()
-    val res = WriteResult(name, rows, mode)
-    ledger.record(name, Status.Success,
-      s"write $mode rows=$rows${fileSkew(target)}")
+    val res = recordVersion(name, target, mode, s"write $mode")
     registry.setStatus(name, Status.Success)
     res
+  }
+
+  /** Count a just-swapped version (its whole append chain) and record
+    * the write in the ledger as `<label> rows=<n><detail>` plus the
+    * file-skew report. */
+  private def recordVersion(name: String, target: String, mode: String,
+      label: String, detail: String = ""): WriteResult = {
+    val rows = readVersion(target).count()
+    ledger.record(name, Status.Success,
+      s"$label rows=$rows$detail${fileSkew(target)}")
+    WriteResult(name, rows, mode)
+  }
+
+  /** The in-place commit of the bucketed append and delete paths: the
+    * live bucketed version (`cur`, its catalog table `tbl` and recorded
+    * bucket spec, and the frame it resolves to — the catalog table is
+    * re-registered from the marker when this session, e.g. a fresh
+    * process, has not seen it yet) goes to `mutate`, which writes into
+    * it and returns `(rows, ledger detail)`.
+    *
+    * The commit is version-checked: a concurrent REWRITE (compaction,
+    * overwrite) of this model between our read and this commit would
+    * mean the files just written landed in a version dir that is no
+    * longer live — surface that as a conflict (caller re-runs against
+    * the new current, e.g. via Registry.retrySwap) instead of silently
+    * re-pointing readers at the superseded dir. `append_seq` makes
+    * EVERY in-place write visible in the pointer CONTENT (ADVICE r12):
+    * it keeps the version name, so a concurrent compaction's
+    * content-pinned swap can only detect it through a meta change —
+    * which a meta-less write would otherwise not make.
+    */
+  private def commitInPlace(name: String, mode: String,
+      pointerMeta: Map[String, String])(
+      mutate: (String, String, Option[(Int, Seq[String])], DataFrame) =>
+        (Long, String)): WriteResult = {
+    require(allowWrites, "write_to_model is not allowed in hooks")
+    val cur = registry.currentPath(name).getOrElse(
+      throw new IllegalStateException(s"model not materialized: $name"))
+    val baseVersion = registry.currentVersion(name)
+    val (tbl, spec) = FalApi.bucketMarker(cur).getOrElse(
+      throw new IllegalArgumentException(
+        s"$mode: $name's current version is not bucketed (plain " +
+          "models append through writeToModel mode=append)"))
+    val (rows, detail) = mutate(cur, tbl, spec, readResolved(name, cur))
+    val seq = registry.pointerMeta(name)
+      .get("append_seq").map(_.toLong).getOrElse(0L) + 1L
+    registry.swapPointer(name, cur,
+      pointerMeta + ("append_seq" -> seq.toString),
+      expectedVersion = baseVersion)
+    ledger.record(name, Status.Success, s"$mode $detail")
+    registry.setStatus(name, Status.Success)
+    WriteResult(name, rows, mode)
   }
 
   /** O(increment) bucket-aligned APPEND into a bucketed model's
@@ -432,58 +463,30 @@ final class FalApi(
     * silently wrong.
     */
   def appendToBucketedModel(df: DataFrame, name: String,
-      pointerMeta: Map[String, String] = Map.empty): WriteResult = {
-    require(allowWrites, "write_to_model is not allowed in hooks")
-    val cur = registry.currentPath(name).getOrElse(
-      throw new IllegalStateException(s"model not materialized: $name"))
-    val baseVersion = registry.currentVersion(name)
-    val marker = FsIO.child(cur, "_bucketed_table")
-    require(FsIO.exists(marker),
-      s"appendToBucketedModel: $name's current version is not bucketed " +
-        "(use writeToModel mode=append)")
-    // readResolved re-registers the catalog table from the marker when
-    // this session (a fresh process) has not seen it yet
-    val resolved = readResolved(name, cur)
-    val tbl = FsIO.readString(marker).trim.split("\n").head.trim
-    val cols = resolved.columns
-    require(df.columns.toSet == cols.toSet,
-      s"append increment columns ${df.columns.mkString(",")} != model " +
-        s"columns ${cols.mkString(",")}")
-    // O(increment) accounting: count the increment once up front (the
-    // plan runs twice — count + insert — both O(batch)); a post-append
-    // count of the TABLE would scan the whole accumulated model per
-    // ingest batch, breaking this path's O(increment) contract
-    val inc = df.select(cols.map(col).toIndexedSeq: _*)
-      .localCheckpoint()
-    val rows = inc.count()
-    // insertInto resolves POSITIONALLY — align to the table's order
-    inc.write.insertInto(tbl)
-    // insertInto refreshes the WRITING session's relation cache only;
-    // when the increment frame rides a cloned session (a foreachBatch
-    // micro-batch), THIS api's session would otherwise keep serving
-    // the pre-append file listing — refresh it explicitly so readers
-    // through this session see the appended buckets
-    spark.catalog.refreshTable(tbl)
-    // version-checked: a concurrent REWRITE (compaction, overwrite) of
-    // this model between our read and this commit would mean the files
-    // just appended landed in a version dir that is no longer live —
-    // surface that as a conflict (caller re-runs against the new
-    // current, e.g. via Registry.retrySwap) instead of silently
-    // re-pointing readers at the superseded dir. `append_seq` makes
-    // EVERY append visible in the pointer CONTENT (ADVICE r12): an
-    // in-place append keeps the version name, so a concurrent
-    // compaction's content-pinned swap can only detect it through a
-    // meta change — which a meta-less append would otherwise not make.
-    val seq = registry.pointerMeta(name)
-      .get("append_seq").map(_.toLong).getOrElse(0L) + 1L
-    registry.swapPointer(name, cur,
-      pointerMeta + ("append_seq" -> seq.toString),
-      expectedVersion = baseVersion)
-    ledger.record(name, Status.Success,
-      s"append_bucketed appendedRows=$rows${fileSkew(cur)}")
-    registry.setStatus(name, Status.Success)
-    WriteResult(name, rows, "append_bucketed")
-  }
+      pointerMeta: Map[String, String] = Map.empty): WriteResult =
+    commitInPlace(name, "append_bucketed", pointerMeta) {
+      (cur, tbl, _, resolved) =>
+        val cols = resolved.columns
+        require(df.columns.toSet == cols.toSet,
+          s"append increment columns ${df.columns.mkString(",")} != model " +
+            s"columns ${cols.mkString(",")}")
+        // O(increment) accounting: count the increment once up front (the
+        // plan runs twice — count + insert — both O(batch)); a post-append
+        // count of the TABLE would scan the whole accumulated model per
+        // ingest batch, breaking this path's O(increment) contract
+        val inc = df.select(cols.map(col).toIndexedSeq: _*)
+          .localCheckpoint()
+        val rows = inc.count()
+        // insertInto resolves POSITIONALLY — align to the table's order
+        inc.write.insertInto(tbl)
+        // insertInto refreshes the WRITING session's relation cache only;
+        // when the increment frame rides a cloned session (a foreachBatch
+        // micro-batch), THIS api's session would otherwise keep serving
+        // the pre-append file listing — refresh it explicitly so readers
+        // through this session see the appended buckets
+        spark.catalog.refreshTable(tbl)
+        (rows, s"appendedRows=$rows${fileSkew(cur)}")
+    }
 
   /** Bucket id a file name was written under by Spark's bucketed
     * write (`part-00000-<uuid>_00003.c000.snappy.parquet` → 3) — the
@@ -524,86 +527,88 @@ final class FalApi(
   def deleteFromBucketedModel(keys: Seq[Long], keyCol: String,
       name: String,
       pointerMeta: Map[String, String] = Map.empty): WriteResult = {
-    require(allowWrites, "write_to_model is not allowed in hooks")
     require(keys.nonEmpty, "deleteFromBucketedModel: empty key list")
     require(keys.size <= 100000,
       s"deleteFromBucketedModel: ${keys.size} keys exceeds the 100k " +
         "request bound — a corpus-scale deletion should rebuild the " +
         "model from the rewritten corpus instead")
-    val cur = registry.currentPath(name).getOrElse(
-      throw new IllegalStateException(s"model not materialized: $name"))
-    val baseVersion = registry.currentVersion(name)
-    val marker = FsIO.child(cur, "_bucketed_table")
-    require(FsIO.exists(marker),
-      s"deleteFromBucketedModel: $name's current version is not " +
-        "bucketed")
-    val resolved = readResolved(name, cur)
-    val tbl = FsIO.readString(marker).trim.split("\n").head.trim
-    val (buckets, bCols) = markerBucketSpec(cur).getOrElse(
-      throw new IllegalStateException(
-        s"$name's _bucketed_table marker lacks a bucket spec"))
-    require(bCols == Seq(keyCol),
-      s"deleteFromBucketedModel: key $keyCol != bucket key " +
-        s"${bCols.mkString(",")} — a scattered key needs the tombstone " +
-        "path, not a bucket-pruned rewrite")
-    // the bucket-id probe below hashes LongType values; a model
-    // bucketed on any other key type would hash to the WRONG bucket
-    // ids — the affected set misses the real files, rows survive
-    // physically, yet the fingerprint advances and the model serves
-    // retracted rows as current (ADVICE r13). Fail loudly instead.
-    val keyType = resolved.schema(keyCol).dataType
-    require(keyType == org.apache.spark.sql.types.LongType,
-      s"deleteFromBucketedModel: $name's bucket key $keyCol is " +
-        s"$keyType, not LongType — the Seq[Long] key probe would hash " +
-        "to wrong bucket ids and silently miss rows; add a typed key " +
-        "path before using this on non-long keys")
-    // the keys' bucket ids, via the same hash the bucketed write used
-    // (functions.hash IS bucketing's Murmur3, seed 42)
-    import spark.implicits._
-    val ids = keys.toDF(keyCol)
-      .select(pmod(hash(col(keyCol)), lit(buckets)).cast("int"))
-      .as[Int].collect().toSet
-    val affected = FsIO.parquetFiles(cur)
-      .filter(f => bucketIdOf(FsIO.fileName(f)).exists(ids.contains))
-    val kept = if (affected.isEmpty) 0L else {
-      // survivors of the affected buckets, snapshotted
-      // (localCheckpoint) BEFORE any file mutation so the lazy plan
-      // cannot re-read dropped files
-      // null-safe: `!isin` alone is NULL (dropped) for null keys —
-      // a null-keyed row was never requested for deletion and must
-      // survive the rewrite
-      val survivors = spark.read.schema(resolved.schema)
-        .parquet(affected: _*)
-        .filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*))
-        .select(resolved.columns.map(col).toIndexedSeq: _*)
-        .localCheckpoint()
-      val n = survivors.count()
-      survivors.write.insertInto(tbl)
-      affected.foreach(FsIO.deleteFile)
-      spark.catalog.refreshTable(tbl)
-      n
+    commitInPlace(name, "delete_bucketed", pointerMeta) {
+      (cur, tbl, spec, resolved) =>
+        val (buckets, bCols) = spec.getOrElse(
+          throw new IllegalStateException(
+            s"$name's bucket marker lacks a bucket spec"))
+        require(bCols == Seq(keyCol),
+          s"deleteFromBucketedModel: key $keyCol != bucket key " +
+            s"${bCols.mkString(",")} — a scattered key needs the tombstone " +
+            "path, not a bucket-pruned rewrite")
+        // the bucket-id probe below hashes LongType values; a model
+        // bucketed on any other key type would hash to the WRONG bucket
+        // ids — the affected set misses the real files, rows survive
+        // physically, yet the fingerprint advances and the model serves
+        // retracted rows as current (ADVICE r13). Fail loudly instead.
+        val keyType = resolved.schema(keyCol).dataType
+        require(keyType == org.apache.spark.sql.types.LongType,
+          s"deleteFromBucketedModel: $name's bucket key $keyCol is " +
+            s"$keyType, not LongType — the Seq[Long] key probe would hash " +
+            "to wrong bucket ids and silently miss rows; add a typed key " +
+            "path before using this on non-long keys")
+        // the keys' bucket ids, via the same hash the bucketed write used
+        // (functions.hash IS bucketing's Murmur3, seed 42)
+        import spark.implicits._
+        val ids = keys.toDF(keyCol)
+          .select(pmod(hash(col(keyCol)), lit(buckets)).cast("int"))
+          .as[Int].collect().toSet
+        val affected = FsIO.parquetFiles(cur)
+          .filter(f => bucketIdOf(FsIO.fileName(f)).exists(ids.contains))
+        val kept = if (affected.isEmpty) 0L else {
+          // survivors of the affected buckets, snapshotted
+          // (localCheckpoint) BEFORE any file mutation so the lazy plan
+          // cannot re-read dropped files
+          // null-safe: `!isin` alone is NULL (dropped) for null keys —
+          // a null-keyed row was never requested for deletion and must
+          // survive the rewrite
+          val survivors = spark.read.schema(resolved.schema)
+            .parquet(affected: _*)
+            .filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*))
+            .select(resolved.columns.map(col).toIndexedSeq: _*)
+            .localCheckpoint()
+          val n = survivors.count()
+          survivors.write.insertInto(tbl)
+          affected.foreach(FsIO.deleteFile)
+          spark.catalog.refreshTable(tbl)
+          n
+        }
+        (kept,
+          s"keys=${keys.size} bucketsTouched=${ids.size} survivors=$kept")
     }
-    val seq = registry.pointerMeta(name)
-      .get("append_seq").map(_.toLong).getOrElse(0L) + 1L
-    registry.swapPointer(name, cur,
-      pointerMeta + ("append_seq" -> seq.toString),
-      expectedVersion = baseVersion)
-    ledger.record(name, Status.Success,
-      s"delete_bucketed keys=${keys.size} bucketsTouched=${ids.size} " +
-        s"survivors=$kept")
-    registry.setStatus(name, Status.Success)
-    WriteResult(name, kept, "delete_bucketed")
   }
 
   /** C20 — incremental `merge` strategy (ref: strategy list
     * `A/dbt/fal/adapters/python/impl.py:256-291`): upsert by key —
-    * existing rows whose key appears in the increment are replaced. One
-    * shuffle on the key for the anti join; at warehouse scale this is
-    * the same hash join a MERGE INTO executes.
+    * existing rows whose key appears in the increment are replaced.
     */
   def writeToModelMerge(df: DataFrame, name: String,
-      keys: Seq[String]): WriteResult = {
-    require(allowWrites, "write_to_model is not allowed in hooks")
+      keys: Seq[String]): WriteResult =
+    replaceByKey(df, name, keys, "merge")
+
+  /** C20 — `insert_overwrite` strategy: replace exactly the partitions
+    * present in the increment, keep the rest — merge keyed on the
+    * partition columns (`partitionCol` is the model's comma-joined
+    * `partition_by`, split the way the write splits it).
+    */
+  def writeToModelInsertOverwrite(df: DataFrame, name: String,
+      partitionCol: String): WriteResult =
+    replaceByKey(df, name, FalApi.splitCols(partitionCol),
+      "insert_overwrite")
+
+  /** Rows of the current version whose `keys` appear in `df` are
+    * replaced by `df`'s rows; the rest are kept. One shuffle on the key
+    * for the anti join; at warehouse scale this is the same hash join a
+    * MERGE INTO executes, and on a partitioned catalog partition
+    * pruning keeps it proportional to the touched partitions.
+    */
+  private def replaceByKey(df: DataFrame, name: String, keys: Seq[String],
+      mode: String): WriteResult = {
     val merged = registry.currentPath(name) match {
       case Some(cur) =>
         readVersion(cur)
@@ -611,40 +616,7 @@ final class FalApi(
           .unionByName(df, allowMissingColumns = true)
       case None => df
     }
-    val target = registry.nextVersionDir(name)
-    materialize(merged, name, target)
-    registry.swapPointer(name, target)
-    val rows = spark.read.parquet(target).count()
-    ledger.record(name, Status.Success,
-      s"write merge rows=$rows${fileSkew(target)}")
-    registry.setStatus(name, Status.Success)
-    WriteResult(name, rows, "merge")
-  }
-
-  /** C20 — `insert_overwrite` strategy: replace exactly the partitions
-    * (values of `partitionCol`) present in the increment, keep the
-    * rest. Partition pruning keeps the rewrite proportional to the
-    * touched partitions on a partitioned catalog.
-    */
-  def writeToModelInsertOverwrite(df: DataFrame, name: String,
-      partitionCol: String): WriteResult = {
-    require(allowWrites, "write_to_model is not allowed in hooks")
-    val merged = registry.currentPath(name) match {
-      case Some(cur) =>
-        readVersion(cur)
-          .join(df.select(partitionCol).distinct(), Seq(partitionCol),
-            "left_anti")
-          .unionByName(df, allowMissingColumns = true)
-      case None => df
-    }
-    val target = registry.nextVersionDir(name)
-    materialize(merged, name, target)
-    registry.swapPointer(name, target)
-    val rows = spark.read.parquet(target).count()
-    ledger.record(name, Status.Success,
-      s"write insert_overwrite rows=$rows${fileSkew(target)}")
-    registry.setStatus(name, Status.Success)
-    WriteResult(name, rows, "insert_overwrite")
+    commitVersion(merged, name, mode)
   }
 
   /** C23 — snapshot materialization (dbt's SCD2 snapshot; the
@@ -664,7 +636,6 @@ final class FalApi(
     */
   def writeToModelSnapshot(df: DataFrame, name: String, keys: Seq[String],
       checkCols: Seq[String], asOf: java.sql.Timestamp): WriteResult = {
-    require(allowWrites, "write_to_model is not allowed in hooks")
     val vf = lit(asOf)
     val nullTs = lit(null).cast("timestamp")
     val dataCols = df.columns.toSeq
@@ -698,14 +669,7 @@ final class FalApi(
           .withColumn("dbt_valid_to", nullTs)
         hist.unionByName(keepOpen).unionByName(closed).unionByName(opened)
     }
-    val target = registry.nextVersionDir(name)
-    materialize(out, name, target)
-    registry.swapPointer(name, target)
-    val rows = spark.read.parquet(target).count()
-    ledger.record(name, Status.Success,
-      s"write snapshot rows=$rows${fileSkew(target)}")
-    registry.setStatus(name, Status.Success)
-    WriteResult(name, rows, "snapshot")
+    commitVersion(out, name, "snapshot")
   }
 
   /** Maintenance — small-file compaction (the OPTIMIZE/rewrite op every
@@ -762,7 +726,8 @@ final class FalApi(
     // when no ModelDef is registered (a fresh maintenance process):
     // compacting a bucketed relation must never silently rewrite it
     // plain and void its readers' no-shuffle guarantee.
-    val spec = bucketSpec(name).orElse(markerBucketSpec(cur))
+    val spec =
+      bucketSpec(name).orElse(FalApi.bucketMarker(cur).flatMap(_._2))
     val detail = spec match {
       case Some((n, _)) =>
         materialize(df, name, target, explicitSpec = spec)
@@ -777,10 +742,7 @@ final class FalApi(
         s"files<=$nFiles"
     }
     registry.swapPointer(name, target, expectedContent = baseContent)
-    val rows = spark.read.parquet(target).count()
-    ledger.record(name, Status.Success,
-      s"compact rows=$rows $detail${fileSkew(target)}")
-    WriteResult(name, rows, "compact")
+    recordVersion(name, target, "compact", "compact", s" $detail")
   }
 
   /** Maintenance — version retention (VACUUM): delete all but the
@@ -809,9 +771,7 @@ final class FalApi(
       // a bucketed version registered a catalog table pointing at this
       // directory — drop it too, or the catalog accumulates entries
       // whose LOCATION no longer exists
-      val marker = FsIO.child(v, "_bucketed_table")
-      if (FsIO.exists(marker)) {
-        val tbl = FsIO.readString(marker).trim.split("\n").head.trim
+      FalApi.bucketMarker(v).foreach { case (tbl, _) =>
         spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
       }
       FsIO.deleteTree(v)
@@ -948,6 +908,36 @@ final class FalApi(
 }
 
 object FalApi {
+  /** Marker file of a version written clustered: the catalog table
+    * name, then (since round 3) the bucket count and the comma-joined
+    * columns the FILES were written with. */
+  private[api] val BucketMarker = "_bucketed_table"
+
+  /** A version dir's bucket marker as `(catalog table, recorded bucket
+    * spec)` — the one reader of the marker format, shared by the read,
+    * in-place write, compaction and vacuum paths and by the
+    * standing-model maintenance layer. None when the version was not
+    * written bucketed; the spec is None for a pre-spec marker. The spec
+    * is what the files actually have, independent of the model's
+    * current meta or what is registered in this process.
+    */
+  private[graft] def bucketMarker(versionDir: String)
+      : Option[(String, Option[(Int, Seq[String])])] = {
+    val marker = FsIO.child(versionDir, BucketMarker)
+    if (!FsIO.exists(marker)) None
+    else {
+      val lines = FsIO.readString(marker).trim.split("\n").toSeq
+      Some((lines.head.trim,
+        if (lines.size >= 3) Some((lines(1).trim.toInt, splitCols(lines(2))))
+        else None))
+    }
+  }
+
+  /** A comma-joined column list (`bucket_by`, `partition_by`, the
+    * marker's columns) as trimmed names. */
+  private[api] def splitCols(s: String): Seq[String] =
+    s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
   /** Parse a `sources.json` freshness artifact back to
     * unique_id → status — the consuming half of the round-trip (the
     * reference's `_map_nodes` keys `FreshnessNodeOutput`s by unique_id,

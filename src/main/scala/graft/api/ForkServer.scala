@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 /** Warm Python fork-server: one long-lived interpreter per interpreter
   * path per JVM, which imports pandas + pyarrow once and `fork()`s a
   * child for every Python-model call ([[PyBridge]]'s global and
-  * partition workers, driver and executor lane alike).
+  * partition workers alike).
   *
   * Lifecycle: the server starts on the first call for its interpreter
   * (`python -c <server>`), reports `ready 1` (or `ready 0 <error>` when

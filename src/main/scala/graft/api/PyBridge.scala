@@ -1,9 +1,13 @@
 package graft.api
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 /** D1 for real: run a reference-style Python model — a `.py` file
   * defining `def model(dbt, fal)` over pandas DataFrames — as a DAG
@@ -26,21 +30,20 @@ import org.apache.spark.sql.DataFrame
   * that shape only as the DEFAULT (`python_mode=global`, for genuinely
   * global models like a prophet fit over an already-reduced
   * aggregate), and adds a partition-parallel mode
-  * (`python_mode=partition`, [[runModelPartitioned]]) for the per-row/
-  * per-partition majority: the primary input's part files fan out to N
-  * worker interpreters — the `mapInPandas` execution shape expressed
+  * (`python_mode=partition`) for the per-row/per-partition majority:
+  * the primary input's part files fan out to N worker interpreters,
+  * one per Spark task — the `mapInPandas` execution shape expressed
   * over the same parquet-handoff child contract — so the model's
   * memory bound is one PARTITION, not the relation, and wall-clock
-  * divides by the worker count. At cluster scale the same declaration
-  * maps to executor-side Arrow workers; the handoff stays O(inputs +
-  * output) parquet either way.
+  * divides by the worker count. Both modes are one handoff
+  * ([[runModel]]): global is the single-worker case.
   *
   * Process lifecycle: no call starts an interpreter of its own. Each
   * interpreter path ([[pythonFor]]: `python3`, or a cached venv/conda
   * env) gets one [[ForkServer]] per JVM, started on first use, which
   * imports pandas + pyarrow once and forks one child per model call
-  * (global) or per worker (partition, in either lane — an executor-lane
-  * task uses the server of the JVM it runs in). A child is the same
+  * (global) or per worker (partition — a task uses the server of the
+  * JVM it runs in). A child is the same
   * process boundary as before: its own address space, its own log,
   * its exit code, the `graft.step.timeout.sec` deadline (the server
   * SIGKILLs it by pid); the server outlives it and is restarted if
@@ -123,18 +126,6 @@ object PyBridge {
   private val envCache =
     scala.collection.concurrent.TrieMap.empty[List[String], String]
 
-  /** B12's dependency-environment half: the interpreter for a model's
-    * declared requirement set — a venv cached by the hash of the sorted
-    * requirements, the reference's `get_or_create` idea
-    * (`/root/reference/projects/fal/src/fal/packages/environments/
-    * virtual_env.py:35-60` keys a reusable venv dir on the dependency
-    * hash). `--system-site-packages` keeps the bridge's own
-    * pandas+pyarrow handoff importable; requirements that are local
-    * files/dirs (wheels) install with `--no-index` so declared-offline
-    * sets never touch a package index. A `.graft_ok` marker validates
-    * the cache across processes; a failed build leaves no marker and is
-    * rebuilt on next touch.
-    */
   /** Conda executable, resolved like the reference (`conda.py:25-28`:
     * $CONDA_EXE, else `conda` on PATH); None when absent so callers
     * can skip gracefully. */
@@ -150,6 +141,17 @@ object PyBridge {
           .find(p => Files.exists(java.nio.file.Paths.get(p))))
       }
 
+  /** True when a conda spec's NAME token pins python-the-interpreter:
+    * `python`, `python=3.11`, `python==3.11`, `python3`, `Python>=3`…
+    * — but not a package that merely starts with the word
+    * (`python-dateutil`), hence the name-token regex rather than a
+    * bare startsWith.
+    */
+  private[graft] def pinsPythonInterpreter(spec: String): Boolean =
+    spec.takeWhile(c => c != '=' && c != '<' && c != '>').trim
+      .toLowerCase(java.util.Locale.ROOT)
+      .matches("python[0-9.]*")
+
   /** B12's conda flavor (ref `conda.py:33-90`): packages key the env by
     * their SHA-256 (the reference's `key` property) and
     * `_get_or_create` materializes `conda create --yes --prefix
@@ -162,17 +164,6 @@ object PyBridge {
     * a zero-egress sandbox draws on the local package cache instead of
     * hanging on a channel fetch.
     */
-  /** True when a conda spec's NAME token pins python-the-interpreter:
-    * `python`, `python=3.11`, `python==3.11`, `python3`, `Python>=3`…
-    * — but not a package that merely starts with the word
-    * (`python-dateutil`), hence the name-token regex rather than a
-    * bare startsWith.
-    */
-  private[graft] def pinsPythonInterpreter(spec: String): Boolean =
-    spec.takeWhile(c => c != '=' && c != '<' && c != '>').trim
-      .toLowerCase(java.util.Locale.ROOT)
-      .matches("python[0-9.]*")
-
   private def condaFor(packages: Seq[String]): String = {
     val conda = condaExe.getOrElse(throw new IllegalStateException(
       "model declares a conda environment but no conda executable found"))
@@ -204,9 +195,22 @@ object PyBridge {
     envDir.resolve("bin").resolve("python").toString
   }
 
-  // cache keys are flavor-namespaced: a pip requirement list that
-  // happens to sort to List("conda", ...) must never share an entry
-  // with the conda declaration of the same elements
+  /** B12's dependency-environment half: the interpreter for a model's
+    * declared requirement set — a venv cached by the hash of the sorted
+    * requirements, the reference's `get_or_create` idea
+    * (`/root/reference/projects/fal/src/fal/packages/environments/
+    * virtual_env.py:35-60` keys a reusable venv dir on the dependency
+    * hash). `--system-site-packages` keeps the bridge's own
+    * pandas+pyarrow handoff importable; requirements that are local
+    * files/dirs (wheels) install with `--no-index` so declared-offline
+    * sets never touch a package index. A `.graft_ok` marker validates
+    * the cache across processes; a failed build leaves no marker and is
+    * rebuilt on next touch. No requirements means `python3`; a
+    * `conda`-headed list goes to [[condaFor]]. Cache keys are
+    * flavor-namespaced: a pip requirement list that happens to sort to
+    * `List("conda", ...)` must never share an entry with the conda
+    * declaration of the same elements.
+    */
   def pythonFor(requirements: Seq[String]): String =
     if (requirements.isEmpty) "python3"
     else if (requirements.head == "conda")
@@ -289,56 +293,6 @@ object PyBridge {
   def releaseScratch(a: FalApi, name: String): Unit =
     Option(scratch.remove((a, name))).foreach(deleteRec)
 
-  /** Materialize `deps` refs to parquet, run the Python model in
-    * forked child(ren) of the interpreter's [[ForkServer]], and return
-    * its result as a DataFrame (the caller writes it back with
-    * `writeToModel`, so versioning / bucketing / tests apply
-    * identically to Scala and SQL models, then calls [[releaseScratch]]).
-    * Non-zero exit or a missing output file → exception → the node
-    * FAILs and downstream nodes SKIP, the reference's task semantics.
-    *
-    * `mode` is the model's declared `python_mode` meta: `global` (the
-    * reference's one-process contract) or `partition`
-    * ([[runModelPartitioned]]).
-    */
-  def runModel(a: FalApi, name: String, deps: Seq[String],
-      pyFile: String, requirements: Seq[String] = Nil,
-      mode: String = "global"): DataFrame = mode match {
-    case "global" => runModelGlobal(a, name, deps, pyFile, requirements)
-    case "partition" =>
-      runModelPartitioned(a, name, deps, pyFile, requirements)
-    case other => throw new IllegalArgumentException(
-      s"model $name: unknown python_mode '$other' " +
-        "(expected 'global' or 'partition')")
-  }
-
-  private def runModelGlobal(a: FalApi, name: String, deps: Seq[String],
-      pyFile: String, requirements: Seq[String]): DataFrame = {
-    require(available,
-      "python3 with pandas+pyarrow not found; Python models need it")
-    val python = pythonFor(requirements)
-    val tmp = Files.createTempDirectory(s"graft_py_$name")
-    val inputs = deps.map { d =>
-      val p = tmp.resolve(s"in_$d").toString
-      a.ref(d).write.mode("overwrite").parquet(p)
-      d -> p
-    }
-    val outPath = tmp.resolve("out.parquet").toString
-    val manifest = tmp.resolve("manifest.json")
-    writeManifest(manifest, name, pyFile, outPath, inputs, sourcePaths(a))
-    val logFile = tmp.resolve("model.log")
-    try ForkServer.run(python, manifest, logFile, s"python model $name")
-    catch { case t: Throwable => deleteRec(tmp); throw t }
-    // Handoff complete: reclaim the input copies now. out.parquet must
-    // outlive this call (the returned DataFrame reads it lazily until
-    // writeToModel materializes it).
-    inputs.foreach { case (_, p) => deleteRec(java.nio.file.Paths.get(p)) }
-    Files.deleteIfExists(manifest)
-    Files.deleteIfExists(logFile)
-    holdScratch(a, name, tmp)
-    a.spark.read.parquet(outPath)
-  }
-
   /** Worker fan-out for partition-mode models: declared via sysprop
     * `graft.py.workers` / env `GRAFT_PY_WORKERS`, else min(8, cores).
     */
@@ -362,85 +316,133 @@ object PyBridge {
       .map(_.toLong)
       .getOrElse(256L << 20)
 
-  private def dirBytes(p: java.nio.file.Path): Long = {
+  private def dirBytes(p: Path): Long = {
     val s = Files.walk(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(Files.size).sum
-    } finally s.close()
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(Files.size).sum
+    finally s.close()
   }
 
-  /** Which host set runs partition-mode children: `executor`
-    * (default — each worker child spawns inside a Spark task, so the
-    * Python stage scales with the cluster) or `driver` (the pre-r13
-    * bounded thread pool on the driver host). Sysprop `graft.py.lane`
-    * or session conf `graft.py.lane`. */
-  private[api] def lane(a: FalApi): String =
-    sys.props.getOrElse("graft.py.lane",
-      a.spark.conf.get("graft.py.lane", "executor"))
+  private def listDir(p: Path): Seq[Path] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.toSeq finally s.close()
+  }
 
-  /** Diagnostics from the most recent executor-lane run: one
+  /** Diagnostics from the most recent partition-mode run: one
     * `(worker, taskPartitionId)` per child, recorded FROM the Spark
     * task that hosted it — the spec's evidence that partition-mode
-    * children really execute inside executor tasks (parallelism
-    * follows the cluster), not on the driver host. */
+    * children really execute inside Spark tasks (parallelism follows
+    * the cluster), not on the driver host. */
   @volatile private[graft] var lastExecutorReport: Seq[(Int, Int)] = Nil
 
-  /** Partition-parallel Python model (VERDICT r10 item #2): the
-    * distributed answer to the reference's single-pandas-process
-    * contract, for models the user declares per-partition-safe
-    * (`python_mode=partition` meta — row-wise transforms, per-record
-    * featurization; anything where `model(shard)` over each shard
-    * unioned equals `model(whole)`).
+  /** Materialize `deps` refs to parquet, run the Python model in
+    * forked child(ren) of the interpreter's [[ForkServer]], and return
+    * its result as a DataFrame (the caller writes it back with
+    * `writeToModel`, so versioning / bucketing / tests apply
+    * identically to Scala and SQL models, then calls [[releaseScratch]]).
+    * Non-zero exit or a missing output file → exception → the node
+    * FAILs and downstream nodes SKIP, the reference's task semantics.
     *
-    * Dataflow: the FIRST dep is the partitioned input — its
-    * already-written part files are round-robined into per-worker
-    * split directories with zero copies and zero shuffle (file moves
-    * within one temp dir), preserving whatever partitioning the
-    * upstream relation carries. Remaining deps are broadcast-style:
-    * materialized once, every worker's manifest points at the same
-    * read-only path. N children run concurrently, each over the SAME
-    * child contract as global mode (same runner, same manifest shape —
-    * a model file cannot tell which mode it runs under), and the
-    * parent unions the N output parquets. Memory bound per child is
-    * one split, not the relation; a crash in any worker fails the node
-    * after the stragglers drain, same task semantics as global.
+    * `mode` is the model's declared `python_mode` meta, and both modes
+    * are this one handoff: every dep is written to parquet once, each
+    * worker gets a manifest over its inputs and writes `out_<i>`, and
+    * the parent reads the outputs back through one agreed schema. A
+    * model file cannot tell which mode it runs under.
+    *  - `global` (the reference's one-process contract): a single
+    *    worker reads every input; its child runs on the calling thread.
+    *  - `partition` (VERDICT r10 item #2): for models the user declares
+    *    per-partition-safe — row-wise transforms, per-record
+    *    featurization; anything where `model(shard)` over each shard
+    *    unioned equals `model(whole)`. The FIRST dep's part files are
+    *    round-robined into W split dirs ([[splitInputs]]) and the W
+    *    children run one per Spark task ([[runInTasks]]).
     *
-    * EXECUTOR LANE (VERDICT r12 item #2, the default): the W children
-    * spawn inside a W-task Spark job (`sc.parallelize(0 until w, w)`),
-    * one child per task — on a cluster the scheduler spreads the tasks
-    * across executors, so the Python stage's parallelism follows the
-    * CLUSTER, not one host's cores, while the child contract, the
-    * secondary-dep size cap, and the per-worker schema validation are
-    * byte-identical to the driver lane (same manifests, same runner).
-    * Requirements for a real cluster: the scratch dir and the
-    * interpreter (plus any requirements venv) must be reachable on the
-    * executor hosts at the same paths (shared scratch / uniform
-    * images — the standard Spark Python posture); a failed child fails
-    * its task, and a task RETRY re-runs the child idempotently (the
-    * worker's output parquet is overwritten). `graft.py.lane=driver`
-    * restores the driver-host thread pool for setups without shared
-    * scratch.
+    * Any failure — a missing dep, a failed child, schema drift —
+    * deletes the call's scratch dir before it propagates.
     */
-  def runModelPartitioned(a: FalApi, name: String, deps: Seq[String],
-      pyFile: String, requirements: Seq[String] = Nil): DataFrame = {
+  def runModel(a: FalApi, name: String, deps: Seq[String],
+      pyFile: String, requirements: Seq[String] = Nil,
+      mode: String = "global"): DataFrame = {
+    val partition = mode match {
+      case "global" => false
+      case "partition" => true
+      case other => throw new IllegalArgumentException(
+        s"model $name: unknown python_mode '$other' " +
+          "(expected 'global' or 'partition')")
+    }
     require(available,
       "python3 with pandas+pyarrow not found; Python models need it")
-    require(deps.nonEmpty,
+    require(!partition || deps.nonEmpty,
       s"model $name: python_mode=partition needs at least one dep " +
         "(the first dep is the partitioned input)")
     val python = pythonFor(requirements)
     val tmp = Files.createTempDirectory(s"graft_py_$name")
-    val primary = deps.head
-    val primaryDir = tmp.resolve(s"in_$primary")
-    a.ref(primary).write.mode("overwrite").parquet(primaryDir.toString)
-    val sideInputs = deps.tail.map { d =>
-      val p = tmp.resolve(s"in_$d")
-      a.ref(d).write.mode("overwrite").parquet(p.toString)
+    try {
+      val inputs = deps.map { d =>
+        val p = tmp.resolve(s"in_$d")
+        a.ref(d).write.mode("overwrite").parquet(p.toString)
+        d -> p
+      }
+      val perWorker =
+        if (partition) splitInputs(name, inputs, tmp)
+        else Seq(inputs.map { case (d, p) => d -> p.toString })
+      val sources = sourcePaths(a)
+      val outPaths = perWorker.indices.map(i =>
+        tmp.resolve(s"out_$i.parquet").toString)
+      val jobs = perWorker.zip(outPaths).zipWithIndex.map {
+        case ((ins, out), i) =>
+          val manifest = tmp.resolve(s"manifest_$i.json")
+          writeManifest(manifest, name, pyFile, out, ins, sources)
+          (i, manifest.toString, tmp.resolve(s"model_$i.log").toString)
+      }
+      if (partition) runInTasks(a, python, name, jobs)
+      else ForkServer.run(python, Paths.get(jobs.head._2),
+        Paths.get(jobs.head._3), s"python model $name")
+      // Handoff complete: reclaim the inputs, splits, manifests and
+      // logs now. The outputs must outlive this call (the returned
+      // DataFrame reads them lazily until writeToModel materializes it).
+      listDir(tmp).filterNot(_.getFileName.toString.startsWith("out_"))
+        .foreach(deleteRec)
+      // Per-worker schema drift (ADVICE r11): a split whose pandas
+      // frame infers an atypical dtype (the classic case: an all-null
+      // column becoming float64/object) yields per-file schemas that a
+      // naive multi-path read either fails on LATE or silently widens.
+      // Validate every worker's output against worker 0 up front and
+      // fail naming the worker, then read through the agreed schema.
+      val schemas = outPaths.map(a.spark.read.parquet(_).schema)
+      def shape(s: StructType) =
+        s.fields.map(f => (f.name, f.dataType)).toSeq.sortBy(_._1)
+      schemas.zipWithIndex.drop(1).foreach { case (s, i) =>
+        if (shape(s) != shape(schemas.head))
+          throw new IllegalStateException(
+            s"model $name: worker $i produced schema ${s.simpleString} " +
+              s"but worker 0 produced ${schemas.head.simpleString} — " +
+              "per-split dtype drift (often an all-null column pandas " +
+              "types differently); cast the column explicitly in the " +
+              "model so every split agrees")
+      }
+      val df = a.spark.read.schema(schemas.head).parquet(outPaths: _*)
+      holdScratch(a, name, tmp)
+      df
+    } catch { case t: Throwable => deleteRec(tmp); throw t }
+  }
+
+  /** Partition mode's inputs per worker. The first dep is the
+    * partitioned input: its already-written part files are
+    * round-robined into per-worker split dirs with zero copies and zero
+    * shuffle (file moves within one temp dir), preserving whatever
+    * partitioning the upstream relation carries. W = min(workers, part
+    * files); a single-file input degrades to one worker (repartition
+    * the upstream model to raise it). Every other dep is broadcast-
+    * style: each worker's manifest points at the same read-only copy,
+    * under the [[sideDepMaxBytes]] cap.
+    */
+  private def splitInputs(name: String, inputs: Seq[(String, Path)],
+      tmp: Path): Seq[Seq[(String, String)]] = {
+    val (primary, primaryDir) = inputs.head
+    val side = inputs.tail.map { case (d, p) =>
       val bytes = dirBytes(p)
-      if (bytes > sideDepMaxBytes) {
-        deleteRec(tmp)
+      if (bytes > sideDepMaxBytes)
         throw new IllegalArgumentException(
           s"model $name: partition-mode secondary dep '$d' is $bytes " +
             s"bytes on disk (cap $sideDepMaxBytes) — secondary deps " +
@@ -448,124 +450,59 @@ object PyBridge {
             s"Make '$d' the FIRST dep if it is the relation to " +
             "partition over, pre-aggregate it to dimension size, or " +
             "raise graft.py.sideDepMaxBytes / GRAFT_PY_SIDEDEP_MAX_BYTES")
-      }
       d -> p.toString
     }
-    val sources = sourcePaths(a)
-    val parts = {
-      val s = Files.list(primaryDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-      } finally s.close()
-    }
+    val parts = listDir(primaryDir)
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .sortBy(_.getFileName.toString)
     require(parts.nonEmpty,
       s"model $name: partitioned input '$primary' wrote no parquet parts")
-    // parallelism follows the input's file-level partitioning: W =
-    // min(workers, part files); a single-file input degrades to one
-    // worker (repartition the upstream model to raise it)
     val w = math.max(1, math.min(workerCount, parts.size))
-    val splits = (0 until w).map { i =>
-      Files.createDirectories(tmp.resolve(s"split_$i"))
-    }
+    val splits = (0 until w).map(i =>
+      Files.createDirectories(tmp.resolve(s"split_$i")))
     parts.zipWithIndex.foreach { case (f, i) =>
       Files.move(f, splits(i % w).resolve(f.getFileName)); ()
     }
-    val outPaths = (0 until w).map(i => tmp.resolve(s"out_$i.parquet"))
-    (0 until w).foreach { i =>
-      writeManifest(tmp.resolve(s"manifest_$i.json"), name, pyFile,
-        outPaths(i).toString,
-        (primary -> splits(i).toString) +: sideInputs, sources)
-    }
-    if (lane(a) == "executor") {
-      // one Spark task per worker child — executors host the Python
-      // stage (closure captures STRINGS only; Path is not serializable).
-      // A failing CHILD returns its error instead of failing the task:
-      // the job always drains every worker (the driver lane's
-      // fail-only-after-every-worker-exits invariant — a thrown task
-      // would abort the job and delete the shared scratch under
-      // still-running sibling interpreters), and a deterministic model
-      // bug runs ONCE instead of spark.task.maxFailures timeout-kill
-      // cycles. Speculative execution would race duplicate children on
-      // one output path — the stage assumes spark.speculation=false
-      // (the default), as any external-side-effect task does.
-      val jobs = (0 until w).map { i =>
-        (i, tmp.resolve(s"manifest_$i.json").toString,
-          tmp.resolve(s"model_$i.log").toString)
-      }
-      val (py, nm) = (python, name)
-      val report =
-        try a.spark.sparkContext.parallelize(jobs, w)
-          .map { case (i, manifest, log) =>
-            val err =
-              try {
-                ForkServer.run(py, java.nio.file.Paths.get(manifest),
-                  java.nio.file.Paths.get(log),
-                  s"python model $nm [executor worker $i/$w]")
-                None
-              } catch { case t: Throwable => Some(t.getMessage) }
-            (i, Option(org.apache.spark.TaskContext.get())
-              .map(_.partitionId()).getOrElse(-1), err)
-          }.collect().toSeq
-        catch { case t: Throwable => deleteRec(tmp); throw t }
-      val failures = report.flatMap(_._3)
-      if (failures.nonEmpty) {
-        deleteRec(tmp)
-        throw new RuntimeException(failures.head)
-      }
-      lastExecutorReport = report.map(r => (r._1, r._2))
-    } else {
-      // driver lane: bounded child pool on this host; failures collect
-      // and the node FAILs after every worker has exited (no orphaned
-      // interpreters)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(w)
-      val futures = (0 until w).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
-          def call(): Option[Throwable] =
-            try {
-              ForkServer.run(python, tmp.resolve(s"manifest_$i.json"),
-                tmp.resolve(s"model_$i.log"),
-                s"python model $name [worker $i/$w]")
-              None
-            } catch { case t: Throwable => Some(t) }
-        })
-      }
-      pool.shutdown()
-      val failures = futures.flatMap(_.get())
-      if (failures.nonEmpty) { deleteRec(tmp); throw failures.head }
-    }
-    // reclaim the split + side-input copies; the out_*.parquet files
-    // must outlive this call (lazy read until writeToModel)
-    splits.foreach(deleteRec)
-    sideInputs.foreach { case (_, p) =>
-      deleteRec(java.nio.file.Paths.get(p))
-    }
-    deleteRec(primaryDir)
-    holdScratch(a, name, tmp)
-    // Per-worker schema drift (ADVICE r11): a split whose pandas frame
-    // infers an atypical dtype (the classic case: an all-null column
-    // becoming float64/object) yields per-file schemas that a naive
-    // multi-path read either fails on LATE or silently widens — unlike
-    // global mode's single file. Validate every worker's output
-    // against worker 0 up front and fail naming the worker, then read
-    // through the agreed schema.
-    val schemas = outPaths.map(p =>
-      a.spark.read.parquet(p.toString).schema)
-    def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.map(f => (f.name, f.dataType)).toSeq.sortBy(_._1)
-    val ref = shape(schemas.head)
-    schemas.zipWithIndex.drop(1).foreach { case (s, i) =>
-      if (shape(s) != ref)
-        throw new IllegalStateException(
-          s"model $name: worker $i produced schema ${s.simpleString} " +
-            s"but worker 0 produced ${schemas.head.simpleString} — " +
-            "per-split dtype drift (often an all-null column pandas " +
-            "types differently); cast the column explicitly in the " +
-            "model so every split agrees")
-    }
-    a.spark.read.schema(schemas.head)
-      .parquet(outPaths.map(_.toString): _*)
+    splits.map(sp => (primary -> sp.toString) +: side)
+  }
+
+  /** Partition mode's W children, one per task of a W-task Spark job
+    * (`sc.parallelize(jobs, w)`): on a cluster the scheduler spreads
+    * the tasks across executors, so the Python stage's parallelism
+    * follows the CLUSTER, not one host's cores. The closure captures
+    * strings only (`Path` is not serializable).
+    *
+    * A failing CHILD returns its error instead of failing the task:
+    * the job always drains every worker (a thrown task would abort the
+    * job and the caller would delete the shared scratch under
+    * still-running sibling interpreters), and a deterministic model bug
+    * runs ONCE instead of spark.task.maxFailures timeout-kill cycles.
+    * Speculative execution would race duplicate children on one output
+    * path — the stage assumes spark.speculation=false (the default), as
+    * any external-side-effect task does.
+    *
+    * Requirements for a real cluster: the scratch dir and the
+    * interpreter (plus any requirements venv) must be reachable on the
+    * executor hosts at the same paths (shared scratch / uniform images —
+    * the standard Spark Python posture); a task RETRY re-runs the child
+    * idempotently (the worker's output parquet is overwritten).
+    */
+  private def runInTasks(a: FalApi, python: String, name: String,
+      jobs: Seq[(Int, String, String)]): Unit = {
+    val w = jobs.size
+    val report = a.spark.sparkContext.parallelize(jobs, w)
+      .map { case (i, manifest, log) =>
+        val err =
+          try {
+            ForkServer.run(python, Paths.get(manifest), Paths.get(log),
+              s"python model $name [worker $i/$w]")
+            None
+          } catch { case t: Throwable => Some(t.getMessage) }
+        (i, Option(TaskContext.get()).map(_.partitionId()).getOrElse(-1),
+          err)
+      }.collect().toSeq
+    report.flatMap(_._3).headOption.foreach(e =>
+      throw new RuntimeException(e))
+    lastExecutorReport = report.map(r => (r._1, r._2))
   }
 }

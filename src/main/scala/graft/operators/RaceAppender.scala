@@ -51,9 +51,9 @@ object RaceAppender {
       // now STANDS DOWN once the race is provably exercised (it
       // watches the BATCH= progress lines), so after that point the
       // appender drains uncontended and the only thing the deadline
-      // bounds is a genuine hang. 10 min/batch is ~2 orders above the
+      // bounds is a genuine hang. 2 min/batch is ~2 orders above the
       // uncontended append time.
-      val deadline = System.nanoTime() + 10L * 60 * 1000 * 1000 * 1000
+      val deadline = System.nanoTime() + 2L * 60 * 1000 * 1000 * 1000
       while (!done && System.nanoTime() < deadline) {
         if (attempts > 0)
           Thread.sleep(math.min(1000L, 100L * attempts))

@@ -227,10 +227,8 @@ private[graft] object Shared {
       logicVersion: String = "1",
       preferMarkerBuckets: Boolean = false): String = {
     val buckets = (if (preferMarkerBuckets) {
-      val reg = registryFor(spark, dir)
-      reg.currentPath(name)
-        .flatMap(cur => new FalApi(spark, reg, new RunLedger)
-          .markerBucketSpec(cur).map(_._1.toString))
+      registryFor(spark, dir).currentPath(name)
+        .flatMap(FalApi.bucketMarker).flatMap(_._2).map(_._1.toString)
     } else None).getOrElse(bucketsOf(spark))
     // covered models salt in the tombstone state (Nil pre-retraction):
     // a retraction advances every covered fingerprint through the salt,

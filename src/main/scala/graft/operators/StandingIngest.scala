@@ -457,8 +457,9 @@ object StandingIngest {
       val cur = reg.currentPath(name).get
       val files = graft.api.FsIO.parquetSizes(cur).size
       // bucket count the FILES were written with, from the marker
-      // (FalApi.markerBucketSpec is the one parser of that format)
-      val buckets = a.markerBucketSpec(cur).map(_._1)
+      // (FalApi.bucketMarker is the one parser of that format)
+      val buckets = graft.api.FalApi.bucketMarker(cur).flatMap(_._2)
+        .map(_._1)
         .getOrElse(spark.conf
           .get("spark.sql.shuffle.partitions", "32").toInt)
       if (files <= buckets.toLong * maxFilesPerBucket) None

@@ -166,9 +166,7 @@ class BucketedWriteSpec extends AnyFunSuite {
     // simulate a JVM restart: the in-memory catalog forgets the tables
     // while the registry pointer + parquet + marker files persist
     def markerTable(model: String): String =
-      Files.readString(java.nio.file.Paths.get(
-        reg.currentPath(model).get, "_bucketed_table"))
-        .trim.split("\n").head.trim
+      FalApi.bucketMarker(reg.currentPath(model).get).get._1
     val tbl = markerTable("bl_orders")
     spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
     spark.sql(s"DROP TABLE IF EXISTS `${markerTable("bl_lines")}`")

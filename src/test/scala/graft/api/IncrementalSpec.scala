@@ -110,6 +110,22 @@ class IncrementalSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(out.toSeq == Seq(("2024-01-01", 9L), ("2024-01-02", 3L),
       ("2024-01-03", 4L)))
+
+    // a multi-column partition_by arrives as the raw comma-joined meta
+    // value, as Runner passes it
+    api.registry.register(ModelDef("part2", ModelKind.Sql("SELECT 1"),
+      meta = Map("partition_by" -> "day,region")))
+    api.writeToModel(Seq(("2024-01-01", "eu", 1L), ("2024-01-01", "us", 2L),
+      ("2024-01-02", "eu", 3L)).toDF("day", "region", "id"), "part2")
+    // replace (01, eu) only; (01, us) and (02, eu) stay
+    api.writeToModelInsertOverwrite(
+      Seq(("2024-01-01", "eu", 9L)).toDF("day", "region", "id"), "part2",
+      "day,region")
+    val out2 = api.ref("part2").orderBy("day", "region", "id").collect()
+      .map(r => (r.getAs[String]("day"), r.getAs[String]("region"),
+        r.getAs[Long]("id")))
+    assert(out2.toSeq == Seq(("2024-01-01", "eu", 9L),
+      ("2024-01-01", "us", 2L), ("2024-01-02", "eu", 3L)))
   }
 
   test("feature listing derives features from meta + schema") {

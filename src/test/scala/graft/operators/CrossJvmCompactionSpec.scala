@@ -117,9 +117,9 @@ class CrossJvmCompactionSpec extends AnyFunSuite {
       }
       // appender drains the remaining batches uncontended; the bound
       // is a generous hang guard, not a race timing assumption
-      val finished = proc.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)
+      val finished = proc.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)
       if (!finished) proc.destroyForcibly()
-      assert(finished, "appender JVM hung (20 min)")
+      assert(finished, "appender JVM hung (5 min)")
       reader.join(10000)
       val out = outBuf.synchronized(outBuf.toString)
       assert(proc.exitValue() == 0,
@@ -136,9 +136,7 @@ class CrossJvmCompactionSpec extends AnyFunSuite {
 
       // invariant: every appended id exactly once, initial rows intact
       spark.catalog.refreshTable(
-        graft.api.FsIO.readString(graft.api.FsIO.child(
-          reg.currentPath(name).get, "_bucketed_table"))
-          .trim.split("\n").head.trim)
+        graft.api.FalApi.bucketMarker(reg.currentPath(name).get).get._1)
       val rows = api.ref(name)
       assert(rows.count() == 1000L + nBatches * rowsPer,
         "rows lost or duplicated across the race")

@@ -77,10 +77,10 @@ class StandingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     // dropped from the session catalog — only the durable registry
     // (pointer + parquet + _bucketed_table marker) survives
     Shared.invalidate(dir)
-    val marker = graft.api.FsIO.readString(graft.api.FsIO.child(
+    val (tbl, _) = graft.api.FalApi.bucketMarker(
       new graft.api.Registry(Shared.namespaceDir(spark, dir))
-        .currentPath("gram_starts_10").get, "_bucketed_table"))
-    spark.sql(s"DROP TABLE IF EXISTS `${marker.linesIterator.next().trim}`")
+        .currentPath("gram_starts_10").get).get
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
     assert(Curation2.gramStarts(spark, dir).count() == n0)
     assert(builds("gram_starts_10") == 1,
       "a fingerprint-current resolve must not rebuild")

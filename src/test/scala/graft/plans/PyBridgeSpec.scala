@@ -241,29 +241,15 @@ class PyBridgeSpec extends AnyFunSuite {
     assert(pidsGlobal == 1)
     assert(pidsPart > 1,
       "partition mode ran in a single worker despite 6 input part files")
-    // EXECUTOR lane is the default (VERDICT r12 #2): every worker
-    // child ran inside its own Spark task — the report is recorded
-    // FROM TaskContext on the task side, so partition ids 0..w-1 prove
-    // the Python stage's parallelism follows the cluster scheduler,
-    // not a driver-host thread pool
+    // every worker child ran inside its own Spark task (VERDICT r12
+    // #2) — the report is recorded FROM TaskContext on the task side,
+    // so partition ids 0..w-1 prove the Python stage's parallelism
+    // follows the cluster scheduler, not a driver-host thread pool
     val report = PyBridge.lastExecutorReport
     assert(report.map(_._1).sorted == Seq(0, 1, 2),
-      s"expected 3 executor-lane workers, got $report")
+      s"expected 3 task-hosted workers, got $report")
     assert(report.map(_._2).sorted == Seq(0, 1, 2),
       s"each worker must run in its own Spark task: $report")
-
-    // lane parity: the driver thread-pool lane produces identical rows
-    // through the identical child contract
-    sys.props("graft.py.lane") = "driver"
-    val d =
-      try PyBridge.runModel(api, "feat_part_driver",
-        Seq("wide_base", "side_dim"),
-        proj.resolve("featurize.py").toString, mode = "partition")
-      finally sys.props.remove("graft.py.lane")
-    assert(d.select(cols.map(col): _*).exceptAll(
-      p.select(cols.map(col): _*)).isEmpty)
-    assert(p.select(cols.map(col): _*).exceptAll(
-      d.select(cols.map(col): _*)).isEmpty)
   }
 
   test("executor-lane partition mode: a crashing worker drains the " +
@@ -337,6 +323,29 @@ class PyBridgeSpec extends AnyFunSuite {
     assert(PyBridge.runModel(api, "capped",
       Seq("part_base", "big_side"), pyFile.toString,
       mode = "partition").count() == 20)
+  }
+
+  test("a failed handoff deletes its scratch dir") {
+    assume(PyBridge.available, "python3 with pandas+pyarrow not on PATH")
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    def scratchDirs(): Set[java.nio.file.Path] = {
+      val s = Files.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(_.getFileName.toString
+          .startsWith("graft_py_leak_probe")).toSet
+      } finally s.close()
+    }
+    val before = scratchDirs()
+    val api = freshApi()
+    // the dep's ref() fails before any child starts, in both modes
+    for (mode <- Seq("global", "partition")) {
+      intercept[IllegalStateException] {
+        PyBridge.runModel(api, "leak_probe", Seq("not_there"),
+          "unused.py", mode = mode)
+      }
+      assert(scratchDirs() == before, s"$mode mode leaked its scratch dir")
+    }
   }
 
   test("conda python-pin detection matches interpreter specs only") {
