@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  import Verify.jsonString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf (see GraftConf.builder): keep every query's codegen
-      // classes resident across the 145-query loop
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftConf.tune(spark)
     // JIT/codegen warmup so the first timed query isn't charged for
@@ -70,15 +64,9 @@ object Bench {
     // emit 45,97 and break the driver's JSON parse.
     def fmt(v: Double, p: String) = String.format(java.util.Locale.ROOT, p,
       Double.box(v))
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val total = results.values.filter(_ >= 0).sum
     val entries = results.toSeq.sortBy { case (_, t) => -t }
-      .map { case (k, v) => jstr(k) + ":" + fmt(v, "%.2f") }
+      .map { case (k, v) => jsonString(k) + ":" + fmt(v, "%.2f") }
     val prefix = s"""{"metric":"total","value":${fmt(total, "%.3f")},"unit":"sec","n_queries":${results.size},"errors":${failed.size},"queries":{"""
     // "printed":N (count of per-query entries that fit the byte
     // budget) tells the driver's round-over-round diff that a query
@@ -101,7 +89,7 @@ object Bench {
     // buys down. Flat query keys stay at the top level (r5 file format)
     // so older tooling keeps parsing; standing_models rides alongside.
     val standing = graft.operators.Shared.buildSeconds.toSeq.sortBy(_._1)
-      .map { case (k, v) => "    " + jstr(k) + ": " + fmt(v, "%.3f") }
+      .map { case (k, v) => "    " + jsonString(k) + ": " + fmt(v, "%.3f") }
       .mkString("  \"standing_models\": {\n", ",\n", "\n  }")
     // catalog-resident since r12: models RESOLVED from the durable
     // standing catalog (fingerprint hit, zero rebuild) — on a
@@ -109,13 +97,14 @@ object Bench {
     // the near-zero resolve costs (the cold ≈ warm evidence)
     val resolved = graft.operators.Shared.resolveSeconds.toSeq
       .sortBy(_._1)
-      .map { case (k, v) => "    " + jstr(k) + ": " + fmt(v, "%.3f") }
+      .map { case (k, v) => "    " + jsonString(k) + ": " + fmt(v, "%.3f") }
       .mkString("  \"standing_resolved\": {\n", ",\n", "\n  }")
     val errBlock = failed.toSeq.sortBy(_._1)
-      .map { case (k, v) => "    " + jstr(k) + ": " + jstr(v) }
+      .map { case (k, v) =>
+        "    " + jsonString(k) + ": " + jsonString(v) }
       .mkString("  \"errors\": {\n", ",\n", "\n  }")
     val detail = (results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "  " + jstr(k) + ": " + fmt(v, "%.3f") }
+      .map { case (k, v) => "  " + jsonString(k) + ": " + fmt(v, "%.3f") }
       :+ standing :+ resolved :+ errBlock)
       .mkString("{\n", ",\n", "\n}\n")
     try {

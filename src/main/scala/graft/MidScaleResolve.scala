@@ -41,12 +41,10 @@ object MidScaleResolve {
       println(f"[midscale] $name $dest: " +
         f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    val json = names.map { n =>
-      val sql = SparkEntry.oracleSql(n)
-        .replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n")
-      s""""$n": "$sql""""
-    }.mkString("{", ", ", "}")
+    import Verify.jsonString
+    val json = names
+      .map(n => jsonString(n) + ": " + jsonString(SparkEntry.oracleSql(n)))
+      .mkString("{", ", ", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(out, "oracle_sql.json"), json)
     println(s"WROTE=$out/oracle_sql.json")

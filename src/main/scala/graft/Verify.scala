@@ -29,29 +29,33 @@ object Verify {
         // Bench/QueryTime rule)
         spark.sharedState.cacheManager.clearCache()
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Failures are a first-class artifact: a missing result dir must
     // read as an ERROR, not silently vanish from the correctness record
     // (round 6 lost 21 rows that way). The final VERIFY_ERRORS line is
     // also a grep-able tail marker for the driver's captured output.
     Files.writeString(Paths.get(s"$outDir/errors.json"),
-      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      failed.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
         .mkString("{", ",", "}"))
     println(s"VERIFY_ERRORS=${failed.size}")
     spark.stop()
   }
+
+  /** JSON string literal for the harness artifacts (`oracle_sql.json`,
+    * `errors.json`, `bench_detail.json`): escapes backslash, quote, and
+    * ALL control chars (<0x20) — a tab or CR in an oracle's SQL would
+    * otherwise make the consumer's json.load fail and silently drop
+    * every correctness row. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

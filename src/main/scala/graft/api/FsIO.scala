@@ -56,21 +56,25 @@ object FsIO {
 
   /** The ONE recursive parquet-data-file walk the append/compaction/
     * delete paths share — a single definition of "what counts as a
-    * data file". Filesystem metadata only, no Spark job. */
+    * data file". Filesystem metadata only, no Spark job. Walks with
+    * `listStatus`, not `listFiles`: the local filesystem's
+    * `LocatedFileStatus` stats each file's permissions after the
+    * listing, and a file a concurrent compaction vacuums in between
+    * fails that stat with a bare RuntimeException, while `listStatus`
+    * skips names that vanished and reports a vanished directory as
+    * FileNotFoundException (which the in-place writers' callers
+    * already treat as "re-read the current version"). */
   private def parquetStatuses(dir: String)
-      : Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new Path(dir)
     val fs = fsOf(p)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, /* recursive = */ true)
-      val out = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) out += st
+    def walk(d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else Nil
       }
-      out.result()
-    }
+    if (!fs.exists(p)) Seq.empty else walk(p)
   }
 
   /** Sizes of the parquet data files under a version directory

@@ -510,37 +510,19 @@ object Curation2 extends QueryPack {
     * every vocab term). Memoized per corpus dir: the two standing
     * models ([[bpeSegmentation]], [[bpeLearnedMerges]]) are byproducts
     * of ONE pass — sharing the per-iteration cached frames means a
-    * process touching both trains once, not twice. The memo is skipped
-    * under `graft.schemaOnly` so a schema-only walk can't seed real
-    * consumers with unmaterialized-lineage frames, and is keyed on the
-    * SESSION as well as the dir: the frames (and their cached
-    * intermediates) are session-bound, so a restarted session must
-    * re-derive rather than receive plans pinned to a stopped session.
+    * process touching both trains once, not twice. The memo is a
+    * [[Shared.SessionMemo]]: the frames (and their cached
+    * intermediates) are session-bound, so a restarted session
+    * re-derives rather than receiving plans pinned to a stopped
+    * session, and a fixture rewrite of `dir` drops the memo trained on
+    * the pre-rewrite corpus (ADVICE r11).
     */
-  private val bpeTrained = scala.collection.concurrent.TrieMap
-    .empty[String, (SparkSession, Seq[DataFrame], DataFrame)]
-
-  // a fixture rewrite of `dir` must drop the memo trained on the
-  // pre-rewrite corpus (ADVICE r11), alongside Shared's own memos
-  Shared.onInvalidate(dir => { bpeTrained.remove(dir); () })
+  private val bpeTrained =
+    new Shared.SessionMemo[(Seq[DataFrame], DataFrame)]
 
   private def bpeTrain(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) =
-    if (Shared.schemaOnly(spark)) bpeTrainOnce(spark, dir)
-    else bpeTrained.get(dir) match {
-      // the memo'd frames (and their .cache()'d intermediates) are
-      // session-bound: reuse only for the SAME live session object
-      // (`eq`, not an identity hash — hashes can be reused after a
-      // stopped session is GC'd; ADVICE r11), recompute-and-replace
-      // otherwise (which also evicts entries pinned to dead sessions)
-      case Some((owner, bests, seq))
-          if (owner eq spark) && !owner.sparkContext.isStopped =>
-        (bests, seq)
-      case _ =>
-        val trained = bpeTrainOnce(spark, dir)
-        bpeTrained.put(dir, (spark, trained._1, trained._2))
-        trained
-    }
+    bpeTrained(spark, dir)(bpeTrainOnce(spark, dir))
 
   private def bpeTrainOnce(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
@@ -741,23 +723,12 @@ object Curation2 extends QueryPack {
     * (session, dir) with the same liveness-validated keying as
     * [[bpeTrain]], so the gated merge listing and the standing deep
     * segmentation share ONE training run. */
-  private val bpeBatchTrained = scala.collection.concurrent.TrieMap
-    .empty[String, (SparkSession, Seq[DataFrame], DataFrame)]
-
-  Shared.onInvalidate(dir => { bpeBatchTrained.remove(dir); () })
+  private val bpeBatchTrained =
+    new Shared.SessionMemo[(Seq[DataFrame], DataFrame)]
 
   private def bpeBatchTrain(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) =
-    if (Shared.schemaOnly(spark)) bpeBatchTrainOnce(spark, dir)
-    else bpeBatchTrained.get(dir) match {
-      case Some((owner, merges, seq))
-          if (owner eq spark) && !owner.sparkContext.isStopped =>
-        (merges, seq)
-      case _ =>
-        val trained = bpeBatchTrainOnce(spark, dir)
-        bpeBatchTrained.put(dir, (spark, trained._1, trained._2))
-        trained
-    }
+    bpeBatchTrained(spark, dir)(bpeBatchTrainOnce(spark, dir))
 
   private def bpeBatchTrainOnce(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
@@ -767,15 +738,8 @@ object Curation2 extends QueryPack {
         explode(sequence(lit(1), length(col("term")))).as("pos"))
       .select(col("term"), col("tcnt"), col("pos"),
         col("term").substr(col("pos"), lit(1)).as("sym"))
-    // schema-only walks must not run the eager per-iteration
-    // checkpoints (and don't need depth — the merge-row schema is
-    // fixed from iteration 1)
-    val iters = if (Shared.schemaOnly(spark)) 1 else BpeBatchIters
-    val merges = (1 to iters).map { it =>
-      val (kept, next) =
-        if (Shared.schemaOnly(spark)) {
-          val k = bpeBatchKept(seq); (k, seq)
-        } else bpeBatchIter(seq)
+    val merges = (1 to BpeBatchIters).map { it =>
+      val (kept, next) = bpeBatchIter(seq)
       seq = next
       kept.select(lit(it.toLong).as("it"),
         col("rank").cast("long").as("mrank"), col("l").as("left_sym"),
@@ -844,23 +808,12 @@ object Curation2 extends QueryPack {
     * trainer; the standing models below make the memo a same-process
     * convenience only (the catalog pays training once per corpus
     * EVER). */
-  private val bpeDeepTrained = scala.collection.concurrent.TrieMap
-    .empty[String, (SparkSession, Seq[DataFrame], DataFrame)]
-
-  Shared.onInvalidate(dir => { bpeDeepTrained.remove(dir); () })
+  private val bpeDeepTrained =
+    new Shared.SessionMemo[(Seq[DataFrame], DataFrame)]
 
   private def bpeDeepTrain(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) =
-    if (Shared.schemaOnly(spark)) bpeDeepTrainOnce(spark, dir)
-    else bpeDeepTrained.get(dir) match {
-      case Some((owner, merges, seq))
-          if (owner eq spark) && !owner.sparkContext.isStopped =>
-        (merges, seq)
-      case _ =>
-        val trained = bpeDeepTrainOnce(spark, dir)
-        bpeDeepTrained.put(dir, (spark, trained._1, trained._2))
-        trained
-    }
+    bpeDeepTrained(spark, dir)(bpeDeepTrainOnce(spark, dir))
 
   private def bpeDeepTrainOnce(spark: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
@@ -878,15 +831,9 @@ object Curation2 extends QueryPack {
       .select(col("term"), col("tcnt"),
         (col("p0") + 1).cast("int").as("pos"), col("sym"))
       .repartition(8, col("term"))
-    val iters = if (Shared.schemaOnly(spark)) 1 else BpeDeepIters
-    val merges = (1 to iters).map { it =>
-      val (kept, next) =
-        if (Shared.schemaOnly(spark)) {
-          val k = bpeBatchKept(seq, bpeDeepK(it), bpeDeepM(it),
-            thin = true, sep = " ", chainOnly = true)
-          (k, seq)
-        } else bpeBatchIter(seq, bpeDeepK(it), bpeDeepM(it),
-          thin = true, sep = " ", chainOnly = true)
+    val merges = (1 to BpeDeepIters).map { it =>
+      val (kept, next) = bpeBatchIter(seq, bpeDeepK(it), bpeDeepM(it),
+        thin = true, sep = " ", chainOnly = true)
       seq = next
       kept.select(lit(it.toLong).as("it"),
         col("rank").cast("long").as("mrank"), col("l").as("left_sym"),

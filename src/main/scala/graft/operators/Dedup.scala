@@ -1137,24 +1137,14 @@ object Dedup extends QueryPack {
   /** Memo for [[evalSuiteSigs]] — deriving the slice scans the
     * corpus-sized standing signature model, and the streaming
     * ingest-gate probe must not re-pay that scan per micro-batch.
-    * Keyed on dir with the [[Curation2]] memo discipline (session `eq`
-    * + isStopped, skipped under schemaOnly, dropped on invalidate),
-    * PLUS the derived plan's semantic hash: StandingIngest appends
-    * publish new standing-model versions without firing invalidate
-    * hooks, and the hash of the freshly-resolved plan moves with the
-    * version dirs — a memo pinned to the pre-append eval suite misses
-    * instead of serving a stale slice (review r13). */
-  private val evalSigsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (SparkSession, Int, DataFrame)]
-
-  private def dropEvalMemo(dir: String): Unit =
-    evalSigsMemo.remove(dir).foreach { case (owner, _, df) =>
-      // release the cached blocks with the entry — repeated in-process
-      // fixture rewrites must not accumulate orphaned InMemoryRelations
-      if (!owner.sparkContext.isStopped) df.unpersist()
-    }
-
-  Shared.onInvalidate(dropEvalMemo)
+    * A [[Shared.SessionMemo]] keyed on the derived plan's semantic
+    * hash: StandingIngest appends publish new standing-model versions
+    * without firing invalidate hooks, and the hash of the
+    * freshly-resolved plan moves with the version dirs — a memo pinned
+    * to the pre-append eval suite misses instead of serving a stale
+    * slice. A dropped entry releases its cached blocks.
+    */
+  private val evalSigsMemo = new Shared.SessionMemo[DataFrame](_.unpersist())
 
   /** The held-out eval suite's signatures (tiny — broadcasts), shared
     * by the batch probe and [[graft.streaming.StreamDecontam]]; cached
@@ -1163,23 +1153,10 @@ object Dedup extends QueryPack {
     * per trigger. */
   private[graft] def evalSuiteSigs(spark: SparkSession,
       dir: String): DataFrame = {
-    def derive() =
+    val fresh =
       taggedSigs(spark, dir).filter(col("source") === "src3").drop("source")
-    if (Shared.schemaOnly(spark)) derive()
-    else {
-      val fresh = derive()
-      val key = fresh.queryExecution.analyzed.semanticHash()
-      evalSigsMemo.get(dir) match {
-        case Some((owner, k, df))
-            if (owner eq spark) && k == key &&
-              !owner.sparkContext.isStopped => df
-        case _ =>
-          dropEvalMemo(dir)
-          val df = fresh.cache()
-          evalSigsMemo.put(dir, (spark, key, df))
-          df
-      }
-    }
+    evalSigsMemo(spark, dir,
+      key = fresh.queryExecution.analyzed.semanticHash())(fresh.cache())
   }
 
   /** E5g2 — FUZZY benchmark decontamination: flag training documents
@@ -1252,12 +1229,6 @@ object Dedup extends QueryPack {
       if (contractAbove >= 0) contractAbove else singleTaskEdges
     val session = edges.sparkSession
     import session.implicits._
-    // schema-only query walks (GateSchemaSpec) must not run the
-    // contraction loop's per-level count() jobs; the label map's
-    // schema is static
-    if (Shared.schemaOnly(session))
-      return session.emptyDataset[(Long, Long)]
-        .toDF("doc_id", "cluster_rep")
     // first contraction consumes the (possibly expensive) edge input
     // exactly once; its output is ≤ one star edge per touched node, so
     // the cache is small at any corpus size

@@ -67,8 +67,8 @@ private[graft] object Shared {
     .TrieMap.empty[(String, String), Object]
 
   /** In-process hooks run by [[invalidate]] — memo layers derived from
-    * standing models (e.g. Curation2's BPE training memo) register
-    * here so a fixture rewrite clears them in the same call. */
+    * standing models (every [[SessionMemo]], Similarity's IVF geometry)
+    * register here so a fixture rewrite clears them in the same call. */
   private val invalidateHooks = new java.util.concurrent
     .ConcurrentLinkedQueue[String => Unit]()
 
@@ -85,21 +85,40 @@ private[graft] object Shared {
     invalidateHooks.forEach(f => f(dir))
   }
 
-  /** Schema-only mode (VERDICT r9 #9): when the session conf
-    * `graft.schemaOnly` is true, query CONSTRUCTION must not run Spark
-    * jobs — the three eager choke points ([[model]] first-touch builds,
-    * `Dedup.connectedComponents`' contraction loop,
-    * `Similarity.ivfParams`' corpus count) return lazy/fixed
-    * schema-identical substitutes instead. Used by GateSchemaSpec to
-    * walk all query output schemas in O(seconds); never set it when the
-    * query's ROWS matter. Schema parity between the two modes is pinned
-    * by the spec's own parity tests. A model already resolved in this
-    * process is read (lazy parquet scan); the durable catalog is NOT
-    * consulted on a miss — re-registering a bucketed table runs footer
-    * inference, which can schedule a job.
+  /** A per-corpus-dir memo of a SESSION-BOUND value (trained frames
+    * and their cached intermediates, a broadcast): an entry is handed
+    * back only to the same live session (`eq`, not an identity hash —
+    * hashes can be reused after a stopped session is GC'd) while the
+    * optional `key` still matches; otherwise the value is recomputed
+    * and replaces the entry. [[invalidate]] drops the dir's entry.
+    * `release` runs on every dropped entry whose session is still
+    * alive (e.g. `unpersist` its cached blocks, so repeated in-process
+    * fixture rewrites don't accumulate orphaned InMemoryRelations).
     */
-  def schemaOnly(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.schemaOnly").exists(_.toBoolean)
+  final class SessionMemo[V](release: V => Unit = (_: V) => ()) {
+    private val entries = scala.collection.concurrent.TrieMap
+      .empty[String, (SparkSession, Any, V)]
+
+    onInvalidate(drop)
+
+    private def drop(dir: String): Unit =
+      entries.remove(dir).foreach { case (owner, _, v) =>
+        if (!owner.sparkContext.isStopped) release(v)
+      }
+
+    def apply(spark: SparkSession, dir: String, key: Any = None)(
+        compute: => V): V =
+      entries.get(dir) match {
+        case Some((owner, k, v))
+            if (owner eq spark) && k == key &&
+              !owner.sparkContext.isStopped => v
+        case _ =>
+          drop(dir)
+          val v = compute
+          entries.put(dir, (spark, key, v))
+          v
+      }
+  }
 
   /** Wall-clock cost of each standing model's first-touch BUILD this
     * process (fingerprint miss → full materialization), keyed by model
@@ -387,9 +406,6 @@ private[graft] object Shared {
         api(spark, reg, name, bucketBy, build, dir, extraMeta).ref(name))
       case None =>
     }
-    // schema-only walks read an already-resolved model (a lazy parquet
-    // scan) but never trigger a build or a catalog round trip
-    if (schemaOnly(spark)) return build(spark, dir)
     val lock = buildLocks.getOrElseUpdate(key, new Object)
     lock.synchronized {
       if (!built.contains(key)) {

@@ -186,11 +186,6 @@ object Similarity extends QueryPack {
     */
   private[graft] def ivfParams(spark: SparkSession,
       dir: String): IvfParams = {
-    // schema-only walks skip the sizing count; fixed stand-in geometry,
-    // deliberately NOT cached so a later real query re-derives the true
-    // params
-    if (Shared.schemaOnly(spark) && !ivfParamsCache.contains(dir))
-      return IvfParams(1024L, 32, 32L, 6)
     ivfParamsCache.getOrElseUpdate(dir, {
       val nc = t(spark, dir, "embeddings")
         .filter(col("vec_id") >= 10).count()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.Curation2
+import graft.operators.{Curation2, Shared}
 
 /** Streaming tokenization under the PRODUCTION-DEPTH phrase tokenizer
   * (`tx_bpe_deep`'s ≥1,000-merge model) — the serving shape a trained
@@ -36,27 +36,19 @@ object StreamBpePhrase {
   /** The learned merges in fold order, broadcast once per (session,
     * corpus). Rebuilt when the session changes (broadcasts are
     * session-bound) — the standing catalog makes the re-read ~ms. */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[String, (SparkSession, org.apache.spark.broadcast
-      .Broadcast[Array[(String, String, String)]])]
-
-  graft.operators.Shared.onInvalidate(dir => { mergeCache.remove(dir); () })
+  private val mergeCache = new Shared.SessionMemo[
+    org.apache.spark.broadcast.Broadcast[Array[(String, String, String)]]]
 
   private def mergesFor(spark: SparkSession, dir: String)
       : org.apache.spark.broadcast
         .Broadcast[Array[(String, String, String)]] =
-    mergeCache.get(dir) match {
-      case Some((owner, bc))
-          if (owner eq spark) && !owner.sparkContext.isStopped => bc
-      case _ =>
-        val ordered = Curation2.bpePhraseMerges(spark, dir)
-          .orderBy("it", "mrank")
-          .select("left_sym", "right_sym", "merged")
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-        val bc = spark.sparkContext.broadcast(ordered)
-        mergeCache.put(dir, (spark, bc))
-        bc
+    mergeCache(spark, dir) {
+      val ordered = Curation2.bpePhraseMerges(spark, dir)
+        .orderBy("it", "mrank")
+        .select("left_sym", "right_sym", "merged")
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      spark.sparkContext.broadcast(ordered)
     }
 
   /** One left-to-right application of merge (l, r) → m over a symbol

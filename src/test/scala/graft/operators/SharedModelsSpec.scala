@@ -58,4 +58,31 @@ class SharedModelsSpec extends AnyFunSuite {
       direct.except(model).count() === 0L &&
       model.count() === direct.count())
   }
+
+  test("SessionMemo: one entry per live session and key, released on drop") {
+    val memoDir = "/memo-probe/not-a-corpus"
+    val released = scala.collection.mutable.ArrayBuffer.empty[String]
+    var computed = 0
+    val memo = new Shared.SessionMemo[String](v => { released += v; () })
+    def get(s: org.apache.spark.sql.SparkSession, key: Int): String =
+      memo(s, memoDir, key) { computed += 1; s"v$computed" }
+
+    // same session + key: computed once, the same object handed back
+    val a = get(spark, 1)
+    assert((get(spark, 1) eq a) && computed == 1 && released.isEmpty)
+    // a new key recomputes and releases the replaced entry
+    val b = get(spark, 2)
+    assert(b == "v2" && computed == 2 && released == Seq("v1"))
+    // another session never receives this session's entry
+    val other = spark.newSession()
+    val c = get(other, 2)
+    assert(c == "v3" && computed == 3 && released == Seq("v1", "v2"))
+    assert(get(other, 2) eq c)
+    // invalidating the dir releases the live entry; the next call
+    // recomputes
+    Shared.invalidate(memoDir)
+    assert(released == Seq("v1", "v2", "v3"))
+    assert(get(other, 2) == "v4" && computed == 4)
+    Shared.invalidate(memoDir)
+  }
 }
