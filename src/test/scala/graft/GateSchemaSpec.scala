@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType, StructField}
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.Assertions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver's correctness gate sorts each query result as a pandas
@@ -14,67 +15,39 @@ import org.scalatest.funsuite.AnyFunSuite
   * list results with `array_join(col, "|")` (oracle twin:
   * `array_to_string(col, '|')`), the documented c18 lesson.
   *
-  * Cheapness (VERDICT r9 #9): the walk runs under `graft.schemaOnly`,
-  * which turns the construction-time job triggers — standing
-  * first-touch builds in `Shared.model`, the contraction-loop counts in
-  * `Dedup.connectedComponents`, the sizing count in
-  * `Similarity.ivfParams` — into lazy/fixed schema-identical
-  * substitutes; `Tables.load`'s process-wide schema cache removes the
-  * per-construction parquet footer-inference jobs on top. The walk
-  * went from 29 s / 198 jobs (r9) to 14 s / 10 one-time-inference jobs
-  * — the residue is driver-side Catalyst analysis, no sf0.001 pipeline
-  * runs; PlanPropertiesSpec's "query construction runs no Spark job"
-  * keeps the construction job count pinned without the flag. The parity
-  * tests at the end pin the flag's substitutes to the real path's
-  * schemas for the query families the flag touches, so the gate cannot
-  * drift from what Verify actually emits.
+  * Each query is built through the one real construction path and not
+  * executed, so a failure here names a schema fault apart from a
+  * runtime one. `SmokeSpec` asserts the same gate on the DataFrame it
+  * counts.
   */
-class GateSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GateSchemaSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  override def beforeAll(): Unit =
-    spark.conf.set("graft.schemaOnly", "true")
-  override def afterAll(): Unit =
-    spark.conf.unset("graft.schemaOnly")
+  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    test(s"gate-schema: $name emits only scalar top-level columns") {
+      try GateSchemaSpec.assertScalarTopLevel(name, fn(spark, dir))
+      finally spark.sharedState.cacheManager.clearCache()
+    }
+  }
+}
 
+object GateSchemaSpec {
   private def offending(f: StructField): Boolean = f.dataType match {
     case _: ArrayType | _: MapType | _: StructType => true
     case _                                         => false
   }
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-    test(s"gate-schema: $name emits only scalar top-level columns") {
-      val bad = fn(spark, dir).schema.fields.filter(offending)
-      assert(
-        bad.isEmpty,
-        s"query '$name' emits non-scalar top-level column(s) " +
-          bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ") +
-          " — the driver's pandas comparator cannot sort these; " +
-          "serialize with array_join(col, \"|\") and mirror with " +
-          "array_to_string in the oracle (see Relational2's c18 note)")
-    }
-  }
-
-  // One representative per schemaOnly-substituted family: union-find
-  // (connectedComponents), standing model + ivfParams (sim_ivf_topk),
-  // both at once (dd_minhash_resolve). Each constructs the query REAL
-  // (flag off) and gated (flag on) and requires identical top-level
-  // (name, dataType) — the only properties the gate reads.
-  // r11 adds the gram + BPE standing models — their queries join the
-  // parity set so the schemaOnly substitutes can't drift either
-  Seq("dd_cluster", "sim_ivf_topk", "dd_minhash_resolve",
-      "dd_substring_scrub", "tx_bpe_apply").foreach { name =>
-    test(s"schemaOnly parity: $name matches the real construction") {
-      val fn = SparkEntry.queries(name)
-      spark.conf.unset("graft.schemaOnly")
-      val real =
-        try fn(spark, dir).schema.fields.map(f => (f.name, f.dataType)).toSeq
-        finally spark.conf.set("graft.schemaOnly", "true")
-      val gated =
-        fn(spark, dir).schema.fields.map(f => (f.name, f.dataType)).toSeq
-      assert(gated == real,
-        s"schemaOnly construction of '$name' drifted from the real plan")
-    }
+  /** Fails with the gate message when `df` has a top-level column the
+    * comparator cannot sort. */
+  def assertScalarTopLevel(name: String, df: DataFrame): Unit = {
+    val bad = df.schema.fields.filter(offending)
+    assert(
+      bad.isEmpty,
+      s"query '$name' emits non-scalar top-level column(s) " +
+        bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ") +
+        " — the driver's pandas comparator cannot sort these; " +
+        "serialize with array_join(col, \"|\") and mirror with " +
+        "array_to_string in the oracle (see Relational2's c18 note)")
   }
 }

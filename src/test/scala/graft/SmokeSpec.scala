@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.types.{ArrayType, MapType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Executes EVERY `SparkEntry.queries` entry on sf0.001 and asserts it
@@ -18,32 +17,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * c18_arrays in round 1 and sim_int8_quantize in round 8 — both times
   * only once the gate ran, costing a round. So the DataFrame a query
   * builds must be comparator-sortable, i.e. scalar-only at the top
-  * level, before it is counted. Serialize list results with
-  * `array_join(col, "|")` (oracle twin: `array_to_string(col, '|')`),
-  * the documented c18 lesson.
+  * level, before it is counted (`GateSchemaSpec.assertScalarTopLevel`,
+  * which `GateSchemaSpec` also asserts per query without executing).
   */
 class SmokeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def offending(f: StructField): Boolean = f.dataType match {
-    case _: ArrayType | _: MapType | _: StructType => true
-    case _                                         => false
-  }
-
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"smoke: $name executes on sf0.001") {
       try {
         val df = fn(spark, dir)
-        val bad = df.schema.fields.filter(offending)
-        assert(
-          bad.isEmpty,
-          s"query '$name' emits non-scalar top-level column(s) " +
-            bad.map(f => s"${f.name}: ${f.dataType.simpleString}")
-              .mkString(", ") +
-            " — the driver's pandas comparator cannot sort these; " +
-            "serialize with array_join(col, \"|\") and mirror with " +
-            "array_to_string in the oracle (see Relational2's c18 note)")
+        GateSchemaSpec.assertScalarTopLevel(name, df)
         val n = df.count()
         assert(n >= 0)
       } finally spark.sharedState.cacheManager.clearCache()
