@@ -1,6 +1,6 @@
 package graft
 object Bench {
-  import Verify.jsonString
+  import graft.api.Json.{str => jsonString}
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

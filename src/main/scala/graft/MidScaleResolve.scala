@@ -41,7 +41,7 @@ object MidScaleResolve {
       println(f"[midscale] $name $dest: " +
         f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    import Verify.jsonString
+    import graft.api.Json.{str => jsonString}
     val json = names
       .map(n => jsonString(n) + ": " + jsonString(SparkEntry.oracleSql(n)))
       .mkString("{", ", ", "}")

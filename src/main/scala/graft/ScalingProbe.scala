@@ -169,9 +169,9 @@ object ScalingProbe {
         org.apache.spark.sql.functions.col("embedding"))
     val batchSizes = Seq(500, 5000)
     // VERDICT r12 item #5: the block now covers the hot continual-
-    // ingest kernels too — StreamBpeDeep (dictionary-vs-replay serving
-    // split), StreamDedup (LSH index probe), StreamAnn.dupBatch (IVF
-    // near-dup probe) — each against its own source modality.
+    // ingest kernels too — StreamBpeDeep (full-depth broadcast fold),
+    // StreamDedup (LSH index probe), StreamAnn.dupBatch (IVF near-dup
+    // probe) — each against its own source modality.
     val streamProbes: Seq[(String, String,
         org.apache.spark.sql.DataFrame,
         (org.apache.spark.sql.SparkSession, String,
@@ -179,10 +179,10 @@ object ScalingProbe {
           org.apache.spark.sql.DataFrame)] = Seq(
       ("StreamScrub", "exact-substring cut vs standing gram models",
         docsAll, graft.streaming.StreamScrub.scrubBatch),
-      ("StreamBpe", "BPE tokenize vs standing trained merges",
+      ("StreamBpe", "BPE tokenize: broadcast 3 merges, local fold",
         docsAll, graft.streaming.StreamBpe.tokenizeBatch),
       ("StreamBpeDeep",
-        "deep tokenize: dictionary hit, replay only on novel vocab",
+        "deep tokenize: broadcast 69 merges, local fold",
         docsAll, graft.streaming.StreamBpeDeep.tokenizeBatch),
       ("StreamBpePhrase",
         "production-depth phrase tokenize: broadcast merges, local fold",

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.api.Json.{str => jsonString}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -44,18 +45,4 @@ object Verify {
     spark.stop()
   }
 
-  /** JSON string literal for the harness artifacts (`oracle_sql.json`,
-    * `errors.json`, `bench_detail.json`): escapes backslash, quote, and
-    * ALL control chars (<0x20) — a tab or CR in an oracle's SQL would
-    * otherwise make the consumer's json.load fail and silently drop
-    * every correctness row. */
-  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

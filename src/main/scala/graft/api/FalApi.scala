@@ -889,7 +889,7 @@ final class FalApi(
         ledger.record(uid,
           if (status == "error") Status.Failure else Status.Success,
           s"freshness $status max_loaded_at_time_ago_in_s=$secs")
-        s"""{"unique_id":"$uid","status":"$status",""" +
+        s"""{"unique_id":${Json.str(uid)},"status":"$status",""" +
           s""""max_loaded_at":"${iso(now.minusSeconds(secs))}",""" +
           s""""snapshotted_at":"${iso(now)}",""" +
           s""""max_loaded_at_time_ago_in_s":$secs.0,""" +
@@ -943,10 +943,8 @@ object FalApi {
     * reference's `_map_nodes` keys `FreshnessNodeOutput`s by unique_id,
     * `project.py:413-420`).
     */
-  def readFreshnessStatuses(path: String): Map[String, String] = {
-    val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    val entry =
-      raw""""unique_id"\s*:\s*"([^"]+)"\s*,\s*"status"\s*:\s*"([^"]+)"""".r
-    entry.findAllMatchIn(text).map(m => m.group(1) -> m.group(2)).toMap
-  }
+  def readFreshnessStatuses(path: String): Map[String, String] =
+    Json.results(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(path)),
+      "unique_id")
 }

@@ -278,8 +278,8 @@ private[graft] object ForkServer {
       val id = ids.incrementAndGet()
       val call = new Call
       calls.put(id, call)
-      try send(s"""{"id": $id, "manifest": ${PyBridge.jstr(
-        manifest.toString)}, "log": ${PyBridge.jstr(log.toString)}}""")
+      try send(s"""{"id": $id, "manifest": ${Json.str(
+        manifest.toString)}, "log": ${Json.str(log.toString)}}""")
       catch { case e: java.io.IOException =>
         call.exit.completeExceptionally(e) }
       if (dead) call.exit.completeExceptionally(new IllegalStateException(

@@ -2,7 +2,7 @@ package graft.api
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-`FileSystem` IO for everything that lives under a storage
@@ -54,27 +54,35 @@ object FsIO {
   def fileName(path: String): String = new Path(path).getName
   def parent(path: String): String = new Path(path).getParent.toString
 
-  /** The ONE recursive parquet-data-file walk the append/compaction/
-    * delete paths share — a single definition of "what counts as a
-    * data file". Filesystem metadata only, no Spark job. Walks with
-    * `listStatus`, not `listFiles`: the local filesystem's
+  /** The ONE recursive leaf-file walk: every file under `root` whose
+    * path `keep` accepts (a file `root` is its own only leaf; a missing
+    * `root` has none). Filesystem metadata only, no Spark job. Walks
+    * with `listStatus`, not `listFiles`: the local filesystem's
     * `LocatedFileStatus` stats each file's permissions after the
-    * listing, and a file a concurrent compaction vacuums in between
-    * fails that stat with a bare RuntimeException, while `listStatus`
-    * skips names that vanished and reports a vanished directory as
+    * listing (an `ls` fork per file without native IO), and a file a
+    * concurrent compaction vacuums in between fails that stat with a
+    * bare RuntimeException, while `listStatus` skips names that
+    * vanished and reports a vanished directory as
     * FileNotFoundException (which the in-place writers' callers
-    * already treat as "re-read the current version"). */
-  private def parquetStatuses(dir: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new Path(dir)
-    val fs = fsOf(p)
-    def walk(d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    * already treat as "re-read the current version"). Checksum
+    * sidecars stay hidden, as with `listFiles`. */
+  private[graft] def leafStatuses(fs: FileSystem, root: Path)(
+      keep: Path => Boolean): Seq[FileStatus] = {
+    def walk(d: Path): Seq[FileStatus] =
       fs.listStatus(d).toSeq.flatMap { st =>
         if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else if (keep(st.getPath)) Seq(st)
         else Nil
       }
-    if (!fs.exists(p)) Seq.empty else walk(p)
+    if (!fs.exists(root)) Seq.empty else walk(root)
+  }
+
+  /** The parquet data files under a version directory — a single
+    * definition of "what counts as a data file" for the
+    * append/compaction/delete paths. */
+  private def parquetStatuses(dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    leafStatuses(fsOf(p), p)(_.getName.endsWith(".parquet"))
   }
 
   /** Sizes of the parquet data files under a version directory

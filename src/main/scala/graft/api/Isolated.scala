@@ -47,12 +47,12 @@ object Isolated {
         d -> p
       }
       def obj(kv: Seq[(String, String)]): String =
-        kv.map { case (k, v) => s"${PyBridge.jstr(k)}: ${PyBridge.jstr(v)}" }
+        kv.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
           .mkString("{", ", ", "}")
       val manifest = tmp.resolve("manifest.json")
       Files.writeString(manifest,
         s"""{"inputs": ${obj(inputs)}, "args": ${obj(args.toSeq.sortBy(_._1))},""" +
-          s""" "scratch": ${PyBridge.jstr(tmp.toString)}}""")
+          s""" "scratch": ${Json.str(tmp.toString)}}""")
       // Child output streams to a file (never driver memory), with a
       // hard deadline — a hung or stdout-flooding step turns into a
       // task failure, not a wedged executor thread (PyBridge.runLogged).

@@ -62,13 +62,13 @@ object Notebook {
   }
 }
 
-/** Minimal recursive-descent JSON reader — just enough for nbformat
-  * documents (objects, arrays, strings with escapes, numbers, bools,
-  * null). The repo otherwise only EMITS JSON by hand; parsing arrives
-  * with the notebook surface, and a ~80-line reader beats a dependency
-  * the build must not add.
+/** Minimal JSON: one string escaper for every artifact the repo emits
+  * by hand, and a recursive-descent reader (objects, arrays, strings
+  * with escapes, numbers, bools, null) for the ones it reads back —
+  * nbformat notebooks, `run_results.json`, `sources.json`. A ~90-line
+  * codec beats a dependency the build must not add.
   */
-private[api] object Json {
+private[graft] object Json {
   sealed trait Value
   final case class JObject(fields: Map[String, Value]) extends Value
   final case class JArray(items: Seq[Value]) extends Value
@@ -77,12 +77,46 @@ private[api] object Json {
   final case class JBool(b: Boolean) extends Value
   case object JNull extends Value
 
+  /** JSON string literal: escapes quote, backslash, and ALL control
+    * chars (<0x20) — a tab or CR left raw would make the consumer's
+    * parser fail (a harness artifact silently dropping every
+    * correctness row; a fork-server request splitting across lines). */
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def parse(text: String): Value = {
     val p = new Parser(text)
     val v = p.value()
     p.skipWs()
     require(p.eof, s"trailing content at offset ${p.pos}")
     v
+  }
+
+  /** `id → status` over the `results` array of a dbt-style artifact
+    * (`run_results.json` keyed by `node`, `sources.json` by
+    * `unique_id`); a later result for the same id wins. */
+  def results(text: String, idKey: String): Map[String, String] = {
+    val rs = parse(text) match {
+      case JObject(doc) => doc.get("results") match {
+        case Some(JArray(items)) => items
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    rs.foldLeft(Map.empty[String, String]) {
+      case (m, JObject(r)) => (r.get(idKey), r.get("status")) match {
+        case (Some(JString(id)), Some(JString(st))) => m + (id -> st)
+        case _ => m
+      }
+      case (m, _) => m
+    }
   }
 
   private final class Parser(s: String) {

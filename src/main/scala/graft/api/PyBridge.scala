@@ -59,14 +59,6 @@ object PyBridge {
     */
   lazy val available: Boolean = ForkServer.importsOk("python3")
 
-  private[api] def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Hung-child deadline for external steps (a child that never exits
     * would otherwise pin an executor thread forever; the reference's
     * process boundary lets its scheduler keep serving other branches).
@@ -257,15 +249,15 @@ object PyBridge {
       .map(s => s"${s.sourceName}.${s.tableName}" -> s.path)
 
   private def jobj(kv: Seq[(String, String)]): String =
-    kv.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
+    kv.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
       .mkString("{", ", ", "}")
 
   private def writeManifest(path: java.nio.file.Path, name: String,
       pyFile: String, outPath: String, inputs: Seq[(String, String)],
       sources: Seq[(String, String)]): Unit = {
     Files.writeString(path,
-      s"""{"model_name": ${jstr(name)}, "model_file": ${jstr(pyFile)},""" +
-        s""" "output": ${jstr(outPath)}, "inputs": ${jobj(inputs)},""" +
+      s"""{"model_name": ${Json.str(name)}, "model_file": ${Json.str(pyFile)},""" +
+        s""" "output": ${Json.str(outPath)}, "inputs": ${jobj(inputs)},""" +
         s""" "sources": ${jobj(sources)}}""")
     ()
   }

@@ -27,20 +27,11 @@ final class RunLedger {
     records.synchronized(records.reverseIterator
       .find(_.node == node).map(_.status))
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Dump dbt-ish run results JSON (ref format: status, node id, timing). */
   def writeJson(path: String): Unit = {
     val body = all.map(r =>
-      s"""{"node":${q(r.node)},"status":${q(r.status)},""" +
-        s""""detail":${q(r.detail)},"at_epoch_ms":${r.atEpochMs}}""")
+      s"""{"node":${Json.str(r.node)},"status":${Json.str(r.status)},""" +
+        s""""detail":${Json.str(r.detail)},"at_epoch_ms":${r.atEpochMs}}""")
       .mkString("[", ",", "]")
     Files.writeString(Paths.get(path), s"""{"results":$body}""")
     ()
@@ -56,20 +47,8 @@ object RunLedger {
     */
   def loadStatuses(path: String): Map[String, String] = {
     if (!Files.exists(Paths.get(path))) return Map.empty
-    val text = Files.readString(Paths.get(path))
-    val entry =
-      raw""""node"\s*:\s*"((?:[^"\\]|\\.)*)"\s*,\s*"status"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    def unesc(s: String): String =
-      raw"\\(.)".r.replaceAllIn(s, m => m.group(1) match {
-        case "n" => "\n"
-        case "r" => "\r"
-        case "t" => "\t"
-        case c => java.util.regex.Matcher.quoteReplacement(c)
-      })
     // later records win: the ledger is append-ordered, so the last
     // status per node is the run's final word on it
-    entry.findAllMatchIn(text)
-      .map(m => unesc(m.group(1)) -> unesc(m.group(2)))
-      .foldLeft(Map.empty[String, String])(_ + _)
+    Json.results(Files.readString(Paths.get(path)), "node")
   }
 }

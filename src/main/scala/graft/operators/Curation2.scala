@@ -475,12 +475,12 @@ object Curation2 extends QueryPack {
     */
   /** Apply ONE merge (a 1-row `(bl, br, bm)` frame, broadcast) to a
     * symbol table (term, tcnt, pos, sym) under the chain-parity
-    * left-to-right non-overlap rule — the APPLICATION half of
-    * [[txBpeMerges]]' iteration, factored out so the streaming
-    * tokenizer ([[graft.streaming.StreamBpe]]) segments arriving words
-    * with the exact kernel training used (batch ≡ stream by
-    * construction). Window work shards on the term key; the merge row
-    * broadcasts.
+    * left-to-right non-overlap rule — the APPLICATION half of every
+    * trainer's iteration (one merge per 3-merge round, a
+    * symbol-disjoint batch per batched round). Window work shards on
+    * the term key; the merge rows broadcast. The streaming tokenizers
+    * serve the learned tables with the equivalent sequential fold
+    * instead ([[graft.streaming.BpeFold]]).
     */
   private[graft] def bpeApplyMerge(seq: DataFrame, merge: DataFrame)
       : DataFrame = {
@@ -919,10 +919,10 @@ object Curation2 extends QueryPack {
       "term", (s, d) => bpeBatchTrain(s, d)._2)
 
   /** The batched trainer's full merge table as a standing model —
-    * the replay target [[graft.streaming.StreamBpeDeep]] applies to
-    * NOVEL words (words outside the trained vocabulary segment by
-    * replaying the learned merges, exactly as the trained tokenizer
-    * would; a dictionary lookup alone would get them wrong). */
+    * what [[graft.streaming.StreamBpeDeep]] serves: collected in
+    * (it, mrank) order, broadcast, and folded over every arriving
+    * word, known or novel (the fold in that order equals the batched
+    * apply, because each batch's kept pairs are symbol-disjoint). */
   private[graft] def bpeBatchMerges(spark: SparkSession,
       dir: String): DataFrame =
     Shared.model(spark, dir,
@@ -951,14 +951,16 @@ object Curation2 extends QueryPack {
   /** The trained segmentation as STANDING models (compute-at-ingest:
     * train once per corpus, tokenize many) — `bpe_seg_3` is the final
     * (term, tcnt, pos, sym) table bucketed on the term key,
-    * `bpe_merges_3` the 3-row learned-merge table the streaming
-    * tokenizer replays on unseen words.
+    * `bpe_merges_3` the 3-row learned-merge table.
     */
   private[graft] def bpeSegmentation(spark: SparkSession, dir: String)
       : DataFrame =
     Shared.model(spark, dir, "bpe_seg_3", "term",
       (s, d) => bpeTrain(s, d)._2)
 
+  /** The 3-row learned-merge table — what
+    * [[graft.streaming.StreamBpe]] serves: collected in `it` order,
+    * broadcast, and folded over every arriving word. */
   private[graft] def bpeLearnedMerges(spark: SparkSession, dir: String)
       : DataFrame =
     Shared.model(spark, dir, "bpe_merges_3", "it",

@@ -387,18 +387,21 @@ object Dedup extends QueryPack {
   private def minhashSigs(spark: SparkSession, dir: String): DataFrame =
     sigsOf(corpus(spark, dir).select("doc_id", "text")).cache()
 
-  /** MinHash signatures of an arbitrary (doc_id, text) frame — the
-    * per-document kernel shared by the batch corpus runs above and the
-    * streaming ingest probe ([[graft.streaming.StreamDedup]]): a doc's
-    * signature depends only on its own text, so a batch run over the
-    * whole corpus and a stream of micro-batches produce identical rows.
+  /** MinHash signatures (one `s<i>` per affine `params` pair) of an
+    * arbitrary (doc_id, text) frame — the per-document kernel shared by
+    * the batch corpus runs above, the 128-permutation tier
+    * ([[DedupHi.params]]) and the streaming ingest probe
+    * ([[graft.streaming.StreamDedup]]): a doc's signature depends only
+    * on its own text, so a batch run over the whole corpus and a stream
+    * of micro-batches produce identical rows.
     */
-  private[graft] def sigsOf(docs: DataFrame): DataFrame = {
+  private[graft] def sigsOf(docs: DataFrame,
+      params: IndexedSeq[(Long, Long)] = minhashParams): DataFrame = {
     val sh = shingleSet(docs)
       .select(col("doc_id"),
         expr("CAST(conv(substr(md5(shingle),1,8),16,10) AS BIGINT)")
           .as("b"))
-    val minExprs = minhashParams.zipWithIndex.map { case ((a, c), i) =>
+    val minExprs = params.zipWithIndex.map { case ((a, c), i) =>
       expr(s"min((b * ${a}L + ${c}L) % ${MHP}L)").as(s"s${i + 1}")
     }
     sh.groupBy("doc_id").agg(minExprs.head, minExprs.tail: _*)

@@ -68,22 +68,6 @@ object DedupHi extends QueryPack {
     (1 to NPerm).map { _ => (((next() >>> 36) | 1L), next() >>> 34) }
   }
 
-  /** Deep MinHash signatures of a (doc_id, text) frame — one shingle
-    * explode, one 128-buffer min-aggregate (wholestage-codegen'd with
-    * map-side partials, exactly like the 16-perm kernel it extends).
-    * Per-doc pure: batch and streaming ingest produce identical rows.
-    */
-  private[graft] def sigsOf(docs: DataFrame): DataFrame = {
-    val sh = Dedup.shingleSet(docs)
-      .select(col("doc_id"),
-        expr("CAST(conv(substr(md5(shingle),1,8),16,10) AS BIGINT)")
-          .as("b"))
-    val minExprs = params.zipWithIndex.map { case ((a, c), i) =>
-      expr(s"min((b * ${a}L + ${c}L) % ${Dedup.MHP}L)").as(s"s${i + 1}")
-    }
-    sh.groupBy("doc_id").agg(minExprs.head, minExprs.tail: _*)
-  }
-
   /** Standing deep-signature model (full derived corpus, bucketed on
     * doc_id) — built once per (process, dir), appended O(batch) by
     * [[StandingIngest.appendDocBatch]], physically pruned by
@@ -91,7 +75,8 @@ object DedupHi extends QueryPack {
     */
   private[graft] def sigModel(spark: SparkSession, dir: String): DataFrame =
     Shared.model(spark, dir, "graft_minhash128_sigs", "doc_id",
-      (s, d) => sigsOf(Dedup.corpus(s, d).select("doc_id", "text")))
+      (s, d) => Dedup.sigsOf(Dedup.corpus(s, d).select("doc_id", "text"),
+        params))
 
   /** 32-band × 4-row banding of a deep signature table. Band keys are
     * 60-bit md5-prefix BIGINTs of the 4-component string (the portable
@@ -267,7 +252,7 @@ object DedupHi extends QueryPack {
     "dd_minhash_hi" -> ddMinhashHi _,
     "dd_minhash_hi_resolve" -> ddMinhashHiResolve _)
 
-  /** Shared DuckDB CTEs replaying [[sigsOf]]/[[bandedOf]]: 128 min()
+  /** Shared DuckDB CTEs replaying [[Dedup.sigsOf]]/[[bandedOf]]: 128 min()
     * aggregates over the same shingle hash, 32-band keys. */
   private lazy val sqlHiCtes: String = {
     val mins = params.zipWithIndex.map { case ((a, c), i) =>

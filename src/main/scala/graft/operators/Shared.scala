@@ -187,8 +187,8 @@ private[graft] object Shared {
     * filesystem METADATA (no data read, no Spark job): any append,
     * rewrite, or regeneration of an input table changes the listing,
     * so a stale materialization can never satisfy a resolve. O(files)
-    * via the same Hadoop FileSystem the Registry rides (one flat LIST
-    * per table on object stores).
+    * via the same Hadoop FileSystem the Registry rides (one LIST per
+    * directory level, no per-file stat).
     */
   def fingerprint(spark: SparkSession, dir: String,
       inputs: Seq[String], layout: Seq[String]): String = {
@@ -198,32 +198,29 @@ private[graft] object Shared {
     val conf = spark.sessionState.newHadoopConf()
     inputs.sorted.foreach { t =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      val fs = p.getFileSystem(conf)
       sb.append(t).append('[')
-      if (fs.exists(p)) {
-        val base = fs.makeQualified(p).toString
-        val it = fs.listFiles(p, /* recursive = */ true)
-        val files = scala.collection.mutable
-          .ArrayBuffer.empty[(String, Long, Long)]
-        while (it.hasNext) {
-          val s = it.next()
-          val full = s.getPath.toString
-          val rel =
-            if (full.startsWith(base)) full.substring(base.length)
-            else full
-          files += ((rel, s.getLen, s.getModificationTime))
-        }
-        files.sorted
-          .foreach { case (n, len, mt) =>
-            sb.append(n).append(':').append(len).append(':')
-              .append(mt).append(';')
-          }
+      leafListing(p.getFileSystem(conf), p).foreach { case (n, len, mt) =>
+        sb.append(n).append(':').append(len).append(':')
+          .append(mt).append(';')
       }
       sb.append(']')
     }
     java.security.MessageDigest.getInstance("MD5")
       .digest(sb.toString.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
+  }
+
+  /** Every leaf file under `p` as sorted (path relative to the
+    * qualified `p`, length, mtime) — one input table's part of
+    * [[fingerprint]], walked by [[graft.api.FsIO.leafStatuses]]. */
+  private[operators] def leafListing(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] = {
+    val base = fs.makeQualified(p).toString
+    graft.api.FsIO.leafStatuses(fs, p)(_ => true).map { s =>
+      val full = s.getPath.toString
+      (if (full.startsWith(base)) full.substring(base.length) else full,
+        s.getLen, s.getModificationTime)
+    }.sorted
   }
 
   private def bucketsOf(spark: SparkSession): String =

@@ -333,7 +333,7 @@ object StandingIngest {
     // pure like the 16-perm pass, so the batch's rows are exactly the
     // full rebuild's restriction to the batch
     appendDoc("graft_minhash128_sigs",
-      DedupHi.sigsOf(batchCorpus.select("doc_id", "text")))
+      Dedup.sigsOf(batchCorpus.select("doc_id", "text"), DedupHi.params))
 
     appendDoc("graft_lsh_band_index",
       Dedup.withBb(Dedup.bandedOf(

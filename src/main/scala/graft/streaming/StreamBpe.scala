@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Curation2
@@ -12,63 +11,34 @@ import graft.operators.Curation2
   * pretraining pipeline needs online ("how many tokens does today's
   * crawl cost under OUR tokenizer?") without retraining anything.
   *
-  * Batch ≡ stream by construction: each micro-batch segments its own
-  * word vocabulary by replaying the learned merges through
-  * [[Curation2.bpeApplyMerge]] — the SAME chain-parity kernel training
-  * used — so corpus words land on exactly the standing
-  * `tx_bpe_apply` segmentation, and UNSEEN words segment the way the
-  * trained tokenizer would segment them (a merge like `th` applies to
-  * a brand-new word containing it; a vocabulary-lookup shortcut would
-  * get that wrong). StreamBpeSpec pins both against an independent
-  * sequential-fold reference.
+  * Batch ≡ stream by construction: the standing 3-row merge table
+  * (`bpe_merges_3`, in `it` order) broadcasts once per (session,
+  * corpus), and each word folds those merges in learned order through
+  * [[BpeFold]] — the sequential fold the trainer's chain-parity apply
+  * is spec-pinned equal to — so corpus words land on exactly the
+  * standing `tx_bpe_apply` segmentation, and UNSEEN words segment the
+  * way the trained tokenizer would segment them (a merge like `th`
+  * applies to a brand-new word containing it; a vocabulary-lookup
+  * shortcut would get that wrong). StreamBpeSpec pins both against an
+  * independent sequential-fold reference.
   *
-  * Scale: per micro-batch the symbol table is batch-VOCAB-sized
-  * (distinct words, not occurrences), the 3-row merge table
-  * broadcasts, and the per-doc rollup shuffles only (doc, word
-  * counts). The standing merge model trains once per corpus on the
-  * A-layer's cadence; query traffic never touches the corpus.
+  * Scale: per micro-batch one narrow mapPartitions folds each
+  * partition's distinct words once, and the per-doc rollup shuffles
+  * only (doc_id, counts) rows — no per-merge Spark job. The standing
+  * merge model trains once per corpus on the A-layer's cadence; query
+  * traffic never touches the corpus.
   */
 object StreamBpe {
+
+  private val merges = new BpeFold.Table(Curation2.bpeLearnedMerges, "it")
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows: per document,
     * the word count and the BPE token count under the standing trained
     * merges. Also the foreachBatch kernel for [[attach]].
     */
   def tokenizeBatch(spark: SparkSession, dir: String,
-      batchDocs: DataFrame): DataFrame = {
-    // one shared projection of the (in-memory) micro-batch: the word
-    // explode and the all-docs readout both derive from it
-    val docsW = batchDocs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val words = docsW
-      .select(col("doc_id"), explode(col("w")).as("term"))
-      .filter(length(col("term")) > 0)
-    var seq = words.select("term").distinct()
-      .select(col("term"), lit(1L).as("tcnt"),
-        explode(sequence(lit(1), length(col("term")))).as("pos"))
-      .select(col("term"), col("tcnt"), col("pos"),
-        col("term").substr(col("pos"), lit(1)).as("sym"))
-    val merges = Curation2.bpeLearnedMerges(spark, dir)
-    for (i <- 1 to 3)
-      seq = Curation2.bpeApplyMerge(seq,
-        merges.filter(col("it") === i)
-          .select(col("left_sym").as("bl"), col("right_sym").as("br"),
-            col("merged").as("bm")))
-    val perTerm = seq.groupBy("term").agg(count(lit(1)).as("n_syms"))
-    val perDoc = words.join(perTerm, Seq("term"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(col("n_syms")).cast("long").as("n_tokens"))
-    // every input doc reports, including empty/whitespace-only ones
-    // (no words → no exploded rows): a per-doc ingest readout that
-    // silently drops documents breaks downstream accounting
-    docsW.select("doc_id").distinct()
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      .orderBy("doc_id")
-  }
+      batchDocs: DataFrame): DataFrame =
+    BpeFold.wordTokens(batchDocs, merges(spark, dir))
 
   /** Attach the tokenizer to a (doc_id, text) stream via foreachBatch;
     * `sink` receives each micro-batch's (doc_id, n_words, n_tokens)

@@ -1,96 +1,48 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Curation2
 
 /** Streaming tokenization at FULL word-vocabulary depth — the
   * production serving shape of the batched (69-merge, word-level
-  * saturated) tokenizer: per micro-batch,
-  * KNOWN words resolve by a bucket-local lookup against the standing
-  * deep-segmentation model (a dictionary hit — O(1) per word, no merge
-  * replay), and only NOVEL words (vocabulary the trainer never saw)
-  * replay the learned merge sequence, iteration batch by iteration
-  * batch, through the SAME chain-parity kernel training used. This is
-  * the dictionary + fallback split every real tokenizer server runs:
-  * the dictionary serves the hot path, the replay keeps novel words
-  * segmenting exactly as the trained tokenizer would (a lookup-only
-  * shortcut would mis-segment them; [[StreamBpe]] pins that property
-  * at depth 3, this twin pins it at full depth).
+  * saturated) tokenizer: the standing merge table (`bpe_merges_b12x16`,
+  * in (it, mrank) order) broadcasts once per (session, corpus), and
+  * each word folds the whole learned sequence in one local pass
+  * through [[BpeFold]] — the same kernel [[StreamBpe]] and
+  * [[StreamBpePhrase]] serve with. Known and novel words take the same
+  * path: the fold IS the tokenizer, so novel words segment exactly as
+  * the trained tokenizer would (a lookup-only shortcut would
+  * mis-segment them; [[StreamBpe]] pins that property at depth 3, this
+  * twin pins it at full depth).
   *
-  * Batch ≡ batch-apply by construction: corpus words land on exactly
-  * the standing `tx_bpe_apply_deep` segmentation (same standing model,
-  * same rollup); novel words land on the reference fold of the learned
-  * merges (StreamBpeDeepSpec pins both).
+  * Batch ≡ batch-apply by construction: within one batched iteration
+  * the kept pairs are symbol-disjoint, so the fold in (it, mrank)
+  * order equals the trainer's simultaneous apply — corpus words land
+  * on exactly the standing `tx_bpe_apply_deep` segmentation, and novel
+  * words on the reference fold of the learned merges
+  * (StreamBpeDeepSpec pins both).
   *
-  * Scale: the dictionary probe joins the batch's distinct words
-  * against the term-bucketed standing model — bucket-local on the
-  * model side, O(batch vocab) probe side. The replay path runs ONLY
-  * when the batch carries novel vocabulary (one count on the
-  * batch-vocab-sized anti-join decides), and then over novel words
-  * only — the trained schedule's iteration batches with per-iteration
-  * lineage truncation,
-  * the training loop's own discipline, on a frame bounded by the
-  * batch's novel vocabulary, never the corpus or the batch text.
+  * Scale: per micro-batch one narrow mapPartitions folds each
+  * partition's distinct words once (O(word · relevant merges) CPU on
+  * the executors), and the per-doc rollup shuffles only (doc_id,
+  * counts) rows. The job count per batch is the 3-merge twin's,
+  * whatever the merge depth, and nothing is checkpointed, so nothing
+  * assumes local mode.
   */
 object StreamBpeDeep {
+
+  private val merges =
+    new BpeFold.Table(Curation2.bpeBatchMerges, "it", "mrank")
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows under the deep
     * trained tokenizer: per document, word count and deep BPE token
     * count. Also the foreachBatch kernel for [[attach]].
     */
   def tokenizeBatch(spark: SparkSession, dir: String,
-      batchDocs: DataFrame): DataFrame = {
-    val docsW = batchDocs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val words = docsW
-      .select(col("doc_id"), explode(col("w")).as("term"))
-      .filter(length(col("term")) > 0)
-    val vocab = words.select("term").distinct().localCheckpoint()
-    // dictionary path: known words read their trained symbol count
-    // straight off the standing deep model (term-bucketed)
-    val dict = Curation2.bpeBatchSegmentation(spark, dir)
-      .groupBy("term").agg(count(lit(1)).as("n_syms"))
-    val known = vocab.join(dict, Seq("term"))
-    // fallback path: novel words replay the learned merges — exactly
-    // the trained tokenizer's behavior on unseen vocabulary
-    val novel = vocab.join(dict.select("term"), Seq("term"), "left_anti")
-      .localCheckpoint()
-    val perTerm =
-      if (novel.isEmpty) known
-      else {
-        val merges = Curation2.bpeBatchMerges(spark, dir)
-          .select(col("it"), col("left_sym"), col("right_sym"),
-            col("merged")).localCheckpoint()
-        var seq = novel
-          .select(col("term"), lit(1L).as("tcnt"),
-            explode(sequence(lit(1), length(col("term")))).as("pos"))
-          .select(col("term"), col("tcnt"), col("pos"),
-            col("term").substr(col("pos"), lit(1)).as("sym"))
-        for (i <- 1 to Curation2.BpeBatchIters)
-          // checkpointSevered, not plain localCheckpoint: the replay
-          // chains the trainer's iteration count, so the carried-stats
-          // BigInt blowup (see its scaladoc) applies here too
-          seq = Curation2.checkpointSevered(Curation2.bpeApplyMerge(seq,
-              merges.filter(col("it") === i)
-                .select(col("left_sym").as("bl"),
-                  col("right_sym").as("br"), col("merged").as("bm"))))
-        known.unionByName(
-          seq.groupBy("term").agg(count(lit(1)).as("n_syms")))
-      }
-    val perDoc = words.join(perTerm, Seq("term"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(col("n_syms")).cast("long").as("n_tokens"))
-    docsW.select("doc_id").distinct()
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      .orderBy("doc_id")
-  }
+      batchDocs: DataFrame): DataFrame =
+    BpeFold.wordTokens(batchDocs, merges(spark, dir))
 
   /** Attach the deep tokenizer to a (doc_id, text) stream via
     * foreachBatch; `sink` receives each micro-batch's (doc_id,

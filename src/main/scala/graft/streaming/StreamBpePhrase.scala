@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{Curation2, Shared}
+import graft.operators.Curation2
 
 /** Streaming tokenization under the PRODUCTION-DEPTH phrase tokenizer
   * (`tx_bpe_deep`'s ≥1,000-merge model) — the serving shape a trained
@@ -13,11 +13,12 @@ import graft.operators.{Curation2, Shared}
   * local pass on its executor — a left-to-right fold of the merges in
   * learned (it, mrank) order over the doc's word stream, the exact
   * sequential-fold semantics the trainer's batched apply is spec-pinned
-  * equal to. No dictionary is needed at this depth: the fold IS the
-  * tokenizer, it costs O(doc · relevant merges) CPU with zero
-  * shuffles and zero per-iteration Spark jobs (replaying the 84
-  * iteration batches as jobs — StreamBpeDeep's shape for the
-  * word-level model — would pay ~84 job latencies per micro-batch).
+  * equal to. The fold IS the tokenizer ([[BpeFold]], the kernel
+  * [[StreamBpe]] and [[StreamBpeDeep]] serve with too, per word
+  * instead of per document): it costs O(doc · relevant merges) CPU
+  * with zero shuffles and zero per-iteration Spark jobs (replaying the
+  * 84 iteration batches as jobs would pay ~84 job latencies per
+  * micro-batch).
   *
   * Batch ≡ batch-apply by construction: docs from the training sample
   * reproduce the standing `tx_bpe_deep_apply` segmentation row-for-row,
@@ -33,58 +34,8 @@ import graft.operators.{Curation2, Shared}
   */
 object StreamBpePhrase {
 
-  /** The learned merges in fold order, broadcast once per (session,
-    * corpus). Rebuilt when the session changes (broadcasts are
-    * session-bound) — the standing catalog makes the re-read ~ms. */
-  private val mergeCache = new Shared.SessionMemo[
-    org.apache.spark.broadcast.Broadcast[Array[(String, String, String)]]]
-
-  private def mergesFor(spark: SparkSession, dir: String)
-      : org.apache.spark.broadcast
-        .Broadcast[Array[(String, String, String)]] =
-    mergeCache(spark, dir) {
-      val ordered = Curation2.bpePhraseMerges(spark, dir)
-        .orderBy("it", "mrank")
-        .select("left_sym", "right_sym", "merged")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-      spark.sparkContext.broadcast(ordered)
-    }
-
-  /** One left-to-right application of merge (l, r) → m over a symbol
-    * sequence — the reference sequential-fold step (BpeScrubSpec's
-    * oracle-side rule; non-overlapping by construction because the
-    * fold consumes its own output left to right). */
-  private[streaming] def foldMerge(seq: Vector[String], l: String,
-      r: String, m: String): Vector[String] =
-    seq.foldLeft(Vector.empty[String]) { (acc, s) =>
-      if (acc.nonEmpty && acc.last == l && s == r) acc.init :+ m
-      else acc :+ s
-    }
-
-  /** Tokenize a word stream under the ordered merge table: fold every
-    * merge in learned order, skipping merges whose operands are not in
-    * the sequence's live symbol set (a no-op fold — the skip changes
-    * nothing but the CPU bill, which it cuts from all ~1–2k merges to
-    * the handful relevant to one document). */
-  private[streaming] def tokenize(words: Vector[String],
-      merges: Array[(String, String, String)]): Vector[String] = {
-    var seq = words
-    var live = words.toSet
-    var i = 0
-    while (i < merges.length && seq.size > 1) {
-      val (l, r, m) = merges(i)
-      if (live.contains(l) && live.contains(r)) {
-        val next = foldMerge(seq, l, r, m)
-        if (next.size != seq.size) {
-          seq = next
-          live = seq.toSet
-        }
-      }
-      i += 1
-    }
-    seq
-  }
+  private val merges =
+    new BpeFold.Table(Curation2.bpePhraseMerges, "it", "mrank")
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows at full phrase
     * depth: per document, its word count, deep token count, and the
@@ -93,17 +44,17 @@ object StreamBpePhrase {
   def tokenizeBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame = {
     import spark.implicits._
-    val bc = mergesFor(spark, dir)
+    val bc = merges(spark, dir)
     batchDocs.select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
-        val merges = bc.value
+        val table = bc.value
         it.map { case (id, text) =>
           // split(" ", -1): keep trailing empties — the exact twin of
           // the trainer's SQL split(text, ' ')
-          val words = text.split(" ", -1).toVector
-          val seq = tokenize(words, merges)
-          (id, words.size.toLong, seq.size.toLong, seq.mkString("|"))
+          val words = text.split(" ", -1)
+          val seq = BpeFold.tokenize(words, table)
+          (id, words.length.toLong, seq.length.toLong, seq.mkString("|"))
         }
       }
       .toDF("doc_id", "n_words", "n_tokens", "segmentation")

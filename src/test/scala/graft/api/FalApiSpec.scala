@@ -407,4 +407,32 @@ class FalApiSpec extends AnyFunSuite {
     assert(api.ledger.statusOf("source.graft.ext.stale")
       .contains(Status.Failure))
   }
+
+  test("ledger and freshness artifacts round-trip ids with a quote, " +
+      "a backslash, a tab and a newline") {
+    val api = freshApi()
+    val odd = "a\"b\\c\td\ne"
+    api.ledger.record(s"model.$odd", Status.Failure, s"detail $odd")
+    val dir = Files.createTempDirectory("graft-json-escape")
+    val ledgerPath = dir.resolve("run_results.json").toString
+    api.ledger.writeJson(ledgerPath)
+    assert(RunLedger.loadStatuses(ledgerPath) ==
+      Map(s"model.$odd" -> Status.Failure))
+
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val src = dir.resolve("src").toString
+    spark.createDataFrame(
+        java.util.List.of(Row(1L, java.sql.Timestamp.from(
+          java.time.Instant.now()))),
+        StructType(Seq(StructField("id", LongType),
+          StructField("loaded_at", TimestampType))))
+      .write.parquet(src)
+    api.registry.register(SourceDef(odd, "t", src,
+      loadedAtField = Some("loaded_at")))
+    val out = dir.resolve("sources.json").toString
+    api.writeFreshnessArtifact(out)
+    assert(FalApi.readFreshnessStatuses(out) ==
+      Map(s"source.graft.$odd.t" -> "pass"))
+  }
 }

@@ -85,4 +85,42 @@ class SharedModelsSpec extends AnyFunSuite {
     assert(get(other, 2) == "v4" && computed == 4)
     Shared.invalidate(memoDir)
   }
+
+  test("fingerprint listing walks nested leaf files exactly as listFiles") {
+    import org.apache.hadoop.fs.Path
+    val root = java.nio.file.Files.createTempDirectory("fingerprint-walk")
+    val p = new Path(s"$root/t.parquet")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      // written through the checksummed local filesystem, so every
+      // file also gets a hidden .crc sidecar that neither walk lists
+      Seq("part-0.parquet", "_SUCCESS", "k=1/part-1.parquet",
+          "k=1/j=2/part-2.parquet", "k=2/.hidden", "k=3/notes.txt")
+        .zipWithIndex.foreach { case (f, i) =>
+          val out = fs.create(new Path(p, f))
+          try out.write(Array.fill(i + 1)(i.toByte)) finally out.close()
+        }
+      fs.mkdirs(new Path(p, "empty/dir"))
+      def reference(q: Path): Seq[(String, Long, Long)] = {
+        val base = fs.makeQualified(q).toString
+        val it = fs.listFiles(q, /* recursive = */ true)
+        val files = scala.collection.mutable
+          .ArrayBuffer.empty[(String, Long, Long)]
+        while (it.hasNext) {
+          val st = it.next()
+          files += ((st.getPath.toString.stripPrefix(base), st.getLen,
+            st.getModificationTime))
+        }
+        files.sorted.toSeq
+      }
+      val ref = reference(p)
+      assert(ref.size == 6 && ref.exists(_._1 == "/k=1/j=2/part-2.parquet"))
+      assert(Shared.leafListing(fs, p) == ref)
+      // a file is its own only leaf; a missing table has none
+      val leaf = new Path(p, "k=1/part-1.parquet")
+      assert(Shared.leafListing(fs, leaf) == reference(leaf))
+      assert(Shared.leafListing(fs, new Path(s"$root/absent.parquet"))
+        .isEmpty)
+    } finally { fs.delete(new Path(root.toString), true); () }
+  }
 }

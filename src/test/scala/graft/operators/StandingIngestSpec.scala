@@ -159,7 +159,7 @@ class StandingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.sigsOf(fullCorpus.select("doc_id", "text")),
       "graft_lsh_sigs")
     assertSameRows(DedupHi.sigModel(spark, dir),
-      DedupHi.sigsOf(fullCorpus.select("doc_id", "text")),
+      Dedup.sigsOf(fullCorpus.select("doc_id", "text"), DedupHi.params),
       "graft_minhash128_sigs")
     assertSameRows(Dedup.bandIndexModel(spark, dir),
       Dedup.withBb(Dedup.bandedOf(

@@ -133,7 +133,7 @@ class StandingRetractSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.sigsOf(keepCorpus.select("doc_id", "text")),
       "graft_lsh_sigs")
     assertSameRows(DedupHi.sigModel(spark, dir),
-      DedupHi.sigsOf(keepCorpus.select("doc_id", "text")),
+      Dedup.sigsOf(keepCorpus.select("doc_id", "text"), DedupHi.params),
       "graft_minhash128_sigs")
     assertSameRows(Dedup.bandIndexModel(spark, dir),
       Dedup.withBb(Dedup.bandedOf(

@@ -10,13 +10,17 @@ import graft.TestSpark
 import graft.operators.Curation2
 
 /** Batch/stream equivalence of the DEEP (batched-trained) streaming
-  * tokenizer: documents streamed through [[StreamBpeDeep]] must count
-  * tokens exactly as (a) an INDEPENDENT sequential fold of the full
-  * learned merge sequence in (it, rank) order, and (b) the standing
-  * `tx_bpe_apply_deep` segmentation for corpus words — while a
-  * dictionary-only batch (no novel vocabulary) must never enter the
-  * replay path, and novel words must segment the way the trained
-  * tokenizer would (merges apply to them; a lookup would miss).
+  * tokenizer: [[StreamBpeDeep]] broadcasts the learned merge table and
+  * folds it over every word in (it, mrank) order, one local pass per
+  * partition. Documents streamed through it must count tokens exactly
+  * as (a) an INDEPENDENT sequential fold of the full learned merge
+  * sequence in (it, rank) order, and (b) the standing
+  * `tx_bpe_apply_deep` segmentation for corpus words — and novel words
+  * must segment the way the trained tokenizer would (merges apply to
+  * them; a lookup would miss). Both character-level tokenizers keep
+  * the SQL readout's edge semantics (code-point symbols, summed
+  * duplicate doc ids, null text), and the deep one costs no more Spark
+  * jobs per batch than the 3-merge one.
   */
 class StreamBpeDeepSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -65,11 +69,11 @@ class StreamBpeDeepSpec extends AnyFunSuite {
         (r.getLong(0), r.getLong(1), r.getLong(2)))
     }.start()
     try {
-      // batch 1: pure corpus vocabulary — the dictionary path alone
+      // batch 1: pure corpus vocabulary
       input.addData(corpusDocs)
       q.processAllAvailable()
       assert(got.size == 2)
-      // batch 2: novel vocabulary exercises the merge-replay fallback
+      // batch 2: novel vocabulary the trainer never saw
       input.addData(Seq(novel))
       q.processAllAvailable()
     } finally q.stop()
@@ -104,5 +108,89 @@ class StreamBpeDeepSpec extends AnyFunSuite {
     val corpusTotalShallow = corpusDocs.map { case (_, t) =>
       t.split(" ").filter(_.nonEmpty).map(shallowSeg).sum }.sum
     assert(corpusTotalDeep <= corpusTotalShallow)
+  }
+
+  /** The reference count with code-point symbols — the unit Spark's
+    * `length`/`substr` split terms into. */
+  private def refCodePointTokens(word: String,
+      merges: Seq[(String, String)]): Int =
+    merges.foldLeft(word.codePoints().toArray.toList
+        .map(cp => new String(Character.toChars(cp)))) {
+      case (syms, (l, r)) => applyOnce(syms, l, r)
+    }.size
+
+  test("edge rows at both depths: a non-BMP code point is one symbol, " +
+      "duplicate doc ids sum, null text reports (0, 0)") {
+    import spark.implicits._
+    val shallow = Curation2.txBpeMerges(spark, dir)
+      .orderBy("it").collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+    val deep = Curation2.txBpeBatch(spark, dir)
+      .orderBy("it", "mrank").collect()
+      .map(r => (r.getString(2), r.getString(3))).toSeq
+    val (l1, r1) = shallow.head
+    val astral = "\uD835\uDD18" // U+1D518, one code point, two chars
+    val rows = Seq[(Long, String)](
+      (5L, s"$astral$l1$r1 zq$astral"),
+      (3L, s"$l1$r1$l1 zz"),
+      (4L, null),
+      (3L, s" $l1$r1  x$astral "))
+    val batch = rows.toDF("doc_id", "text")
+    def expected(merges: Seq[(String, String)]): Seq[(Long, Long, Long)] =
+      rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, rs) =>
+        val ws = rs.flatMap(r => Option(r._2).toSeq
+          .flatMap(_.split(" ").filter(_.nonEmpty)))
+        (id, ws.size.toLong,
+          ws.map(refCodePointTokens(_, merges)).sum.toLong)
+      }
+    def served(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq
+    val want = expected(shallow)
+    // one row per doc id, in id order: the duplicate id's words summed,
+    // the null text empty
+    assert(want.map(r => (r._1, r._2)) == Seq((3L, 4L), (4L, 0L), (5L, 2L)))
+    assert(want(1)._3 == 0L)
+    // the astral word counts one symbol per code point
+    assert(refCodePointTokens(s"zq$astral", shallow) == 3)
+    assert(served(StreamBpe.tokenizeBatch(spark, dir, batch)) == want)
+    assert(served(StreamBpeDeep.tokenizeBatch(spark, dir, batch)) ==
+      expected(deep))
+  }
+
+  test("a warm deep tokenize of novel words runs no more Spark jobs " +
+      "than the 3-merge tokenize of the same batch") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val batch = graft.Tables.load(spark, dir, "documents")
+      .filter(col("doc_id").isin(1L, 2L))
+      .select(col("doc_id"), col("text"))
+      .union(Seq((777001L, "zqthxv thth zzzzz")).toDF("doc_id", "text"))
+    def jobs(name: String)(run: => Unit): Seq[Int] = {
+      sc.setJobGroup(name, name)
+      try run finally sc.clearJobGroup()
+      // the status store learns of jobs through the listener bus: a
+      // marker job started after `run` is seen only once every job
+      // `run` started has been recorded
+      val marker = s"$name-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      sc.statusTracker.getJobIdsForGroup(name).toSeq
+    }
+    // warm: standing models resolved, merge tables broadcast
+    StreamBpe.tokenizeBatch(spark, dir, batch).collect()
+    StreamBpeDeep.tokenizeBatch(spark, dir, batch).collect()
+    val shallow = jobs("tokenize-shallow") {
+      StreamBpe.tokenizeBatch(spark, dir, batch).collect(); ()
+    }
+    val deep = jobs("tokenize-deep") {
+      StreamBpeDeep.tokenizeBatch(spark, dir, batch).collect(); ()
+    }
+    assert(shallow.nonEmpty)
+    assert(deep.size <= shallow.size,
+      s"deep tokenize ran ${deep.size} jobs, 3-merge ran ${shallow.size}")
   }
 }
