@@ -1,6 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The engine API a model/script/hook sees — the rebuild of the globals
@@ -41,15 +44,17 @@ final class FalApi(
     * path read would discard the bucketing metadata). Unmaterialized
     * models fall back to the deferred state root when one is set.
     */
-  def ref(name: String): DataFrame = {
-    val path = registry.currentPath(name)
+  def ref(name: String): DataFrame = readResolved(name, livePath(name))
+
+  /** The version dir [[ref]] reads: this run's pointer, else the
+    * deferred state's. */
+  private[api] def livePath(name: String): String =
+    registry.currentPath(name)
       .orElse(defer.flatMap(_.currentPath(name)))
       .getOrElse(throw new IllegalStateException(
         s"model not materialized: $name" +
           (if (defer.isDefined) " (also absent from the deferred state)"
            else "")))
-    readResolved(name, path)
-  }
 
   /** Time-travel read: a model AT a specific retained version ("v3"),
     * including that version's append chain. The overwrite protocol
@@ -187,43 +192,47 @@ final class FalApi(
     * partition pruning, the first lever against a 100 TB full scan); or
     * — when the model declares bucketing — a bucketed external table
     * named after the version (old versions keep their table until
-    * dropped, so readers of a stale pointer stay consistent).
+    * dropped, so readers of a stale pointer stay consistent). Returns
+    * the rows written, counted by the write job itself.
     */
-  private def materialize(df: DataFrame, name: String, target: String,
-      explicitSpec: Option[(Int, Seq[String])] = None)
-      : Unit = explicitSpec.orElse(bucketSpec(name)) match {
-    case Some((n, cols)) =>
-      // the catalog is session-global while registries are per-storage-
-      // root: two roots materializing the same model name would both
-      // claim `graft_<name>_v1` and the second write would silently
-      // repoint the first root's readers. A storage-root hash in the
-      // name keeps every materialization's table distinct; readers
-      // never reconstruct the name — they read it from the marker.
-      val root = FsIO.parent(FsIO.parent(target))
-      val uniq = Integer.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(root))
-      val tbl = s"graft_${name}_${FsIO.fileName(target)}_h$uniq"
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      df.write.mode("overwrite")
-        .bucketBy(n, cols.head, cols.tail: _*)
-        .sortBy(cols.head, cols.tail: _*)
-        .option("path", target).saveAsTable(tbl)
-      // record the spec the FILES were written with, so a catalog-loss
-      // re-registration can never claim a different bucketing than the
-      // data has (the model's meta may change between write and read)
-      FsIO.writeString(FsIO.child(target, FalApi.BucketMarker),
-        s"$tbl\n$n\n${cols.mkString(",")}")
-    case None =>
-      val partCols = registry.modelOpt(name)
-        .flatMap(_.meta.get("partition_by")).map(FalApi.splitCols)
-        .getOrElse(Seq.empty)
-      if (partCols.nonEmpty)
-        df.write.mode("overwrite").partitionBy(partCols: _*).parquet(target)
-      else df.write.mode("overwrite").parquet(target)
-      // record the written schema: a later maintenance read must not
-      // re-infer partition-column types from directory names (string
-      // '01' would silently become int 1 on rewrite)
-      FsIO.writeString(FsIO.child(target, "_schema.ddl"), df.schema.toDDL)
+  private def materialize(df0: DataFrame, name: String, target: String,
+      explicitSpec: Option[(Int, Seq[String])] = None): Long = {
+    val (df, rows) = FalApi.countingRows(df0)
+    explicitSpec.orElse(bucketSpec(name)) match {
+      case Some((n, cols)) =>
+        // the catalog is session-global while registries are per-storage-
+        // root: two roots materializing the same model name would both
+        // claim `graft_<name>_v1` and the second write would silently
+        // repoint the first root's readers. A storage-root hash in the
+        // name keeps every materialization's table distinct; readers
+        // never reconstruct the name — they read it from the marker.
+        val root = FsIO.parent(FsIO.parent(target))
+        val uniq = Integer.toHexString(
+          scala.util.hashing.MurmurHash3.stringHash(root))
+        val tbl = s"graft_${name}_${FsIO.fileName(target)}_h$uniq"
+        spark.sql(s"DROP TABLE IF EXISTS $tbl")
+        df.write.mode("overwrite")
+          .bucketBy(n, cols.head, cols.tail: _*)
+          .sortBy(cols.head, cols.tail: _*)
+          .option("path", target).saveAsTable(tbl)
+        // record the spec the FILES were written with, so a catalog-loss
+        // re-registration can never claim a different bucketing than the
+        // data has (the model's meta may change between write and read)
+        FsIO.writeString(FsIO.child(target, FalApi.BucketMarker),
+          s"$tbl\n$n\n${cols.mkString(",")}")
+      case None =>
+        val partCols = registry.modelOpt(name)
+          .flatMap(_.meta.get("partition_by")).map(FalApi.splitCols)
+          .getOrElse(Seq.empty)
+        if (partCols.nonEmpty)
+          df.write.mode("overwrite").partitionBy(partCols: _*).parquet(target)
+        else df.write.mode("overwrite").parquet(target)
+        // record the written schema: a later maintenance read must not
+        // re-infer partition-column types from directory names (string
+        // '01' would silently become int 1 on rewrite)
+        FsIO.writeString(FsIO.child(target, "_schema.ddl"), df.schema.toDDL)
+    }
+    rows()
   }
 
   /** Output-layout skew report from the written files' sizes — free
@@ -345,7 +354,7 @@ final class FalApi(
           .unionByName(df, allowMissingColumns = true), name, mode,
           pointerMeta)
       case ("append", Some(cur)) =>
-        commitVersion(df, name, mode, pointerMeta, link = target => {
+        commitVersion(df, name, mode, pointerMeta, link = Some(target => {
           // schema evolution across the chain: the head version's
           // _schema.ddl governs the whole multi-path read, so it must
           // be the UNION of the chain's schema and this batch's — a
@@ -357,7 +366,7 @@ final class FalApi(
             mergeChainSchema(versionSchema(cur), df.schema).toDDL)
           FsIO.writeString(FsIO.child(target, "_prev_version"),
             FsIO.fileName(cur))
-        })
+        }))
       case (other, _) => throw new IllegalArgumentException(
         s"unknown write mode: $other")
     }
@@ -370,27 +379,33 @@ final class FalApi(
     * commit in ONE atomic pointer move: a crash anywhere before it
     * leaves the old pointer (and old meta) — the orphaned version dir
     * is harmless and vacuumed later.
+    *
+    * The write counts its own rows, so a commit is one Spark job. A
+    * chain link's version serves its whole chain, which is what it
+    * reports: that one re-reads the chain to count it.
     */
   private def commitVersion(df: DataFrame, name: String, mode: String,
       pointerMeta: Map[String, String] = Map.empty,
-      link: String => Unit = _ => ()): WriteResult = {
+      link: Option[String => Unit] = None): WriteResult = {
     require(allowWrites,
       "write_to_model is not allowed in hooks (ref fal_script.py:290-296)")
     val target = registry.nextVersionDir(name)
-    materialize(df, name, target)
-    link(target)
+    val written = materialize(df, name, target)
+    link.foreach(_(target))
     registry.swapPointer(name, target, pointerMeta)
-    val res = recordVersion(name, target, mode, s"write $mode")
+    val rows =
+      if (link.isDefined) readVersion(target).count() else written
+    val res = recordVersion(name, target, mode, s"write $mode", rows)
     registry.setStatus(name, Status.Success)
     res
   }
 
-  /** Count a just-swapped version (its whole append chain) and record
-    * the write in the ledger as `<label> rows=<n><detail>` plus the
-    * file-skew report. */
+  /** Record a just-swapped version's write in the ledger as
+    * `<label> rows=<rows><detail>` plus the file-skew report. `rows`
+    * comes from the caller (the write's own count), so this runs no
+    * Spark job. */
   private def recordVersion(name: String, target: String, mode: String,
-      label: String, detail: String = ""): WriteResult = {
-    val rows = readVersion(target).count()
+      label: String, rows: Long, detail: String = ""): WriteResult = {
     ledger.record(name, Status.Success,
       s"$label rows=$rows$detail${fileSkew(target)}")
     WriteResult(name, rows, mode)
@@ -470,15 +485,15 @@ final class FalApi(
         require(df.columns.toSet == cols.toSet,
           s"append increment columns ${df.columns.mkString(",")} != model " +
             s"columns ${cols.mkString(",")}")
-        // O(increment) accounting: count the increment once up front (the
-        // plan runs twice — count + insert — both O(batch)); a post-append
-        // count of the TABLE would scan the whole accumulated model per
-        // ingest batch, breaking this path's O(increment) contract
-        val inc = df.select(cols.map(col).toIndexedSeq: _*)
-          .localCheckpoint()
-        val rows = inc.count()
+        // O(increment) accounting: the insert counts the increment as
+        // it writes it, so the plan runs once; a post-append count of
+        // the TABLE would scan the whole accumulated model per ingest
+        // batch, breaking this path's O(increment) contract.
         // insertInto resolves POSITIONALLY — align to the table's order
+        val (inc, counted) =
+          FalApi.countingRows(df.select(cols.map(col).toIndexedSeq: _*))
         inc.write.insertInto(tbl)
+        val rows = counted()
         // insertInto refreshes the WRITING session's relation cache only;
         // when the increment frame rides a cloned session (a foreachBatch
         // micro-batch), THIS api's session would otherwise keep serving
@@ -728,21 +743,19 @@ final class FalApi(
     // plain and void its readers' no-shuffle guarantee.
     val spec =
       bucketSpec(name).orElse(FalApi.bucketMarker(cur).flatMap(_._2))
-    val detail = spec match {
+    val (rows, detail) = spec match {
       case Some((n, _)) =>
-        materialize(df, name, target, explicitSpec = spec)
-        s"buckets=$n"
+        (materialize(df, name, target, explicitSpec = spec), s"buckets=$n")
       case None =>
         // sum the whole append chain: compaction collapses it into one
         // fresh version, so sizing must see every live byte
         val bytes = chainPaths(cur).map(FsIO.parquetSizes(_).sum).sum
         val nFiles =
           math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        materialize(df.coalesce(nFiles), name, target)
-        s"files<=$nFiles"
+        (materialize(df.coalesce(nFiles), name, target), s"files<=$nFiles")
     }
     registry.swapPointer(name, target, expectedContent = baseContent)
-    recordVersion(name, target, "compact", "compact", s" $detail")
+    recordVersion(name, target, "compact", "compact", rows, s" $detail")
   }
 
   /** Maintenance — version retention (VACUUM): delete all but the
@@ -931,6 +944,18 @@ object FalApi {
         if (lines.size >= 3) Some((lines(1).trim.toInt, splitCols(lines(2))))
         else None))
     }
+  }
+
+  /** `df` with a row count attached, and a reader of that count for
+    * after the next action over the returned frame has run: a write
+    * counts its own rows (a `count(lit(1))` `Observation`), so nothing
+    * re-reads the output to count it. The reader fails, instead of
+    * waiting forever, when no action delivered the count.
+    */
+  private def countingRows(df: DataFrame): (DataFrame, () => Long) = {
+    val obs = Observation()
+    (df.observe(obs, count(lit(1)).as("rows")),
+      () => Await.result(obs.future, 5.minutes).getLong(0))
   }
 
   /** A comma-joined column list (`bucket_by`, `partition_by`, the

@@ -16,9 +16,12 @@ import org.apache.spark.sql.types.StructType
   * This is the reference's teleport execution shape
   * (`/root/reference/projects/adapter/src/dbt/adapters/fal_experimental/
   * teleport.py:43-56` + `utils/environments.py`): instead of sharing a
-  * connection, the parent materializes every `ref()` input to parquet,
-  * the child reads them with pandas, runs the user function, writes its
-  * result parquet, and the parent loads that back through the normal
+  * connection, the parent hands every `ref()` input over as parquet
+  * files — a plain model's own part files in place, since the relation
+  * already is parquet (A8/A9), and a copy only for a model whose files
+  * alone do not read as its relation ([[inputFiles]]) — the child reads
+  * them with pandas, runs the user function, writes its result parquet,
+  * and the parent loads that back through the normal
   * `writeToModel` path. Nothing crosses the boundary except parquet
   * files and a JSON manifest, so a crashing or memory-bombing model
   * cannot harm the driver JVM (the fault-isolation half of B12), and
@@ -252,12 +255,17 @@ object PyBridge {
     kv.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
       .mkString("{", ", ", "}")
 
+  /** The child's manifest: `inputs` maps each dep to the list of
+    * parquet files `pd.read_parquet` reads as its relation. */
   private def writeManifest(path: java.nio.file.Path, name: String,
-      pyFile: String, outPath: String, inputs: Seq[(String, String)],
+      pyFile: String, outPath: String, inputs: Seq[(String, Seq[String])],
       sources: Seq[(String, String)]): Unit = {
+    val ins = inputs.map { case (d, files) =>
+      s"${Json.str(d)}: ${files.map(Json.str).mkString("[", ", ", "]")}"
+    }.mkString("{", ", ", "}")
     Files.writeString(path,
       s"""{"model_name": ${Json.str(name)}, "model_file": ${Json.str(pyFile)},""" +
-        s""" "output": ${Json.str(outPath)}, "inputs": ${jobj(inputs)},""" +
+        s""" "output": ${Json.str(outPath)}, "inputs": $ins,""" +
         s""" "sources": ${jobj(sources)}}""")
     ()
   }
@@ -308,13 +316,6 @@ object PyBridge {
       .map(_.toLong)
       .getOrElse(256L << 20)
 
-  private def dirBytes(p: Path): Long = {
-    val s = Files.walk(p)
-    try s.iterator().asScala.filter(Files.isRegularFile(_))
-      .map(Files.size).sum
-    finally s.close()
-  }
-
   private def listDir(p: Path): Seq[Path] = {
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
@@ -327,7 +328,7 @@ object PyBridge {
     * the cluster), not on the driver host. */
   @volatile private[graft] var lastExecutorReport: Seq[(Int, Int)] = Nil
 
-  /** Materialize `deps` refs to parquet, run the Python model in
+  /** Hand `deps` over as parquet ([[inputFiles]]), run the Python model in
     * forked child(ren) of the interpreter's [[ForkServer]], and return
     * its result as a DataFrame (the caller writes it back with
     * `writeToModel`, so versioning / bucketing / tests apply
@@ -336,8 +337,8 @@ object PyBridge {
     * FAILs and downstream nodes SKIP, the reference's task semantics.
     *
     * `mode` is the model's declared `python_mode` meta, and both modes
-    * are this one handoff: every dep is written to parquet once, each
-    * worker gets a manifest over its inputs and writes `out_<i>`, and
+    * are this one handoff: every dep becomes one list of parquet files,
+    * each worker gets a manifest over its inputs and writes `out_<i>`, and
     * the parent reads the outputs back through one agreed schema. A
     * model file cannot tell which mode it runs under.
     *  - `global` (the reference's one-process contract): a single
@@ -346,7 +347,7 @@ object PyBridge {
     *    per-partition-safe — row-wise transforms, per-record
     *    featurization; anything where `model(shard)` over each shard
     *    unioned equals `model(whole)`. The FIRST dep's part files are
-    *    round-robined into W split dirs ([[splitInputs]]) and the W
+    *    round-robined into W file lists ([[splitInputs]]) and the W
     *    children run one per Spark task ([[runInTasks]]).
     *
     * Any failure — a missing dep, a failed child, schema drift —
@@ -370,14 +371,9 @@ object PyBridge {
     val python = pythonFor(requirements)
     val tmp = Files.createTempDirectory(s"graft_py_$name")
     try {
-      val inputs = deps.map { d =>
-        val p = tmp.resolve(s"in_$d")
-        a.ref(d).write.mode("overwrite").parquet(p.toString)
-        d -> p
-      }
+      val inputs = deps.map(d => d -> inputFiles(a, d, tmp))
       val perWorker =
-        if (partition) splitInputs(name, inputs, tmp)
-        else Seq(inputs.map { case (d, p) => d -> p.toString })
+        if (partition) splitInputs(name, inputs) else Seq(inputs)
       val sources = sourcePaths(a)
       val outPaths = perWorker.indices.map(i =>
         tmp.resolve(s"out_$i.parquet").toString)
@@ -390,7 +386,7 @@ object PyBridge {
       if (partition) runInTasks(a, python, name, jobs)
       else ForkServer.run(python, Paths.get(jobs.head._2),
         Paths.get(jobs.head._3), s"python model $name")
-      // Handoff complete: reclaim the inputs, splits, manifests and
+      // Handoff complete: reclaim the input copies, manifests and
       // logs now. The outputs must outlive this call (the returned
       // DataFrame reads them lazily until writeToModel materializes it).
       listDir(tmp).filterNot(_.getFileName.toString.startsWith("out_"))
@@ -419,21 +415,56 @@ object PyBridge {
     } catch { case t: Throwable => deleteRec(tmp); throw t }
   }
 
-  /** Partition mode's inputs per worker. The first dep is the
-    * partitioned input: its already-written part files are
-    * round-robined into per-worker split dirs with zero copies and zero
-    * shuffle (file moves within one temp dir), preserving whatever
-    * partitioning the upstream relation carries. W = min(workers, part
-    * files); a single-file input degrades to one worker (repartition
-    * the upstream model to raise it). Every other dep is broadcast-
-    * style: each worker's manifest points at the same read-only copy,
-    * under the [[sideDepMaxBytes]] cap.
+  /** A dep's relation as the parquet files the child reads, with the
+    * dep's live version resolved as [[FalApi.ref]] resolves it (the
+    * deferred state included). One plain version dir — no
+    * `_prev_version` chain link, no subdirectories (`partition_by`'s
+    * hive dirs), on the local filesystem — hands over its own part
+    * files in place: no Spark job, no copy, nothing moved or written
+    * inside it. Any other dep is copied through `ref()` into `tmp`
+    * once: a chain's files alone miss its older links and its merged
+    * schema, a partitioned model's files miss the partition column, and
+    * the child cannot open a remote scheme's path. A dep with no part
+    * file is copied too, so the child always gets a non-empty list that
+    * carries the schema.
     */
-  private def splitInputs(name: String, inputs: Seq[(String, Path)],
-      tmp: Path): Seq[Seq[(String, String)]] = {
-    val (primary, primaryDir) = inputs.head
-    val side = inputs.tail.map { case (d, p) =>
-      val bytes = dirBytes(p)
+  private def inputFiles(a: FalApi, dep: String, tmp: Path): Seq[String] = {
+    def parts(entries: Seq[Path]): Seq[Path] = entries.filter { f =>
+      val n = f.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getFileName.toString)
+    val live = new org.apache.hadoop.fs.Path(a.livePath(dep)).toUri
+    val own =
+      if (Option(live.getScheme).exists(_ != "file")) Nil
+      else {
+        val entries = listDir(Paths.get(live.getPath))
+        if (entries.exists(e => Files.isDirectory(e) ||
+            e.getFileName.toString == "_prev_version")) Nil
+        else parts(entries)
+      }
+    val files = if (own.nonEmpty) own else {
+      val copy = tmp.resolve(s"in_$dep")
+      a.ref(dep).write.mode("overwrite").parquet(copy.toString)
+      parts(listDir(copy))
+    }
+    require(files.nonEmpty, s"dep '$dep' has no parquet part file")
+    files.map(_.toString)
+  }
+
+  /** Partition mode's inputs per worker. The first dep is the
+    * partitioned input: its part files are round-robined into W
+    * per-worker file lists — no copy, no shuffle, and no file moved —
+    * preserving whatever partitioning the upstream relation carries.
+    * W = min(workers, part files); a single-file input degrades to one
+    * worker (repartition the upstream model to raise it). Every other
+    * dep is broadcast-style: each worker's manifest lists the same
+    * read-only files, under the [[sideDepMaxBytes]] cap.
+    */
+  private def splitInputs(name: String, inputs: Seq[(String, Seq[String])])
+      : Seq[Seq[(String, Seq[String])]] = {
+    val (primary, parts) = inputs.head
+    val side = inputs.tail.map { case (d, files) =>
+      val bytes = files.map(f => Files.size(Paths.get(f))).sum
       if (bytes > sideDepMaxBytes)
         throw new IllegalArgumentException(
           s"model $name: partition-mode secondary dep '$d' is $bytes " +
@@ -442,20 +473,12 @@ object PyBridge {
             s"Make '$d' the FIRST dep if it is the relation to " +
             "partition over, pre-aggregate it to dimension size, or " +
             "raise graft.py.sideDepMaxBytes / GRAFT_PY_SIDEDEP_MAX_BYTES")
-      d -> p.toString
+      d -> files
     }
-    val parts = listDir(primaryDir)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .sortBy(_.getFileName.toString)
-    require(parts.nonEmpty,
-      s"model $name: partitioned input '$primary' wrote no parquet parts")
     val w = math.max(1, math.min(workerCount, parts.size))
-    val splits = (0 until w).map(i =>
-      Files.createDirectories(tmp.resolve(s"split_$i")))
-    parts.zipWithIndex.foreach { case (f, i) =>
-      Files.move(f, splits(i % w).resolve(f.getFileName)); ()
-    }
-    splits.map(sp => (primary -> sp.toString) +: side)
+    (0 until w).map(i =>
+      (primary -> parts.zipWithIndex.collect { case (f, j) if j % w == i => f })
+        +: side)
   }
 
   /** Partition mode's W children, one per task of a W-task Spark job

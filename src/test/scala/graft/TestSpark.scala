@@ -18,4 +18,22 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The ids of the Spark jobs `run` starts on this thread, counted
+    * under the job group `name`. */
+  def jobsIn(name: String)(run: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try run finally sc.clearJobGroup()
+    // the status store learns of jobs through the listener bus: a
+    // marker job started after `run` is seen only once every job
+    // `run` started has been recorded
+    val marker = s"$name-marker"
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    sc.statusTracker.getJobIdsForGroup(name).toSeq
+  }
 }

@@ -435,4 +435,59 @@ class FalApiSpec extends AnyFunSuite {
     assert(FalApi.readFreshnessStatuses(out) ==
       Map(s"source.graft.$odd.t" -> "pass"))
   }
+  test("every write reports the rows its ref() then reads") {
+    import spark.implicits._
+    val api = freshApi()
+    def parity(name: String)(write: => WriteResult): Unit = {
+      val res = write
+      assert(res.rowsAffected == api.ref(name).count(), name)
+    }
+    api.registry.register(ModelDef("rc_part", ModelKind.Sql("unused"),
+      meta = Map("partition_by" -> "grp")))
+    api.registry.register(ModelDef("rc_bucket", ModelKind.Sql("unused"),
+      meta = Map("bucket_by" -> "id", "buckets" -> "4")))
+    val rows = (1L to 40L).map(i => (i, s"g${i % 3}")).toDF("id", "grp")
+    parity("rc_plain")(api.writeToModel(rows, "rc_plain"))
+    parity("rc_part")(api.writeToModel(rows, "rc_part"))
+    parity("rc_bucket")(api.writeToModel(rows, "rc_bucket"))
+    val inc = (35L to 50L).map(i => (i, "g9")).toDF("id", "grp")
+    parity("rc_plain")(api.writeToModelMerge(inc, "rc_plain", Seq("id")))
+    parity("rc_part")(
+      api.writeToModelInsertOverwrite(inc, "rc_part", "grp"))
+    val asOf = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    parity("rc_snap")(api.writeToModelSnapshot(rows, "rc_snap", Seq("id"),
+      Seq("grp"), asOf))
+    parity("rc_snap")(api.writeToModelSnapshot(inc, "rc_snap", Seq("id"),
+      Seq("grp"), new java.sql.Timestamp(asOf.getTime + 1000)))
+    // a chain append reports the whole chain its version serves
+    parity("rc_plain")(api.writeToModel(inc, "rc_plain", mode = "append"))
+    parity("rc_plain")(api.compactModel("rc_plain"))
+    parity("rc_bucket")(api.compactModel("rc_bucket"))
+    // the bucketed append reports its increment
+    val before = api.ref("rc_bucket").count()
+    val appended = api.appendToBucketedModel(inc, "rc_bucket")
+    assert(appended.rowsAffected == 16)
+    assert(api.ref("rc_bucket").count() == before + 16)
+    // frames with no rows count 0, and the count does not wait forever
+    for ((name, empty) <- Seq("rc_empty" -> df(),
+        "rc_false" -> rows.filter(lit(false)))) {
+      assert(api.writeToModel(empty, name).rowsAffected == 0, name)
+      assert(api.ref(name).count() == 0, name)
+    }
+  }
+
+  test("a plain overwrite is one Spark job: the write counts its rows") {
+    val api = freshApi()
+    // a narrow plan: a shuffle under it would add its own map-stage job
+    val frame = df(1 to 20: _*)
+    api.writeToModel(frame, "one_job")
+    var res: WriteResult = null
+    val jobs = TestSpark.jobsIn("plain-overwrite") {
+      res = api.writeToModel(frame, "one_job")
+    }
+    assert(jobs.size == 1, s"a plain overwrite ran jobs $jobs")
+    assert(res.rowsAffected == 20)
+    assert(api.ledger.all.exists(_.detail.startsWith(
+      "write overwrite rows=20")))
+  }
 }

@@ -359,4 +359,111 @@ class PyBridgeSpec extends AnyFunSuite {
     for (pkg <- Seq("python-dateutil", "pythonnet=3", "numpy", "pandas>=2"))
       assert(!pinsPythonInterpreter(pkg), pkg)
   }
+  /** Every file under `root`, relative path -> bytes. */
+  private def tree(root: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    scala.util.Using.resource(Files.walk(r)) { w =>
+      w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => r.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+        .toMap
+    }
+  }
+
+  test("python models read ref()'s rows and dtypes over a chain, a " +
+      "partitioned and a deferred dep, and leave every dep file in place") {
+    assume(PyBridge.available, "python3 with pandas+pyarrow not on PATH")
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val stateRoot = Files.createTempDirectory("graft-py-state").toString
+    new FalApi(spark, new Registry(stateRoot), new RunLedger).writeToModel(
+      Seq((7L, "x"), (8L, "y")).toDF("id", "label"), "deferred_dep")
+    val root = Files.createTempDirectory("graft-py").toString
+    val api = new FalApi(spark, new Registry(root), new RunLedger,
+      defer = Some(new Registry(stateRoot)))
+    // a schema-evolved chain: the old rows' new column is null
+    api.writeToModel(Seq((1L, "a"), (2L, "b")).toDF("id", "label"),
+      "chain_dep")
+    api.writeToModel(Seq((3L, "c", "new")).toDF("id", "label", "extra"),
+      "chain_dep", mode = "append")
+    api.registry.register(ModelDef("part_dep", ModelKind.Sql("unused"),
+      meta = Map("partition_by" -> "region")))
+    api.writeToModel(Seq((1L, "eu"), (2L, "us"), (3L, "eu"))
+      .toDF("id", "region"), "part_dep")
+    api.writeToModel((1L to 40L).map(i => (i, s"p$i")).toDF("id", "label")
+      .repartition(4), "plain_dep")
+    val before = (tree(root), tree(stateRoot))
+
+    val proj = Files.createTempDirectory("graft-pyfallback")
+    val pandasType = Map[DataType, String](
+      LongType -> "int64", StringType -> "object")
+    def readThrough(dep: String, mode: String): Unit = {
+      val py = proj.resolve(s"read_$dep.py")
+      Files.writeString(py,
+        s"""def model(dbt, fal):
+           |    df = dbt.ref("$dep")
+           |    df["dtypes"] = ",".join(
+           |        "%s:%s" % (c, t) for c, t in df.dtypes.items())
+           |    return df
+           |""".stripMargin)
+      val name = s"read_${dep}_$mode"
+      try {
+        val want = api.ref(dep)
+        val got = PyBridge.runModel(api, name, Seq(dep), py.toString,
+          mode = mode)
+        val wantDtypes = want.schema.fields
+          .map(f => s"${f.name}:${pandasType(f.dataType)}").sorted.toSeq
+        val gotDtypes = got.select("dtypes").distinct().collect()
+          .map(_.getString(0).split(",").sorted.toSeq).toSeq
+        assert(gotDtypes.nonEmpty && gotDtypes.forall(_ == wantDtypes),
+          s"$dep: python saw $gotDtypes, ref() has $wantDtypes")
+        val rows = got.select(want.columns.toSeq.map(col): _*)
+        assert(rows.count() == want.count(), dep)
+        assert(rows.exceptAll(want).isEmpty && want.exceptAll(rows).isEmpty,
+          s"$dep: python read different rows than ref()")
+      } finally PyBridge.releaseScratch(api, name)
+    }
+    Seq("chain_dep", "part_dep", "deferred_dep", "plain_dep")
+      .foreach(readThrough(_, "global"))
+    sys.props("graft.py.workers") = "2"
+    try readThrough("plain_dep", "partition")
+    finally sys.props.remove("graft.py.workers")
+    assert((tree(root), tree(stateRoot)) == before,
+      "a handoff changed, moved or added a file under a storage root")
+  }
+
+  test("a global python model over a plain dep runs no Spark job " +
+      "before its child starts") {
+    assume(PyBridge.available, "python3 with pandas+pyarrow not on PATH")
+    val api = freshApi()
+    api.registry.register(baseModel)
+    assert(Runner.run(api, Runner.RunConfig()) == 0)
+    val proj = Files.createTempDirectory("graft-pyjobs")
+    val stamp = proj.resolve("child_started_ms")
+    val pyFile = proj.resolve("stamped.py")
+    Files.writeString(pyFile,
+      s"""import time
+         |
+         |def model(dbt, fal):
+         |    with open("$stamp", "w") as f:
+         |        f.write(str(int(time.time() * 1000)))
+         |    return dbt.ref("base_model")
+         |""".stripMargin)
+    try {
+      val jobs = TestSpark.jobsIn("py-handoff") {
+        assert(PyBridge.runModel(api, "stamped", Seq("base_model"),
+          pyFile.toString).count() == 3)
+      }
+      val childStart = Files.readString(stamp).trim.toLong
+      val tracker = spark.sparkContext.statusTracker
+      val before = jobs.filter { j =>
+        tracker.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq)
+          .flatMap(tracker.getStageInfo(_)).map(_.submissionTime)
+          .exists(t => t > 0 && t < childStart)
+      }
+      assert(before.isEmpty,
+        s"jobs $before ran before the child started (of $jobs)")
+    } finally PyBridge.releaseScratch(api, "stamped")
+  }
 }

@@ -161,32 +161,17 @@ class StreamBpeDeepSpec extends AnyFunSuite {
   test("a warm deep tokenize of novel words runs no more Spark jobs " +
       "than the 3-merge tokenize of the same batch") {
     import spark.implicits._
-    val sc = spark.sparkContext
     val batch = graft.Tables.load(spark, dir, "documents")
       .filter(col("doc_id").isin(1L, 2L))
       .select(col("doc_id"), col("text"))
       .union(Seq((777001L, "zqthxv thth zzzzz")).toDF("doc_id", "text"))
-    def jobs(name: String)(run: => Unit): Seq[Int] = {
-      sc.setJobGroup(name, name)
-      try run finally sc.clearJobGroup()
-      // the status store learns of jobs through the listener bus: a
-      // marker job started after `run` is seen only once every job
-      // `run` started has been recorded
-      val marker = s"$name-marker"
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      sc.statusTracker.getJobIdsForGroup(name).toSeq
-    }
     // warm: standing models resolved, merge tables broadcast
     StreamBpe.tokenizeBatch(spark, dir, batch).collect()
     StreamBpeDeep.tokenizeBatch(spark, dir, batch).collect()
-    val shallow = jobs("tokenize-shallow") {
+    val shallow = TestSpark.jobsIn("tokenize-shallow") {
       StreamBpe.tokenizeBatch(spark, dir, batch).collect(); ()
     }
-    val deep = jobs("tokenize-deep") {
+    val deep = TestSpark.jobsIn("tokenize-deep") {
       StreamBpeDeep.tokenizeBatch(spark, dir, batch).collect(); ()
     }
     assert(shallow.nonEmpty)
