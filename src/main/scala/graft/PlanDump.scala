@@ -46,7 +46,7 @@ object PlanDump {
       "q_window_dist" -> "rank-derived distribution functions, no status-keyed window",
       "d3_anomaly" -> "withRunningSums prefixes + (type, rank-51) lag join, no type-keyed window",
       "dd_substring_scrub" -> "standing gh-bucketed gram model: bucket-local doc-freq agg + dup semi-join (zero gram-keyed exchange), reassembly against the doc_id-bucketed standing corpus copy (no exchange on the documents side)",
-      "tx_bpe_batch" -> "batched BPE iteration: K-row candidate limit + broadcast keeper anti-join + chain-parity multi-merge windows (lineage checkpointed per iteration)",
+      "tx_bpe_batch" -> "12x16 batched BPE merge table: an it-bucketed standing-model scan + sort (training, one narrow fold per round, is the model's build)",
       "tx_bpe_apply" -> "term-bucketed standing BPE segmentation: bucket-local per-term rollup, corpus never touched",
       "tx_bpe_deep" -> "production-depth phrase merge table: a pure it-bucketed standing-model scan + sort (training is an ingest-time build, zero query-time jobs beyond the read)",
       "tx_bpe_deep_apply" -> "doc-bucketed standing deep segmentation: bucket-local per-doc rollup, corpus and trainer never touched at query time",

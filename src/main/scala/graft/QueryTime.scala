@@ -9,6 +9,10 @@ package graft
   * which understates rewrite-heavy queries; this is the same
   * methodology ScalingProbe uses.
   *
+  * After each run, one `[qt] build <model> <s>` line per standing model
+  * that run built (its [[graft.operators.Shared.buildSeconds]] entry),
+  * so a cold build is attributed to its model.
+  *
   * {{{ sbt "runMain graft.QueryTime dd_ngram_jaccard /root/testdata/sf0.1 3" }}}
   * {{{ sbt "runMain graft.QueryTime q_rfm,q_sssp /root/testdata/sf0.1 3" }}}
   * {{{ sbt "runMain graft.QueryTime dd_substring_scrub testdata/sf1 3 noop" }}}
@@ -29,6 +33,7 @@ object QueryTime {
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>
         spark.sharedState.cacheManager.clearCache()
+        val builtBefore = graft.operators.Shared.buildSeconds.toMap
         val t0 = System.nanoTime()
         val rows =
           if (noop) {
@@ -36,6 +41,9 @@ object QueryTime {
             "noop sink"
           } else s"${fn(spark, dir).count()} rows"
         println(f"[qt] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($rows)")
+        graft.operators.Shared.buildSeconds.toSeq.sortBy(_._1)
+          .filterNot { case (m, s) => builtBefore.get(m).contains(s) }
+          .foreach { case (m, s) => println(f"[qt] build $m $s%.2f") }
       }
     }
     spark.stop()

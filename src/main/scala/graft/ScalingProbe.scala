@@ -80,9 +80,9 @@ object ScalingProbe {
       "dd_substring_scrub" ->
         "exact-substring scrub (bucket-local gram probe + in-row cut)",
       "tx_bpe_merges" ->
-        "BPE merge training (3 iterations on the vocab-sized term table)",
+        "3-merge BPE table off the standing model (training is its build)",
       "tx_bpe_batch" ->
-        "batched BPE training (12 iterations x 16 non-interacting merges)",
+        "12x16 batched BPE merge table off the standing model",
       "tx_bpe_apply" ->
         "trained-segmentation rollup off the standing BPE model",
       "tx_bpe_apply_deep" ->
@@ -253,7 +253,7 @@ object ScalingProbe {
     Seq("0.01" -> "/root/testdata/sf0.01",
         "0.1" -> "/root/testdata/sf0.1").foreach { case (sf, dir) =>
       val (n, secs, perIter) =
-        graft.operators.Curation2.bpeDeepProbe(spark, dir)
+        graft.operators.Curation2.bpePhrase.probe(spark, dir)
       def phase(a: Int, b: Int) =
         perIter.slice(a, b).sum.toDouble / math.max(1, b - a)
       def f(v: Double) = String.format(
@@ -575,8 +575,8 @@ object ScalingProbe {
   plus two selection changes over the 12×16 twin: candidates thin to
   the best pair per left symbol, and the interaction predicate relaxes
   from any-shared-symbol to CROSS-CHAINING only (p.r = q.l) — the exact
-  boundary the one-pass chain-parity apply needs, pinned batched ≡
-  sequential-fold by BpeScrubSpec on same-left / same-right / chain
+  boundary under which folding a batch in rank order equals applying it
+  at once, pinned by BpeScrubSpec on same-left / same-right / chain
   pathologicals. The throughput table above shows yields growing from
   the ~10/iteration alphabet-bound phase to the 128 cap as the phrase
   vocabulary diversifies.

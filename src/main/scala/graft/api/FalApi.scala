@@ -576,19 +576,19 @@ final class FalApi(
         val affected = FsIO.parquetFiles(cur)
           .filter(f => bucketIdOf(FsIO.fileName(f)).exists(ids.contains))
         val kept = if (affected.isEmpty) 0L else {
-          // survivors of the affected buckets, snapshotted
-          // (localCheckpoint) BEFORE any file mutation so the lazy plan
-          // cannot re-read dropped files
+          // survivors of the affected buckets, counted by the insert
+          // that writes them back; the originals are deleted only after
+          // that job returns, so no plan reads a dropped file
           // null-safe: `!isin` alone is NULL (dropped) for null keys —
           // a null-keyed row was never requested for deletion and must
           // survive the rewrite
-          val survivors = spark.read.schema(resolved.schema)
-            .parquet(affected: _*)
-            .filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*))
-            .select(resolved.columns.map(col).toIndexedSeq: _*)
-            .localCheckpoint()
-          val n = survivors.count()
+          val (survivors, counted) = FalApi.countingRows(
+            spark.read.schema(resolved.schema)
+              .parquet(affected: _*)
+              .filter(col(keyCol).isNull || !col(keyCol).isin(keys: _*))
+              .select(resolved.columns.map(col).toIndexedSeq: _*))
           survivors.write.insertInto(tbl)
+          val n = counted()
           affected.foreach(FsIO.deleteFile)
           spark.catalog.refreshTable(tbl)
           n
@@ -813,20 +813,25 @@ final class FalApi(
 
   /** A4 variant for sources (ref `write_to_source project.py:757-801`):
     * sources are externally-owned paths, so writes go directly (append
-    * creates the path if absent).
+    * creates the path if absent). Reports the rows the write job itself
+    * counted, not the target's total.
     */
   def writeToSource(df0: DataFrame, sourceName: String, tableName: String,
       mode: String = "append",
       schema: Map[String, org.apache.spark.sql.types.DataType] =
         Map.empty): WriteResult = {
     require(allowWrites, "write_to_source is not allowed in hooks")
-    val df = applySchema(df0, schema)
+    val (df, counted) = FalApi.countingRows(applySchema(df0, schema))
     val src = registry.source(sourceName, tableName)
     val writer = df.write.format(src.format).options(src.options).mode(mode)
     // path-less formats (jdbc) carry the target in options, same as the
     // read side in `source`
     if (src.path.nonEmpty) writer.save(src.path) else writer.save()
-    val rows = source(sourceName, tableName).count()
+    // an `ignore` write over an existing target runs no job, so nothing
+    // delivers its count: report the target's rows as before
+    val rows =
+      if (mode.equalsIgnoreCase("ignore")) source(sourceName, tableName).count()
+      else counted()
     WriteResult(s"$sourceName.$tableName", rows, mode)
   }
 

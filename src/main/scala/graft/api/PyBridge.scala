@@ -397,7 +397,7 @@ object PyBridge {
       // naive multi-path read either fails on LATE or silently widens.
       // Validate every worker's output against worker 0 up front and
       // fail naming the worker, then read through the agreed schema.
-      val schemas = outPaths.map(a.spark.read.parquet(_).schema)
+      val schemas = outPaths.map(footerSchema(a.spark, _))
       def shape(s: StructType) =
         s.fields.map(f => (f.name, f.dataType)).toSeq.sortBy(_._1)
       schemas.zipWithIndex.drop(1).foreach { case (s, i) =>
@@ -413,6 +413,26 @@ object PyBridge {
       holdScratch(a, name, tmp)
       df
     } catch { case t: Throwable => deleteRec(tmp); throw t }
+  }
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver (no Spark job) and converted with the session's parquet
+    * settings. A child's output is one file pandas wrote through
+    * pyarrow: it carries no Spark schema of its own and every column is
+    * optional, so the conversion is the whole of what a parquet read
+    * infers.
+    */
+  private[graft] def footerSchema(spark: org.apache.spark.sql.SparkSession,
+      file: String): StructType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file),
+      spark.sessionState.newHadoopConf())
+    val parquet = scala.util.Using.resource(ParquetFileReader.open(in))(
+      _.getFooter.getFileMetaData.getSchema)
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(parquet)
   }
 
   /** A dep's relation as the parquet files the child reads, with the

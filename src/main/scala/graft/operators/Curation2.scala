@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** Round-5 curation additions: exact-substring duplication profiling
   * (the k-gram form of Lee et al.'s "Deduplicating Training Data Makes
@@ -451,127 +453,217 @@ object Curation2 extends QueryPack {
     driftReadout(byB)
   }
 
-  /** Tokenizer training — the first 3 BPE merges learned from the
-    * corpus (Sennrich et al. 2016): repeatedly count adjacent symbol
-    * pairs over the distinct-wordform table weighted by corpus
-    * frequency, take the argmax (ties broken lexicographically for
-    * determinism), and merge every non-overlapping occurrence
-    * left-to-right. Emits one row per learned merge.
+  /** BPE tokenizer training (Sennrich et al. 2016), one loop for every
+    * schedule: per round, count the adjacent symbol pairs over a
+    * `(term, tcnt, syms)` table weighted by `tcnt`, keep up to M
+    * mutually non-interacting pairs of the top K ([[bpeKept]]), and
+    * append them to the learned merges. A round's table is the round-0
+    * table with every merge learned so far folded over each row by
+    * [[graft.streaming.BpeFold]] in learned order — the same fold the
+    * streaming tokenizers serve the learned tables with. Kept pairs
+    * never cross-chain or collide, so folding them one at a time
+    * equals applying the batch simultaneously under the left-to-right
+    * non-overlap rule (BpeScrubSpec pins it against reference
+    * trainers, and the DuckDB oracle replays it as chain-parity
+    * windows).
     *
-    * Scale: the only corpus-sized pass is the standing `doc_terms`
-    * aggregation — BPE training state is the (wordform, count) table
-    * (vocabulary-sized, millions of rows at 100 TB, never the corpus),
-    * so each iteration is per-term window work that shards on the term
-    * key plus one pair aggregation and a top-1 TakeOrdered. The argmax
-    * joins back as a 1-row broadcast — the merge table never routes
-    * through the driver.
+    * Scale: the table is vocabulary-sized (one row per distinct term,
+    * or per sampled document for the phrase schedule), never the
+    * corpus. A round is one narrow fold, one map-side-combined pair
+    * aggregation and a ≤K-row keeper selection collected to the driver
+    * (≤128 rows). Only the round-0 table is cached: every round's plan
+    * is one projection over it, so plan size stays constant however
+    * deep training goes, and the final table is one more fold of it.
+    * (Chaining a cache per round instead nests each round's adaptive
+    * plan inside the next; the plan description Spark renders for
+    * every execution then doubles per round.) The fold skips merges
+    * whose operands a row no longer holds, so replaying the learned
+    * prefix costs a set probe per merge. The learned merges are one
+    * local relation of the collected rows.
     *
-    * Left-to-right non-overlap is made window-expressible (identically
-    * in both engines) instead of a sequential fold: occurrences of the
-    * best pair at consecutive positions form a chain (possible when
-    * l = r, e.g. `aaaa`, or l/r alternate, e.g. `abab`); within each
-    * chain exactly the odd-ranked occurrences merge, and a position is
-    * dropped when its predecessor merged.
-    */
-  /** Apply ONE merge (a 1-row `(bl, br, bm)` frame, broadcast) to a
-    * symbol table (term, tcnt, pos, sym) under the chain-parity
-    * left-to-right non-overlap rule — the APPLICATION half of every
-    * trainer's iteration (one merge per 3-merge round, a
-    * symbol-disjoint batch per batched round). Window work shards on
-    * the term key; the merge rows broadcast. The streaming tokenizers
-    * serve the learned tables with the equivalent sequential fold
-    * instead ([[graft.streaming.BpeFold]]).
-    */
-  private[graft] def bpeApplyMerge(seq: DataFrame, merge: DataFrame)
-      : DataFrame = {
-    val byPos = Window.partitionBy("term").orderBy("pos")
-    val s1 = seq.withColumn("nxt", lead(col("sym"), 1).over(byPos))
-    val occ = s1.crossJoin(broadcast(merge))
-      .filter(col("sym") === col("bl") && col("nxt") === col("br"))
-      .select(col("term"), col("pos"), col("bm"))
-    val merges = occ
-      .withColumn("grp", col("pos") - row_number().over(byPos))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("term", "grp").orderBy("pos")))
-      .filter(col("rn") % 2 === 1)
-      .select("term", "pos", "bm")
-    s1.join(merges, Seq("term", "pos"), "left")
-      .withColumn("prevm", lag(col("bm"), 1).over(byPos))
-      .filter(col("prevm").isNull)
-      .select(col("term"), col("tcnt"), col("pos").as("opos"),
-        coalesce(col("bm"), col("sym")).as("sym"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("term").orderBy("opos")))
-      .select("term", "tcnt", "pos", "sym")
-  }
-
-  /** The 3 training iterations: returns the per-iteration best-pair
-    * frames and the FINAL symbol table (the trained segmentation of
-    * every vocab term). Memoized per corpus dir: the two standing
-    * models ([[bpeSegmentation]], [[bpeLearnedMerges]]) are byproducts
-    * of ONE pass — sharing the per-iteration cached frames means a
-    * process touching both trains once, not twice. The memo is a
-    * [[Shared.SessionMemo]]: the frames (and their cached
-    * intermediates) are session-bound, so a restarted session
-    * re-derives rather than receiving plans pinned to a stopped
-    * session, and a fixture rewrite of `dir` drops the memo trained on
+    * Each schedule is two standing models — the final symbol table
+    * exploded to `(term, tcnt, pos, sym)` and the merge table — trained
+    * once per corpus; the memo lets a process touching both train
+    * once, and a fixture rewrite of `dir` drops the memo trained on
     * the pre-rewrite corpus (ADVICE r11).
     */
-  private val bpeTrained =
-    new Shared.SessionMemo[(Seq[DataFrame], DataFrame)]
+  private[graft] final class BpeTrainer(segName: String,
+      mergesName: String, seq0: (SparkSession, String) => DataFrame,
+      iters: Int, k: Int => Int, m: Int => Int, thin: Boolean = false,
+      sep: String = "", chainOnly: Boolean = false,
+      ranked: Boolean = true,
+      keys: Seq[(String, String)] = Seq("term" -> "term",
+        "tcnt" -> "tcnt")) {
+    private val memo = new Shared.SessionMemo[Trained](
+      t => { t.table0.unpersist(); () })
 
-  private def bpeTrain(spark: SparkSession, dir: String)
-      : (Seq[DataFrame], DataFrame) =
-    bpeTrained(spark, dir)(bpeTrainOnce(spark, dir))
+    private def train(spark: SparkSession, dir: String): Trained =
+      memo(spark, dir)(trainOnce(spark, dir))
 
-  private def bpeTrainOnce(spark: SparkSession, dir: String)
-      : (Seq[DataFrame], DataFrame) = {
-    val byPos = Window.partitionBy("term").orderBy("pos")
-    def iter(seq: DataFrame): (DataFrame, DataFrame) = {
-      val s1 = seq.withColumn("nxt", lead(col("sym"), 1).over(byPos))
-      val best = s1.filter(col("nxt").isNotNull)
-        .select(col("sym").as("l"), col("nxt").as("r"), col("tcnt"))
-        .groupBy("l", "r").agg(sum(col("tcnt")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("l"), col("r")).limit(1)
-        .withColumn("merged", concat(col("l"), col("r")))
-      val next = bpeApplyMerge(seq, best.select(col("l").as("bl"),
-        col("r").as("br"), col("merged").as("bm")))
-      (next.cache(), best)
+    private def trainOnce(spark: SparkSession, dir: String): Trained = {
+      val table0 = seq0(spark, dir).cache()
+      val merges = Seq.newBuilder[Row]
+      var learned = Array.empty[(String, String, String)]
+      try {
+        var it = 1
+        var exhausted = false
+        while (it <= iters && !exhausted) {
+          val kept = bpeKept(pairCounts(fold(table0, learned)), k(it),
+            m(it), thin, sep, chainOnly)
+          kept.zipWithIndex.foreach { case ((l, r, mg, c), i) =>
+            merges += Row(it.toLong, i + 1L, l, r, mg, c)
+          }
+          learned ++= kept.map(p => (p._1, p._2, p._3))
+          exhausted = kept.isEmpty
+          it += 1
+        }
+      } catch { case e: Throwable => table0.unpersist(); throw e }
+      Trained(merges.result(), table0, learned)
     }
-    val tc = TextAnalysis.docTerms(spark, dir)
-      .groupBy("term").agg(sum(col("cnt")).as("tcnt"))
-    var seq = tc
-      .select(col("term"), col("tcnt"),
-        explode(sequence(lit(1), length(col("term")))).as("pos"))
-      .select(col("term"), col("tcnt"), col("pos"),
-        col("term").substr(col("pos"), lit(1)).as("sym"))
-    val bests = (1 to 3).map { it =>
-      val (next, best) = iter(seq)
-      seq = next
-      best.select(lit(it.toLong).as("it"), col("l").as("left_sym"),
-        col("r").as("right_sym"), col("merged"), col("pair_count"))
+
+    /** The learned merge table: one row per merge in learned order. */
+    private def mergeTable(spark: SparkSession, dir: String): DataFrame = {
+      val rows = train(spark, dir).merges
+      val df = spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), BpeMergeSchema)
+      if (ranked) df else df.drop("mrank")
     }
-    (bests, seq)
+
+    /** The trained segmentation as a standing model — the final symbol
+      * table `(term, tcnt, pos, sym)`, bucketed on the term key. A cold
+      * build trains. */
+    private[graft] def seg(spark: SparkSession, dir: String): DataFrame =
+      Shared.model(spark, dir, segName, "term", { (s, d) =>
+        val t = train(s, d)
+        fold(t.table0, t.learned)
+          .select(col("term"), col("tcnt"),
+            posexplode(col("syms")).as(Seq("p0", "sym")))
+          .select(col("term"), col("tcnt"),
+            (col("p0") + 1).cast("int").as("pos"), col("sym"))
+      })
+
+    /** The learned merge table as a standing model — what the
+      * streaming tokenizers collect in learned order and fold. The
+      * segmentation resolves first, so a cold schedule trains in its
+      * build and this build writes that run's rows: neither model
+      * replays training for the other. */
+    private[graft] def merges(spark: SparkSession, dir: String)
+        : DataFrame = {
+      seg(spark, dir)
+      Shared.model(spark, dir, mergesName, "it",
+        (s, d) => mergeTable(s, d))
+    }
+
+    private def order: Seq[String] =
+      if (ranked) Seq("it", "mrank") else Seq("it")
+
+    /** The learned merges, one row per merge in learned order, read
+      * off the standing model. */
+    def listing(spark: SparkSession, dir: String): DataFrame =
+      merges(spark, dir).orderBy(order.map(col): _*)
+
+    /** Tokenizer APPLICATION: every trained sequence's segmentation —
+      * symbol count and '|'-joined symbols — off the standing
+      * segmentation model. The rollup is bucket-local on the term key;
+      * the corpus is never touched at query time. */
+    def applied(spark: SparkSession, dir: String): DataFrame =
+      seg(spark, dir)
+        .groupBy(keys.map(kc => col(kc._1)): _*)
+        .agg(count(lit(1)).cast("long").as("n_syms"),
+          array_join(transform(
+            array_sort(collect_list(struct(col("pos"), col("sym")))),
+            p => p.getField("sym")), "|").as("segmentation"))
+        .select(keys.map { case (c, a) => col(c).as(a) } ++
+          Seq(col("n_syms"), col("segmentation")): _*)
+        .orderBy(keys.head._2)
+
+    /** Training-throughput probe (graft.ScalingProbe's deep-BPE block):
+      * run the trainer end to end BYPASSING the memo and the catalog,
+      * returning (total merges, wall seconds, per-round yields). */
+    private[graft] def probe(spark: SparkSession, dir: String)
+        : (Long, Double, Seq[Long]) = {
+      val t0 = System.nanoTime()
+      val trained = trainOnce(spark, dir)
+      val secs = (System.nanoTime() - t0) / 1e9
+      trained.table0.unpersist()
+      val perIter = (1 to iters).map(i =>
+        trained.merges.count(_.getLong(0) == i).toLong)
+      (perIter.sum, secs, perIter)
+    }
   }
 
-  def txBpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeTrain(spark, dir)._1.reduce(_.union(_)).orderBy("it")
+  /** A trained schedule: the merge rows in learned order, the cached
+    * round-0 `(term, tcnt, syms)` table (unpersisted when the memo
+    * releases the entry) and the learned merges to fold over it. */
+  private final case class Trained(merges: Seq[Row], table0: DataFrame,
+      learned: Array[(String, String, String)])
 
-  /** BATCHED BPE training geometry (VERDICT r11 item #2): per
-    * iteration, up to [[BpeBatchM]] mutually non-interacting pairs are
-    * learned from the iteration-start counts and applied in ONE
-    * chain-parity pass — the standard parallel-BPE move that replaces
-    * per-merge job latency (the 3-merge trainer's loop shape, unusable
-    * beyond O(10) merges) with per-BATCH latency. 12×16 trains 69
-    * merges on this corpus (≥ 64, the round target) in 12 Spark
-    * iterations instead of 69.
+  private val BpeMergeSchema = StructType(Seq(
+    StructField("it", LongType, nullable = false),
+    StructField("mrank", LongType, nullable = false),
+    StructField("left_sym", StringType),
+    StructField("right_sym", StringType),
+    StructField("merged", StringType),
+    StructField("pair_count", LongType)))
+
+  /** Adjacent symbol pairs of a `(term, tcnt, syms)` table, summed by
+    * `tcnt`: `(l, r, pair_count)`. */
+  private def pairCounts(table: DataFrame): DataFrame = {
+    val syms = col("syms")
+    table
+      .select(col("tcnt"), explode(transform(
+        slice(syms, lit(2), size(syms)),
+        (r, i) => struct(syms(i).as("l"), r.as("r")))).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("tcnt")).as("pair_count"))
+  }
+
+  /** Every row's symbols under the learned merges, folded in order. */
+  private def fold(table: DataFrame,
+      merges: Array[(String, String, String)]): DataFrame = {
+    val apply = udf((syms: Seq[String]) =>
+      if (syms == null) null
+      else graft.streaming.BpeFold.tokenize(syms.toArray, merges).toSeq)
+    table.select(col("term"), col("tcnt"), apply(col("syms")).as("syms"))
+  }
+
+  /** Character-level training sequences: each vocabulary term's code
+    * points, weighted by its corpus frequency. */
+  private def termSeqs(spark: SparkSession, dir: String): DataFrame =
+    TextAnalysis.docTerms(spark, dir)
+      .groupBy("term").agg(sum(col("cnt")).as("tcnt"))
+      .select(col("term"), col("tcnt"),
+        transform(sequence(lit(1), length(col("term"))),
+          p => col("term").substr(p, lit(1))).as("syms"))
+
+  /** Tokenizer training — the first 3 BPE merges learned from the
+    * corpus: one argmax pair per round (ties broken lexicographically
+    * for determinism), merged left to right without overlap. */
+  private[graft] val bpe3 = new BpeTrainer("bpe_seg_3", "bpe_merges_3",
+    termSeqs, 3, _ => 1, _ => 1, ranked = false)
+
+  /** BATCHED BPE training geometry (VERDICT r11 item #2): per round,
+    * up to [[BpeBatchM]] mutually non-interacting pairs are learned
+    * from the round-start counts and applied together — the standard
+    * parallel-BPE move that replaces per-merge job latency with
+    * per-BATCH latency. 12×16 trains 69 merges on this corpus (≥ 64,
+    * the round target) in 12 rounds instead of 69. On this corpus's
+    * CLOSED 31-word vocabulary that is 69 merges from full depth
+    * (word-internal BPE saturates at 89 merges with every vocab word a
+    * single symbol — pinned by BpeScrubSpec; the production-depth
+    * trainer continues PAST the word boundary, see [[bpePhrase]]).
     */
   private[graft] val BpeBatchIters = 12
   private[graft] val BpeBatchM = 16
   private[graft] val BpeBatchK = 48
 
-  /** One batched iteration over a (term, tcnt, pos, sym) symbol table:
-    * (kept merge table with ranks, next symbol table).
+  private[graft] val bpeBatch = new BpeTrainer(
+    s"bpe_seg_b${BpeBatchIters}x$BpeBatchM",
+    s"bpe_merges_b${BpeBatchIters}x$BpeBatchM",
+    termSeqs, BpeBatchIters, _ => BpeBatchK, _ => BpeBatchM)
+
+  /** One round's kept merges `(l, r, merged, pair_count)` in rank
+    * order, from a pair-count table.
     *
     * Selection is the CONSERVATIVE non-interaction rule — a top-K
     * candidate is kept iff NO higher-ranked candidate (kept OR
@@ -580,31 +672,22 @@ object Curation2 extends QueryPack {
     * follows (kept pairs are mutually higher/lower ranked), which is
     * what makes the batch ≡ the sequential fold of the same pairs:
     * disjoint pairs' occurrences cannot overlap (adjacent occurrences
-    * share their middle symbol, so they would share a symbol), so
-    * [[bpeApplyMerge]]'s chain-parity window applies them all in one
-    * pass unchanged, and no pair's count is disturbed by another's
-    * application before the next iteration re-counts. The rule is
-    * deliberately join-expressible (one NOT-EXISTS against
-    * higher-ranked candidates) rather than the sequential greedy scan,
-    * so the DuckDB oracle replays it exactly; the price is keeping
-    * fewer pairs per round when candidates chain-interact (rank 3
-    * dropped because it touches dropped rank 2) — more iterations,
-    * same learned quality class.
+    * share their middle symbol, so they would share a symbol), and no
+    * pair's count is disturbed by another's application before the
+    * next round re-counts. The rule is deliberately join-expressible
+    * (one NOT-EXISTS against higher-ranked candidates) rather than the
+    * sequential greedy scan, so the DuckDB oracle replays it exactly;
+    * the price is keeping fewer pairs per round when candidates
+    * chain-interact (rank 3 dropped because it touches dropped rank 2)
+    * — more rounds, same learned quality class.
     *
-    * Scale: the symbol table is VOCABULARY-sized (millions of rows at
-    * 100 TB, never the corpus); per iteration the window work shards
-    * on the term key, the pair aggregation is one map-side-combined
-    * shuffle, and the candidate/keeper tables are ≤ K rows (broadcast
-    * self-join + a K-row global window — bounded, audited).
+    * Scale: the candidate/keeper tables are ≤ K rows (broadcast
+    * self-join + a K-row sort — bounded, audited).
     */
-  private def bpeBatchKept(seq: DataFrame, k: Int = BpeBatchK,
-      m: Int = BpeBatchM, thin: Boolean = false,
-      sep: String = "", chainOnly: Boolean = false): DataFrame = {
-    val byPos = Window.partitionBy("term").orderBy("pos")
-    val s1 = seq.withColumn("nxt", lead(col("sym"), 1).over(byPos))
-    val topK = s1.filter(col("nxt").isNotNull)
-      .select(col("sym").as("l"), col("nxt").as("r"), col("tcnt"))
-      .groupBy("l", "r").agg(sum(col("tcnt")).as("pair_count"))
+  private def bpeKept(pairs: DataFrame, k: Int, m: Int, thin: Boolean,
+      sep: String, chainOnly: Boolean)
+      : Array[(String, String, String, Long)] = {
+    val topK = pairs
       .orderBy(col("pair_count").desc, col("l"), col("r"))
       .limit(k)
     // the DEEP schedule thins candidates to the best pair PER LEFT
@@ -612,20 +695,20 @@ object Curation2 extends QueryPack {
     // pairs concentrate on a few dominant symbols, so the conservative
     // NOT-EXISTS rule over the raw top-K drops almost everything
     // (every candidate shares a symbol with some higher-ranked one) —
-    // measured ~3 merges/iteration however large K grows. One
+    // measured ~3 merges/round however large K grows. One
     // deterministic argmax per left symbol (count desc, r asc)
     // sparsifies the interaction graph — candidates then share symbols
     // only through r-collisions — and the SAME rule keeps most of the
     // batch. Deferred second-best pairs for a popular left symbol
-    // simply surface in a later iteration's recount, exactly like
-    // pairs outside the window.
-    val cand = (if (!thin) topK
+    // simply surface in a later round's recount, exactly like pairs
+    // outside the window.
+    val cand = if (!thin) topK
       else {
         val byL = Window.partitionBy("l")
           .orderBy(col("pair_count").desc, col("r"))
         topK.withColumn("lrn", row_number().over(byL))
           .filter(col("lrn") === 1).drop("lrn")
-      }).cache()
+      }
     val q = cand.toDF("ql", "qr", "qc")
     val higherRanked = col("qc") > col("pair_count") ||
       (col("qc") === col("pair_count") &&
@@ -643,7 +726,7 @@ object Curation2 extends QueryPack {
     // INSTANCE only when that instance is p's right and q's left (or
     // vice versa), i.e. p.r = q.l — a position cannot start two
     // different pairs (same-left is safe) nor end two (same-right is
-    // safe), and same-pair runs are what the parity window already
+    // safe), and same-pair runs are what the left-to-right fold
     // resolves. On a small closed alphabet this is the difference
     // between ~8 keepers per round (every top pair shares a word with
     // a higher-ranked one) and alphabet-bound batches; batch ≡
@@ -658,98 +741,12 @@ object Curation2 extends QueryPack {
       .join(broadcast(q), higherRanked && interacts, "left_anti")
       .orderBy(col("pair_count").desc, col("l"), col("r"))
       .limit(m)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("pair_count").desc, col("l"), col("r"))))
-      .withColumn("merged", concat(col("l"), lit(sep), col("r")))
+      .select(col("l"), col("r"), concat(col("l"), lit(sep), col("r")),
+        col("pair_count"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getLong(3)))
   }
-
-  /** localCheckpoint + SEVER the statistics lineage. Checkpointing
-    * truncates the LOGICAL lineage (LogicalRDD), but
-    * `LogicalRDD.fromDataset` copies the origin plan's STATISTICS
-    * forward — and the trainer's per-iteration join products compound
-    * those BigInt `sizeInBytes` estimates exponentially (each round's
-    * plan multiplies the previous round's estimate several times, so
-    * the integer's BIT LENGTH roughly triples per iteration; by
-    * iteration ~20 the driver spends minutes inside Karatsuba/ToomCook
-    * multiplication in `SizeInBytesOnlyStatsPlanVisitor`, one core
-    * pinned, executors idle — observed live via jstack at
-    * [[BpeDeepIters]] depth). Rebuilding the DataFrame from the
-    * checkpointed RDD + schema drops the carried stats to the default
-    * estimate, which is harmless here: every size-sensitive join in
-    * the trainer is an explicit `broadcast()`. The Row round-trip
-    * costs one extra deserialization over a vocabulary-sized frame —
-    * nothing next to the minutes of BigInteger math it removes.
-    */
-  private[graft] def checkpointSevered(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
-  private def bpeBatchIter(seq: DataFrame, k: Int = BpeBatchK,
-      m: Int = BpeBatchM, thin: Boolean = false, sep: String = "",
-      chainOnly: Boolean = false): (DataFrame, DataFrame) = {
-    val kept = bpeBatchKept(seq, k, m, thin, sep, chainOnly).cache()
-    val next = bpeApplyMerge(seq, kept.select(col("l").as("bl"),
-      col("r").as("br"), col("merged").as("bm")))
-    // checkpoint, not cache: each iteration's plan embeds the
-    // previous seq ~3× (the apply kernel reads it for the lead frame,
-    // the occurrence join, and the reassembly), so lazily-chained
-    // iterations build an exponentially-sized logical tree that the
-    // analyzer walks on every further op — measured as minutes of
-    // plan-time at iteration depth 12 vs milliseconds of data-time on
-    // the vocab-sized table. Checkpointing truncates the lineage to a
-    // constant-size LogicalRDD per iteration (local is fine: the
-    // frame is vocabulary-sized and the trainer is one job; a cluster
-    // run with executor churn would use reliable checkpointing), and
-    // [[checkpointSevered]] additionally drops the carried statistics
-    // (see its scaladoc — the stats compound exponentially too).
-    // (Measured and rejected: checkpointing every 2nd iteration with
-    // lazy or cached odd iterations — both ~7-15% SLOWER; the eager
-    // truncation each round is the cheapest shape.)
-    (kept, checkpointSevered(next))
-  }
-
-  /** E9/E7 — batched tokenizer training at depth: [[BpeBatchIters]]
-    * batched iterations over the corpus vocabulary, one row per
-    * learned merge `(it, rank, left_sym, right_sym, merged,
-    * pair_count)`. The 3-merge [[txBpeMerges]] stays as the
-    * fine-grained oracle twin and the standing streaming model; this
-    * is the production depth path (batched ≡ per-merge sequential fold
-    * pinned by BpeScrubSpec on the pathological `aaaa`/`abab` runs and
-    * against a reference batched trainer on the corpus).
-    */
-  /** The full batched training pass: (per-iteration kept-merge frames
-    * with it/mrank columns, FINAL symbol table). Memoized per
-    * (session, dir) with the same liveness-validated keying as
-    * [[bpeTrain]], so the gated merge listing and the standing deep
-    * segmentation share ONE training run. */
-  private val bpeBatchTrained =
-    new Shared.SessionMemo[(Seq[DataFrame], DataFrame)]
-
-  private def bpeBatchTrain(spark: SparkSession, dir: String)
-      : (Seq[DataFrame], DataFrame) =
-    bpeBatchTrained(spark, dir)(bpeBatchTrainOnce(spark, dir))
-
-  private def bpeBatchTrainOnce(spark: SparkSession, dir: String)
-      : (Seq[DataFrame], DataFrame) = {
-    var seq = TextAnalysis.docTerms(spark, dir)
-      .groupBy("term").agg(sum(col("cnt")).as("tcnt"))
-      .select(col("term"), col("tcnt"),
-        explode(sequence(lit(1), length(col("term")))).as("pos"))
-      .select(col("term"), col("tcnt"), col("pos"),
-        col("term").substr(col("pos"), lit(1)).as("sym"))
-    val merges = (1 to BpeBatchIters).map { it =>
-      val (kept, next) = bpeBatchIter(seq)
-      seq = next
-      kept.select(lit(it.toLong).as("it"),
-        col("rank").cast("long").as("mrank"), col("l").as("left_sym"),
-        col("r").as("right_sym"), col("merged"), col("pair_count"))
-    }
-    (merges, seq)
-  }
-
-  def txBpeBatch(spark: SparkSession, dir: String): DataFrame =
-    bpeBatchTrain(spark, dir)._1.reduce(_.union(_)).orderBy("it", "mrank")
 
   /** PRODUCTION-DEPTH BPE training (VERDICT r12 item #1, ≥1,000
     * merges). Two data facts shape the design:
@@ -764,31 +761,20 @@ object Curation2 extends QueryPack {
     *      initialized at word granularity — each document's word
     *      stream is one training sequence, merged symbols are
     *      space-joined phrases. Word-boundary initialization keeps the
-    *      symbol table at O(corpus word positions), not characters,
-    *      and the first-89-merge word-collapse phase (already covered
-    *      by the word-level twins) is skipped rather than re-learned.
+    *      table at one row per sampled document, and the
+    *      first-89-merge word-collapse phase (already covered by the
+    *      word-level twins) is skipped rather than re-learned.
     *   2. The fixed 16-of-48 batch left merge throughput flat, so the
-    *      candidate window and batch cap SCALE WITH THE ITERATION
+    *      candidate window and batch cap SCALE WITH THE ROUND
     *      ([[bpeDeepM]] = min(4·m, cap), K = 3·M) and candidates are
     *      thinned to the best pair per left symbol before the
-    *      unchanged symbol-disjoint keeper rule (see [[bpeBatchKept]]
-    *      — the raw top-K concentrates on dominant symbols and the
-    *      conservative rule over it keeps ~3/iteration no matter how
-    *      large K grows).
+    *      cross-chaining keeper rule (see [[bpeKept]]).
     *
-    * The schedule is a pure function of the iteration index, so the
-    * DuckDB oracle replays it exactly (per-iteration LIMITs in the
-    * unrolled CTEs), and batched ≡ sequential-fold holds per batch
-    * (kept pairs stay pairwise symbol-disjoint — the same argument,
-    * now over phrase symbols).
-    *
-    * Scale: the symbol table is one row per corpus word POSITION
-    * (sequences shard by doc_id), shrinking as merges apply; each
-    * iteration is the same map-side-combined pair count + bounded
-    * candidate selection + one chain-parity pass the 12×16 trainer
-    * runs. Real tokenizer training samples a bounded corpus subset —
-    * at 100 TB this trainer would read a sampled standing corpus
-    * slice, same plan.
+    * The schedule is a pure function of the round index, so the DuckDB
+    * oracle replays it exactly (per-round LIMITs in the unrolled CTEs).
+    * Real tokenizer training samples a bounded corpus subset — at
+    * 100 TB this trainer would read a sampled standing corpus slice,
+    * same plan.
     */
   private[graft] val BpeDeepIters = 84
   private[graft] val BpeDeepCapM = 128
@@ -796,199 +782,63 @@ object Curation2 extends QueryPack {
   private[graft] def bpeDeepK(it: Int): Int = math.min(16 * it, 1024)
   /** Deterministic training sample: every 10th document — production
     * tokenizer training reads a bounded corpus sample, never the full
-    * corpus, and the sample keeps ~120 vocabulary-sized iterations in
-    * the tens-of-seconds build class. The modulus is part of the
-    * trained artifact's definition (the oracle applies the same
-    * filter). */
+    * corpus, and the sample keeps the rounds in the tens-of-seconds
+    * build class. The modulus is part of the trained artifact's
+    * definition (the oracle applies the same filter). */
   private[graft] val BpeDeepSampleMod = 10L
 
-  /** The deep training pass: (per-iteration kept-merge frames, FINAL
-    * symbol table — `term` is the doc_id, `sym` a space-joined
-    * phrase). Memoized per (session, dir) like the fixed-batch
-    * trainer; the standing models below make the memo a same-process
-    * convenience only (the catalog pays training once per corpus
-    * EVER). */
-  private val bpeDeepTrained =
-    new Shared.SessionMemo[(Seq[DataFrame], DataFrame)]
-
-  private def bpeDeepTrain(spark: SparkSession, dir: String)
-      : (Seq[DataFrame], DataFrame) =
-    bpeDeepTrained(spark, dir)(bpeDeepTrainOnce(spark, dir))
-
-  private def bpeDeepTrainOnce(spark: SparkSession, dir: String)
-      : (Seq[DataFrame], DataFrame) = {
-    // one training sequence per document: term = doc_id, symbols = the
-    // doc's words in order (the sentencepiece no-presplit convention
-    // at word granularity; doc_id is unique, so tcnt = 1)
-    // the sampled symbol table is tiny (one row per sampled word
-    // position); pre-shard it on the sequence key at low parallelism
-    // so the ~[[BpeDeepIters]] per-iteration window/agg stages run a
-    // handful of tasks instead of 32 near-empty ones
-    var seq = t(spark, dir, "documents")
+  /** One training sequence per sampled document: term = doc_id,
+    * symbols = the doc's words in order (doc_id is unique, so
+    * tcnt = 1). The table is tiny, so it is pre-sharded on the
+    * sequence key at low parallelism: each round's fold runs a handful
+    * of tasks instead of dozens of near-empty ones. */
+  private def docSeqs(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "documents")
       .filter(col("doc_id") % BpeDeepSampleMod === 0)
       .select(col("doc_id").as("term"), lit(1L).as("tcnt"),
-        posexplode(split(col("text"), " ")).as(Seq("p0", "sym")))
-      .select(col("term"), col("tcnt"),
-        (col("p0") + 1).cast("int").as("pos"), col("sym"))
+        split(col("text"), " ").as("syms"))
       .repartition(8, col("term"))
-    val merges = (1 to BpeDeepIters).map { it =>
-      val (kept, next) = bpeBatchIter(seq, bpeDeepK(it), bpeDeepM(it),
-        thin = true, sep = " ", chainOnly = true)
-      seq = next
-      kept.select(lit(it.toLong).as("it"),
-        col("rank").cast("long").as("mrank"), col("l").as("left_sym"),
-        col("r").as("right_sym"), col("merged"), col("pair_count"))
-    }
-    (merges, seq)
-  }
 
-  /** The deep trainer's raw merge table (training runs here). The
-    * GATED [[txBpeDeep]] reads the standing model instead, so queries
-    * pay catalog-resolve cost, not training. */
-  private def txBpeDeepTrain(spark: SparkSession, dir: String): DataFrame =
-    bpeDeepTrain(spark, dir)._1.reduce(_.union(_)).orderBy("it", "mrank")
+  /** The phrase schedule: `bpe_phrase_seg_84` (doc-bucketed) is the
+    * state a production tokenizer serves, `bpe_phrase_merges_84` the
+    * replay target for documents the trainer never saw. */
+  private[graft] val bpePhrase = new BpeTrainer(
+    s"bpe_phrase_seg_$BpeDeepIters", s"bpe_phrase_merges_$BpeDeepIters",
+    docSeqs, BpeDeepIters, bpeDeepK, bpeDeepM, thin = true, sep = " ",
+    chainOnly = true, keys = Seq("term" -> "doc_id"))
 
-  /** Training-throughput probe (graft.ScalingProbe's deep-BPE block):
-    * run the trainer end-to-end BYPASSING the memo and the catalog,
-    * returning (total merges, wall seconds, per-iteration yields) —
-    * the merges/second evidence VERDICT r12 item #1 asks for. */
-  private[graft] def bpeDeepProbe(spark: SparkSession, dir: String)
-      : (Long, Double, Seq[Long]) = {
-    val t0 = System.nanoTime()
-    val (merges, _) = bpeDeepTrainOnce(spark, dir)
-    val secs = (System.nanoTime() - t0) / 1e9
-    val perIter = merges.map(_.count())
-    (perIter.sum, secs, perIter)
-  }
+  /** E9 — the 3 learned merges, one row per merge `(it, left_sym,
+    * right_sym, merged, pair_count)`. */
+  def txBpeMerges(spark: SparkSession, dir: String): DataFrame =
+    bpe3.listing(spark, dir)
 
-  /** The deep trained segmentation as a standing doc-bucketed model —
-    * the phrase trainer's final symbol table (≥1,000 merges at sf0.1),
-    * the state a production tokenizer serves. Trained once per corpus
-    * as a catalog-resident build. */
-  private[graft] def bpePhraseSeg(spark: SparkSession,
-      dir: String): DataFrame =
-    Shared.model(spark, dir, s"bpe_phrase_seg_$BpeDeepIters",
-      "term", (s, d) => bpeDeepTrain(s, d)._2)
+  /** E9/E7 — the 12×16 batched trainer's merges, one row per merge
+    * `(it, mrank, left_sym, right_sym, merged, pair_count)`. */
+  def txBpeBatch(spark: SparkSession, dir: String): DataFrame =
+    bpeBatch.listing(spark, dir)
 
-  /** The deep trainer's full merge table as a standing model — the
-    * replay target for tokenizing documents the trainer never saw. */
-  private[graft] def bpePhraseMerges(spark: SparkSession,
-      dir: String): DataFrame =
-    Shared.model(spark, dir, s"bpe_phrase_merges_$BpeDeepIters", "it",
-      (s, d) => txBpeDeepTrain(s, d))
-
-  /** E9 — tokenizer training AT PRODUCTION DEPTH (VERDICT r12 item
-    * #1): the adaptive-schedule phrase trainer's learned merge table,
-    * one row per merge `(it, mrank, left_sym, right_sym, merged,
-    * pair_count)` — ≥1,000 rows at sf0.1 — read off the standing
-    * catalog model (training is an ingest-time build, not a query
-    * cost). The oracle replays all [[BpeDeepIters]] adaptive
-    * iterations in unrolled materialized CTEs.
-    */
+  /** E9 — the production-depth phrase merge table (≥1,000 rows at
+    * sf0.1). The oracle replays all [[BpeDeepIters]] adaptive rounds
+    * in unrolled materialized CTEs. */
   def txBpeDeep(spark: SparkSession, dir: String): DataFrame =
-    bpePhraseMerges(spark, dir).orderBy("it", "mrank")
+    bpePhrase.listing(spark, dir)
 
-  /** E9 — deep-tokenizer APPLICATION over the corpus: every document's
-    * segmentation under the full learned phrase-merge sequence, off
-    * the standing doc-bucketed segmentation model — one row per doc
-    * with its symbol count and '|'-joined segmentation. The rollup is
-    * bucket-local on the doc key; the oracle replays the schedule and
-    * aggregates the final table.
-    */
-  def txBpeDeepApply(spark: SparkSession, dir: String): DataFrame =
-    bpePhraseSeg(spark, dir)
-      .groupBy("term")
-      .agg(count(lit(1)).cast("long").as("n_syms"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("sym")))),
-          p => p.getField("sym")), "|").as("segmentation"))
-      .select(col("term").as("doc_id"), col("n_syms"),
-        col("segmentation"))
-      .orderBy("doc_id")
-
-  /** The deep trained segmentation of the WORD vocabulary as a
-    * standing term-bucketed model — the 12×16 batched trainer's final
-    * symbol table. On this corpus's CLOSED 31-word vocabulary that is
-    * 69 merges from full depth (word-internal BPE saturates at 89
-    * merges with every vocab word a single symbol — pinned by
-    * BpeScrubSpec; the production-depth trainer continues PAST the
-    * word boundary, see [[bpePhraseMerges]]). */
-  private[graft] def bpeBatchSegmentation(spark: SparkSession,
-      dir: String): DataFrame =
-    Shared.model(spark, dir, s"bpe_seg_b${BpeBatchIters}x$BpeBatchM",
-      "term", (s, d) => bpeBatchTrain(s, d)._2)
-
-  /** The batched trainer's full merge table as a standing model —
-    * what [[graft.streaming.StreamBpeDeep]] serves: collected in
-    * (it, mrank) order, broadcast, and folded over every arriving
-    * word, known or novel (the fold in that order equals the batched
-    * apply, because each batch's kept pairs are symbol-disjoint). */
-  private[graft] def bpeBatchMerges(spark: SparkSession,
-      dir: String): DataFrame =
-    Shared.model(spark, dir,
-      s"bpe_merges_b${BpeBatchIters}x$BpeBatchM", "it",
-      (s, d) => txBpeBatch(s, d))
-
-  /** E9 — tokenizer application AT DEPTH: every vocab term's
-    * segmentation under the BATCHED trainer's full merge sequence (69
-    * merges vs the 3-merge [[txBpeApply]] twin), off the standing
-    * term-bucketed deep-segmentation model. Same rollup kernel and the
-    * same bucket-local plan as the 3-merge apply; the oracle replays
-    * the 12 batched iterations and aggregates the final table — the
-    * deep-training → deep-application loop closed end to end.
-    */
-  def txBpeApplyDeep(spark: SparkSession, dir: String): DataFrame =
-    bpeBatchSegmentation(spark, dir)
-      .groupBy("term", "tcnt")
-      .agg(count(lit(1)).cast("long").as("n_syms"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("sym")))),
-          p => p.getField("sym")), "|").as("segmentation"))
-      .select(col("term"), col("tcnt"), col("n_syms"),
-        col("segmentation"))
-      .orderBy("term")
-
-  /** The trained segmentation as STANDING models (compute-at-ingest:
-    * train once per corpus, tokenize many) — `bpe_seg_3` is the final
-    * (term, tcnt, pos, sym) table bucketed on the term key,
-    * `bpe_merges_3` the 3-row learned-merge table.
-    */
-  private[graft] def bpeSegmentation(spark: SparkSession, dir: String)
-      : DataFrame =
-    Shared.model(spark, dir, "bpe_seg_3", "term",
-      (s, d) => bpeTrain(s, d)._2)
-
-  /** The 3-row learned-merge table — what
-    * [[graft.streaming.StreamBpe]] serves: collected in `it` order,
-    * broadcast, and folded over every arriving word. */
-  private[graft] def bpeLearnedMerges(spark: SparkSession, dir: String)
-      : DataFrame =
-    Shared.model(spark, dir, "bpe_merges_3", "it",
-      (s, d) => txBpeMerges(s, d))
-
-  /** Tokenizer APPLICATION — the consumption half of [[txBpeMerges]]
-    * (train once, tokenize everything): every vocab term's trained
-    * segmentation after the 3 learned merges, with its corpus
-    * frequency and BPE token count. The per-corpus readout a pipeline
-    * uses to budget sequence packing under a trained tokenizer
-    * (fertility = n_syms weighted by tcnt), and the batch twin the
-    * streaming tokenizer is pinned against.
-    *
-    * Scale: reads the standing term-bucketed segmentation model — the
-    * per-term rollup is bucket-local, output is vocabulary-sized, the
-    * corpus is never touched at query time (training itself only ever
-    * aggregates the corpus once into the vocab-sized term table).
-    */
+  /** Every vocab term's segmentation after the 3 learned merges, with
+    * its corpus frequency and BPE token count — the per-corpus readout
+    * a pipeline uses to budget sequence packing (fertility = n_syms
+    * weighted by tcnt), and the batch twin the streaming tokenizer is
+    * pinned against. */
   def txBpeApply(spark: SparkSession, dir: String): DataFrame =
-    bpeSegmentation(spark, dir)
-      .groupBy("term", "tcnt")
-      .agg(count(lit(1)).cast("long").as("n_syms"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("sym")))),
-          p => p.getField("sym")), "|").as("segmentation"))
-      .select(col("term"), col("tcnt"), col("n_syms"),
-        col("segmentation"))
-      .orderBy("term")
+    bpe3.applied(spark, dir)
+
+  /** Every vocab term's segmentation under the 12×16 batched merges. */
+  def txBpeApplyDeep(spark: SparkSession, dir: String): DataFrame =
+    bpeBatch.applied(spark, dir)
+
+  /** Every sampled document's segmentation under the full phrase
+    * merge sequence, keyed by `doc_id`. */
+  def txBpeDeepApply(spark: SparkSession, dir: String): DataFrame =
+    bpePhrase.applied(spark, dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd_substring" -> ddSubstring _,
@@ -1005,8 +855,8 @@ object Curation2 extends QueryPack {
 
   /** One BPE iteration as DuckDB CTEs: input seq CTE `in` (term, tcnt,
     * pos, sym) → best-pair CTE `b$n` and merged seq CTE `q$n` — the
-    * textual twin of [[txBpeMerges]]' iter (same chain-parity merge
-    * rule).
+    * textual twin of one [[bpe3]] round (the left-to-right merge rule
+    * as a chain-parity window).
     */
   private def sqlBpeIter(n: Int, in: String): String = s"""
       s$n AS (
@@ -1049,11 +899,11 @@ object Curation2 extends QueryPack {
         WHERE prevm IS NULL)"""
 
   /** One BATCHED iteration as DuckDB CTEs — the textual twin of
-    * [[bpeBatchIter]]: top-K candidates, the join-expressible
+    * one [[BpeTrainer]] round: top-K candidates, the join-expressible
     * conservative keeper rule (NOT EXISTS against higher-ranked
     * interacting candidates), and the multi-pair chain-parity apply
     * (each occurrence carries its own merged symbol through the
-    * parity window).
+    * parity window, which equals the trainer's rank-order fold).
     */
   private def sqlBpeBatchIter(n: Int, in: String,
       k: Int = BpeBatchK, m: Int = BpeBatchM,
@@ -1169,7 +1019,7 @@ object Curation2 extends QueryPack {
     * carries ITS OWN per-iteration candidate/batch LIMITs
     * ([[bpeDeepK]]/[[bpeDeepM]]), the per-left-symbol thinning, and
     * the space-joined merged symbols: the textual twin of
-    * [[bpeDeepTrainOnce]]'s loop. The doc-sequence s0 (term = doc_id,
+    * [[bpePhrase]]'s rounds. The doc-sequence s0 (term = doc_id,
     * sym = word) is supplied by the callers. */
   private def sqlBpeDeepIters: String = (1 to BpeDeepIters)
     .map(n => sqlBpeBatchIter(n, if (n == 1) "s0" else s"q${n - 1}",

@@ -9,15 +9,17 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Shared
 
-/** The one BPE serving kernel of all three streaming tokenizers: a
-  * learned merge table, broadcast once per (session, corpus) in learned
-  * order and folded over each symbol sequence in one local pass on the
-  * executors — no Spark job per merge iteration. The fold is the
-  * sequential reference the trainers' batched apply is spec-pinned
-  * equal to: a batch's kept pairs are symbol-disjoint, so folding them
-  * in (it, mrank) order equals applying them simultaneously.
+/** The one BPE kernel, shared by training and serving: a merge table
+  * folded over each symbol sequence in one local pass. The trainer
+  * ([[graft.operators.Curation2.BpeTrainer]]) folds each round's kept
+  * merges over every training sequence; the three streaming tokenizers
+  * broadcast a learned table once per (session, corpus) in (it, mrank)
+  * order and fold it over each arriving sequence — no Spark job per
+  * merge round. A round's kept pairs never cross-chain or collide, so
+  * folding them in rank order equals applying them simultaneously, the
+  * rule the DuckDB oracle replays as chain-parity windows.
   */
-private[streaming] object BpeFold {
+private[graft] object BpeFold {
   type Merges = Broadcast[Array[(String, String, String)]]
 
   /** One standing merge table, broadcast in fold order. Each table

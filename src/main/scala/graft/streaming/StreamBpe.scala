@@ -14,8 +14,8 @@ import graft.operators.Curation2
   * Batch ≡ stream by construction: the standing 3-row merge table
   * (`bpe_merges_3`, in `it` order) broadcasts once per (session,
   * corpus), and each word folds those merges in learned order through
-  * [[BpeFold]] — the sequential fold the trainer's chain-parity apply
-  * is spec-pinned equal to — so corpus words land on exactly the
+  * [[BpeFold]] — the same fold the trainer applies each round's merges
+  * with — so corpus words land on exactly the
   * standing `tx_bpe_apply` segmentation, and UNSEEN words segment the
   * way the trained tokenizer would segment them (a merge like `th`
   * applies to a brand-new word containing it; a vocabulary-lookup
@@ -30,7 +30,7 @@ import graft.operators.Curation2
   */
 object StreamBpe {
 
-  private val merges = new BpeFold.Table(Curation2.bpeLearnedMerges, "it")
+  private val merges = new BpeFold.Table(Curation2.bpe3.merges, "it")
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows: per document,
     * the word count and the BPE token count under the standing trained

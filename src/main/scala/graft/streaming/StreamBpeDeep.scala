@@ -34,7 +34,7 @@ import graft.operators.Curation2
 object StreamBpeDeep {
 
   private val merges =
-    new BpeFold.Table(Curation2.bpeBatchMerges, "it", "mrank")
+    new BpeFold.Table(Curation2.bpeBatch.merges, "it", "mrank")
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows under the deep
     * trained tokenizer: per document, word count and deep BPE token

@@ -11,10 +11,10 @@ import graft.operators.Curation2
   * BPE actually deploys: the learned merge table (vocabulary-sized,
   * ~1–2k rows) broadcasts once, and each document tokenizes in ONE
   * local pass on its executor — a left-to-right fold of the merges in
-  * learned (it, mrank) order over the doc's word stream, the exact
-  * sequential-fold semantics the trainer's batched apply is spec-pinned
-  * equal to. The fold IS the tokenizer ([[BpeFold]], the kernel
-  * [[StreamBpe]] and [[StreamBpeDeep]] serve with too, per word
+  * learned (it, mrank) order over the doc's word stream, the same fold
+  * the trainer applies each round's merges with. The fold IS the
+  * tokenizer ([[BpeFold]], the kernel [[StreamBpe]] and
+  * [[StreamBpeDeep]] serve with too, per word
   * instead of per document): it costs O(doc · relevant merges) CPU
   * with zero shuffles and zero per-iteration Spark jobs (replaying the
   * 84 iteration batches as jobs would pay ~84 job latencies per
@@ -35,7 +35,7 @@ import graft.operators.Curation2
 object StreamBpePhrase {
 
   private val merges =
-    new BpeFold.Table(Curation2.bpePhraseMerges, "it", "mrank")
+    new BpeFold.Table(Curation2.bpePhrase.merges, "it", "mrank")
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows at full phrase
     * depth: per document, its word count, deep token count, and the

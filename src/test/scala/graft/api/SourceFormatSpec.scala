@@ -204,4 +204,25 @@ class SourceFormatSpec extends AnyFunSuite {
     assert(back.map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq((1, "x"), (2, "y")))
   }
+
+  test("write_to_source reports the rows it wrote, in one job") {
+    val api = freshApi()
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-wsrc-count")
+    api.registry.register(SourceDef("files", "events",
+      dir.resolve("events").toString, format = "parquet"))
+    api.writeToSource(Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
+      "files", "events", mode = "overwrite")
+    val row = Seq((3L, "c")).toDF("id", "s")
+    var res: WriteResult = null
+    val jobs = TestSpark.jobsIn("source-append") {
+      res = api.writeToSource(row, "files", "events")
+    }
+    assert(res.rowsAffected == 1, s"a 1-row append reported $res")
+    assert(jobs.size == 1, s"a 1-row append ran jobs $jobs")
+    assert(api.source("files", "events").count() == 3)
+    // an ignored write runs no job to count: it reports the target
+    assert(api.writeToSource(row, "files", "events", mode = "ignore")
+      .rowsAffected == 3)
+  }
 }

@@ -9,11 +9,11 @@ import graft.TestSpark
 
 /** Pins the two round-10 curation additions to driver-side references:
   *
-  *  - `tx_bpe_merges`' window-parity merge rule (chain of consecutive
-  *    occurrences → odd ranks merge) must equal the SEQUENTIAL
-  *    left-to-right fold a textbook BPE trainer uses — on the real
-  *    corpus and on crafted pathological runs (`aaaa`, `abab`) where
-  *    the two formulations are easiest to get wrong.
+  *  - the BPE trainers' merge tables and segmentations must equal an
+  *    independent SEQUENTIAL left-to-right fold trainer, the one a
+  *    textbook BPE uses (and the DuckDB oracle's chain-parity windows
+  *    replay) — on the real corpus and on crafted pathological runs
+  *    (`aaaa`, `abab`) where non-overlap is easiest to get wrong.
   *  - `dd_substring_scrub`'s coverage/removal semantics on planted
   *    duplicated spans, including the all-covered (empty scrub) and
   *    untouched-document edges.
@@ -91,10 +91,10 @@ class BpeScrubSpec extends AnyFunSuite
   // ---- reference BATCHED trainer (VERDICT r11 #2): conservative
   // top-m non-interacting selection from iteration-start counts, then
   // each kept pair applied via the SEQUENTIAL fold in rank order — the
-  // "batched ≡ sequential-fold" pin: the Spark side applies the whole
-  // batch in ONE chain-parity pass, so equal merge tables across all
-  // iterations prove the simultaneous application equals folding the
-  // pairs one at a time.
+  // "batched ≡ sequential-fold" pin: the Spark trainer selects each
+  // batch in Spark and folds it in rank order on the executors, so
+  // equal merge tables across all iterations pin the selection rule
+  // and the apply to an independent implementation.
 
   private def referenceBatchedBpe(texts: Seq[String], iters: Int,
       m: Int, k: Int): Seq[(Long, Long, String, String, String, Long)] =
@@ -200,9 +200,8 @@ class BpeScrubSpec extends AnyFunSuite
   // word-sequences, per-iteration adaptive (K, M), best-pair-per-left
   // thinning, CHAIN-ONLY conservative rule, each kept pair applied via
   // the sequential fold in rank order — the batched ≡ sequential-fold
-  // pin at production depth: equality proves the one-pass chain-parity
-  // apply of a same-left/same-right-admitting batch equals folding the
-  // pairs one at a time.
+  // pin at production depth, on batches that admit same-left and
+  // same-right pairs.
 
   private def foldMergeSep(seq: Vector[String], l: String, r: String,
       sep: String): Vector[String] =
@@ -318,6 +317,54 @@ class BpeScrubSpec extends AnyFunSuite
       "aaaa abab xyxy xyxy zq zq zq")
     val dir = writeDocs(texts)
     assert(runBpe(dir) == referenceBpe(texts, 3))
+  }
+
+  test("BPE training leaves no executor-local checkpoint and no leaked " +
+      "cache") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a private copy of the corpus, so all six standing BPE models train
+    val dir = Files.createTempDirectory("graft_bpe_train_fix").toString
+    fixtureDirs += dir
+    Files.copy(java.nio.file.Paths.get(sfDir, "documents.parquet"),
+      java.nio.file.Paths.get(dir, "documents.parquet"))
+    val marker = "bpe-train-plans-done"
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.optimizedPlan.toString + qe.executedPlan.toString); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sharedState.cacheManager.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    spark.listenerManager.register(listener)
+    try {
+      for (q <- Seq("tx_bpe_merges", "tx_bpe_batch", "tx_bpe_deep",
+          "tx_bpe_apply", "tx_bpe_apply_deep", "tx_bpe_deep_apply")) {
+        val df = graft.SparkEntry.queries(q)(spark, dir)
+        assert(df.collect().nonEmpty, q)
+      }
+      // listener events arrive in order: once the marker query is seen,
+      // every training and query execution before it has been recorded
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!plans.toArray.exists(_.toString.contains(marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray.map(_.toString).toSeq
+    assert(all.exists(_.contains(marker)))
+    for (m <- Seq("bpe_seg_3", "bpe_merges_3", "bpe_seg_b12x16",
+        "bpe_merges_b12x16", "bpe_phrase_seg_84", "bpe_phrase_merges_84"))
+      assert(Shared.buildCounts.get((dir, m)).contains(1L), m)
+    all.filter(p => p.contains("LogicalRDD") || p.contains("ExistingRDD"))
+      .foreach(p => fail(s"a plan reads a checkpointed RDD:\n${p.take(2000)}"))
+    Shared.invalidate(dir)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a cached relation outlived the training memo")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty,
+      "a persistent RDD outlived the training memo")
   }
 
   // ---- dd_substring_scrub on planted spans ----

@@ -466,4 +466,63 @@ class PyBridgeSpec extends AnyFunSuite {
         s"jobs $before ran before the child started (of $jobs)")
     } finally PyBridge.releaseScratch(api, "stamped")
   }
+
+  test("python outputs' schemas come from their footers: no Spark job " +
+      "runs between the children exiting and runModel returning") {
+    assume(PyBridge.available, "python3 with pandas+pyarrow not on PATH")
+    import scala.jdk.CollectionConverters._
+    val api = freshApi()
+    api.registry.register(ModelDef("typed_base",
+      ModelKind.Scala((s, _) => {
+        import s.implicits._
+        (1L to 8L).map(i => (i, s"l$i")).toDF("id", "label").repartition(2)
+      })))
+    assert(Runner.run(api, Runner.RunConfig()) == 0)
+    val proj = Files.createTempDirectory("graft-pyfooter")
+    val stamps = Files.createDirectories(proj.resolve("stamps"))
+    val pyFile = proj.resolve("typed.py")
+    // the bool + JSON fixture plus a float column; each child stamps
+    // the time its model returns, before it writes its output and exits
+    Files.writeString(pyFile,
+      s"""import json, os, time
+         |
+         |def model(dbt, fal):
+         |    df = dbt.ref("typed_base")
+         |    df["my_bool"] = True
+         |    df["my_json"] = json.dumps({"a": 1, "b": 2})
+         |    df["ratio"] = df["id"] / 2.0
+         |    with open(os.path.join("$stamps", str(os.getpid())), "w") as f:
+         |        f.write(str(int(time.time() * 1000)))
+         |    return df
+         |""".stripMargin)
+    val tracker = spark.sparkContext.statusTracker
+    sys.props("graft.py.workers") = "2"
+    try for (mode <- Seq("global", "partition")) {
+      val name = s"typed_$mode"
+      Files.list(stamps).iterator().asScala.foreach(Files.delete)
+      try {
+        var out: org.apache.spark.sql.DataFrame = null
+        val jobs = TestSpark.jobsIn(s"py-footer-$mode") {
+          out = PyBridge.runModel(api, name, Seq("typed_base"),
+            pyFile.toString, mode = mode)
+        }
+        val ends = Files.list(stamps).iterator().asScala
+          .map(f => Files.readString(f).trim.toLong).toSeq
+        assert(ends.size == (if (mode == "global") 1 else 2), mode)
+        val after = jobs.filter { j =>
+          tracker.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq)
+            .flatMap(tracker.getStageInfo(_)).map(_.submissionTime)
+            .exists(_ >= ends.max)
+        }
+        assert(after.isEmpty,
+          s"$mode: jobs $after ran after the children exited (of $jobs)")
+        assert(out.count() == 8)
+        assert(out.schema("my_bool").dataType ==
+          org.apache.spark.sql.types.BooleanType)
+        for (f <- out.inputFiles)
+          assert(PyBridge.footerSchema(spark, f) ==
+            spark.read.parquet(f).schema, s"$mode: $f")
+      } finally PyBridge.releaseScratch(api, name)
+    } finally sys.props.remove("graft.py.workers")
+  }
 }

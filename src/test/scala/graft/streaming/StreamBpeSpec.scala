@@ -12,7 +12,7 @@ import graft.operators.Curation2
 /** Batch/stream equivalence of BPE tokenization: documents streamed
   * through [[StreamBpe]] must count tokens exactly as (a) an
   * INDEPENDENT sequential-fold application of the learned merges (the
-  * reference implementation the chain-parity window rule is pinned to)
+  * reference implementation the trainers are pinned to)
   * and (b) the standing `tx_bpe_apply` segmentation for corpus words —
   * including a brand-new word that one of the learned merges applies
   * to, which a vocabulary lookup would miss.
