@@ -154,9 +154,9 @@ object ScalingProbe {
         s"| $name | $what | ", " | ", s" | ${f(slope)} |\n"))
     }
     // Streaming micro-batch throughput (VERDICT r11 item #7): the
-    // foreachBatch kernels' per-batch latency vs batch size against
-    // the sf0.1 standing models. The batch is localCheckpoint'd (an
-    // in-memory micro-batch, like foreachBatch hands over), so the
+    // micro-batch kernels' per-batch latency vs batch size against
+    // the sf0.1 standing models. The batch is cached (an in-memory
+    // micro-batch, like StreamOps.eachBatch hands over), so the
     // measured seconds are the standing-model PROBE cost, not source
     // reads. slope here is d ln(t)/d ln(batch rows) across the two
     // sizes — ~0 means latency-bound (per-batch overhead dominates,
@@ -199,7 +199,7 @@ object ScalingProbe {
         docsAll, graft.streaming.StreamDecontam.probeBatch))
     val streamRows = streamProbes.map { case (nm, what, src, fn) =>
       val sized = batchSizes.map { n =>
-        val batch = src.limit(n).localCheckpoint()
+        val batch = src.limit(n).cache()
         // the ACTUAL batch size: limit() caps at the source's row
         // count (the sf0.1 embeddings table is smaller than the large
         // requested batch), and the slope denominator and the printed
@@ -212,7 +212,9 @@ object ScalingProbe {
           (System.nanoTime() - t0) / 1e9
         }
         once() // warm: codegen + standing-model resolution
-        (actual, math.min(once(), once()))
+        val best = math.min(once(), once())
+        batch.unpersist()
+        (actual, best)
       }
       val slope = math.log(sized(1)._2 / sized(0)._2) /
         math.log(sized(1)._1.toDouble / sized(0)._1)
@@ -220,9 +222,9 @@ object ScalingProbe {
     }
     sb.append("\n## Streaming micro-batch throughput ")
     sb.append("(sf0.1 standing models)\n\n")
-    sb.append("Per-batch seconds of the foreachBatch kernels against ")
+    sb.append("Per-batch seconds of the micro-batch kernels against ")
     sb.append("the standing models; the batch is an in-memory ")
-    sb.append("(localCheckpoint'd) documents slice, so rows measure ")
+    sb.append("(cached) documents slice, so rows measure ")
     sb.append("the standing-model probe cost a continual-ingest ")
     sb.append("pipeline pays per micro-batch. `slope` = d ln(t)/d ")
     sb.append("ln(batch rows): ~0 latency-bound, ~1 batch-work-bound.\n\n")
@@ -278,8 +280,7 @@ object ScalingProbe {
       val base = "/root/testdata/sf0.01"
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_append_probe").toString
-      val all = spark.read.parquet(s"$base/documents.parquet")
-        .localCheckpoint()
+      val all = spark.read.parquet(s"$base/documents.parquet").cache()
       import org.apache.spark.sql.functions.col
       all.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -357,6 +358,7 @@ object ScalingProbe {
         out.append("keeps the drift inside the noise band.\n")
         out.toString
       } finally {
+        all.unpersist()
         graft.api.FsIO.deleteTree(
           graft.operators.Shared.namespaceDir(spark, tmp))
         graft.api.FsIO.deleteTree(tmp)
@@ -400,7 +402,7 @@ object ScalingProbe {
           spark.conf.set("spark.sql.shuffle.partitions",
             retractBuckets.toString)
           val all = spark.read.parquet(s"$base/documents.parquet")
-            .localCheckpoint()
+            .cache()
           val nDocs = all.count()
           all.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
           Tables.invalidate(tmp, "documents")
@@ -438,8 +440,7 @@ object ScalingProbe {
           reqSizes.foreach { reqSize =>
             val ids = pool.slice(offset, offset + reqSize).toSeq
             offset += reqSize
-            val del = corpus.filter(col("doc_id").isin(ids: _*))
-              .localCheckpoint()
+            val del = corpus.filter(col("doc_id").isin(ids: _*)).cache()
             val buckets = del
               .select(pmod(hash(col("doc_id")), lit(retractBuckets)))
               .distinct().count()
@@ -447,7 +448,7 @@ object ScalingProbe {
               .capturePre(spark, tmp)
             val tr0 = System.nanoTime()
             val remaining = corpus
-              .filter(!col("doc_id").isin(ids: _*)).localCheckpoint()
+              .filter(!col("doc_id").isin(ids: _*)).cache()
             remaining.write.mode("overwrite")
               .parquet(s"$tmp/documents.parquet")
             Tables.invalidate(tmp, "documents")
@@ -469,7 +470,7 @@ object ScalingProbe {
               "would measure a partial retraction")
             sb.append(s"| sf$sf | $nDocs | ${f(buildS)} | $reqSize | ")
             sb.append(s"$buckets | ${f(rewriteS)} | ${f(retractS)} |\n")
-            // release this request's checkpointed corpus copies so the
+            // release this request's cached corpus copies so the
             // next measurement doesn't run under their block pressure
             del.unpersist()
           }

@@ -153,7 +153,7 @@ object Sf10Probe {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_kboundary").toString
       val all = spark.read.parquet("testdata/sf1/embeddings.parquet")
-        .localCheckpoint()
+        .cache()
       try {
         // base: queries + 60% of the corpus; batches from the rest
         all.filter(col("vec_id") < 10 || col("vec_id") % 10 < 6)
@@ -209,6 +209,7 @@ object Sf10Probe {
         sb.append("lane keeps the cached K (retained-centroid policy) ")
         sb.append("until the next process/invalidate.\n")
       } finally {
+        all.unpersist()
         graft.api.FsIO.deleteTree(
           graft.operators.Shared.namespaceDir(spark, tmp))
         graft.api.FsIO.deleteTree(tmp)

@@ -470,10 +470,11 @@ object Curation2 extends QueryPack {
     * Scale: the table is vocabulary-sized (one row per distinct term,
     * or per sampled document for the phrase schedule), never the
     * corpus. A round is one narrow fold, one map-side-combined pair
-    * aggregation and a ≤K-row keeper selection collected to the driver
-    * (≤128 rows). Only the round-0 table is cached: every round's plan
-    * is one projection over it, so plan size stays constant however
-    * deep training goes, and the final table is one more fold of it.
+    * aggregation and the top K pairs (≤1,024 rows) collected to the
+    * driver, where the keeper selection runs. Only the round-0 table
+    * is cached: every round's plan is one projection over it, so plan
+    * size stays constant however deep training goes, and the final
+    * table is one more fold of it.
     * (Chaining a cache per round instead nests each round's adaptive
     * plan inside the next; the plan description Spark renders for
     * every execution then doubles per round.) The fold skips merges
@@ -681,45 +682,40 @@ object Curation2 extends QueryPack {
     * chain-interact (rank 3 dropped because it touches dropped rank 2)
     * — more rounds, same learned quality class.
     *
-    * Scale: the candidate/keeper tables are ≤ K rows (broadcast
-    * self-join + a K-row sort — bounded, audited).
+    * Scale: one job collects the top K pairs (≤ 1,024 rows); the
+    * thinning and the keeper rule run on the driver over them.
     */
   private def bpeKept(pairs: DataFrame, k: Int, m: Int, thin: Boolean,
       sep: String, chainOnly: Boolean)
       : Array[(String, String, String, Long)] = {
+    // one job: Spark ranks the pairs (count desc, then the symbols in
+    // UTF-8 byte order) and the top K come back in that order, so a
+    // candidate's index IS its rank — every higher-ranked candidate
+    // precedes it, and the rule below compares no strings by order
     val topK = pairs
       .orderBy(col("pair_count").desc, col("l"), col("r"))
       .limit(k)
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     // the DEEP schedule thins candidates to the best pair PER LEFT
     // SYMBOL before the keeper rule (VERDICT r12 item #1): the top-K
     // pairs concentrate on a few dominant symbols, so the conservative
     // NOT-EXISTS rule over the raw top-K drops almost everything
     // (every candidate shares a symbol with some higher-ranked one) —
     // measured ~3 merges/round however large K grows. One
-    // deterministic argmax per left symbol (count desc, r asc)
-    // sparsifies the interaction graph — candidates then share symbols
-    // only through r-collisions — and the SAME rule keeps most of the
-    // batch. Deferred second-best pairs for a popular left symbol
-    // simply surface in a later round's recount, exactly like pairs
-    // outside the window.
-    val cand = if (!thin) topK
-      else {
-        val byL = Window.partitionBy("l")
-          .orderBy(col("pair_count").desc, col("r"))
-        topK.withColumn("lrn", row_number().over(byL))
-          .filter(col("lrn") === 1).drop("lrn")
-      }
-    val q = cand.toDF("ql", "qr", "qc")
-    val higherRanked = col("qc") > col("pair_count") ||
-      (col("qc") === col("pair_count") &&
-        (col("ql") < col("l") ||
-          (col("ql") === col("l") && col("qr") < col("r"))))
+    // deterministic argmax per left symbol (count desc, r asc — the
+    // first of its left symbol in rank order) sparsifies the
+    // interaction graph — candidates then share symbols only through
+    // r-collisions — and the SAME rule keeps most of the batch.
+    // Deferred second-best pairs for a popular left symbol simply
+    // surface in a later round's recount, exactly like pairs outside
+    // the window.
+    val cand = if (thin) topK.distinctBy(_._1) else topK
     // `sep` is the merged-symbol joiner ("" for character merges, " "
     // for the phrase trainer) — the collision arm must use it too, or
     // two phrase pairs like ("a b","c") / ("a","b c") would not be
     // seen as producing the same merged symbol
-    val collides = concat(col("ql"), lit(sep), col("qr")) ===
-      concat(col("l"), lit(sep), col("r"))
+    def merged(p: (String, String, Long)): String = p._1 + sep + p._2
     // chainOnly (the deep trainer, VERDICT r12 item #1) relaxes the
     // interaction predicate from ANY shared symbol to CROSS-CHAINING
     // only: two occurrences of distinct pairs p, q can share a symbol
@@ -732,20 +728,20 @@ object Curation2 extends QueryPack {
     // a higher-ranked one) and alphabet-bound batches; batch ≡
     // sequential-fold still holds (BpeScrubSpec pins the same-left /
     // same-right / chain cases).
-    val interacts =
-      if (chainOnly)
-        col("ql") === col("r") || col("qr") === col("l") || collides
-      else col("ql") === col("l") || col("ql") === col("r") ||
-        col("qr") === col("l") || col("qr") === col("r") || collides
-    cand
-      .join(broadcast(q), higherRanked && interacts, "left_anti")
-      .orderBy(col("pair_count").desc, col("l"), col("r"))
-      .limit(m)
-      .select(col("l"), col("r"), concat(col("l"), lit(sep), col("r")),
-        col("pair_count"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getLong(3)))
+    def interacts(q: (String, String, Long), p: (String, String, Long))
+        : Boolean = {
+      val (ql, qr, _) = q
+      val (l, r, _) = p
+      val shares =
+        if (chainOnly) ql == r || qr == l
+        else ql == l || ql == r || qr == l || qr == r
+      shares || merged(q) == merged(p)
+    }
+    cand.indices
+      .filter(i => !(0 until i).exists(j => interacts(cand(j), cand(i))))
+      .take(m)
+      .map { i => val p = cand(i); (p._1, p._2, merged(p), p._3) }
+      .toArray
   }
 
   /** PRODUCTION-DEPTH BPE training (VERDICT r12 item #1, ≥1,000

@@ -320,24 +320,27 @@ object StandingIngest {
     // the dedup corpus derivation (originals ∪ truncations ∪ clones)
     // applies per doc, so the batch's derived rows are exactly the
     // full derivation restricted to the batch
-    lazy val batchCorpus = Dedup.corpusOf(batch)
+    val batchCorpus = Dedup.corpusOf(batch)
     // the MinHash signature pass over the derived batch corpus is
-    // shared by the signature table and the band index (lazy: neither
-    // model present -> never computed; checkpointed so the second
-    // consumer reads blocks instead of re-running shingle+minhash)
-    lazy val batchSigs = Dedup
-      .sigsOf(batchCorpus.select("doc_id", "text")).localCheckpoint()
-    appendDoc("graft_lsh_sigs", batchSigs)
+    // shared by the signature table and the band index: persisted for
+    // their scope, so the second consumer reads blocks instead of
+    // re-running shingle+minhash (lazy: neither model present ->
+    // never computed)
+    val batchSigs = Dedup.sigsOf(batchCorpus.select("doc_id", "text"))
+      .persist()
+    try {
+      appendDoc("graft_lsh_sigs", batchSigs)
 
-    // the production-recall tier's deep signatures (DedupHi): per-doc
-    // pure like the 16-perm pass, so the batch's rows are exactly the
-    // full rebuild's restriction to the batch
-    appendDoc("graft_minhash128_sigs",
-      Dedup.sigsOf(batchCorpus.select("doc_id", "text"), DedupHi.params))
+      // the production-recall tier's deep signatures (DedupHi): per-doc
+      // pure like the 16-perm pass, so the batch's rows are exactly the
+      // full rebuild's restriction to the batch
+      appendDoc("graft_minhash128_sigs",
+        Dedup.sigsOf(batchCorpus.select("doc_id", "text"), DedupHi.params))
 
-    appendDoc("graft_lsh_band_index",
-      Dedup.withBb(Dedup.bandedOf(
-        batchSigs.filter(col("doc_id") % 10 =!= 9))))
+      appendDoc("graft_lsh_band_index",
+        Dedup.withBb(Dedup.bandedOf(
+          batchSigs.filter(col("doc_id") % 10 =!= 9))))
+    } finally { batchSigs.unpersist(); () }
 
     appendDoc("graft_simhash_sigs", Dedup.simhashOf(batchCorpus))
 
@@ -351,11 +354,12 @@ object StandingIngest {
   }
 
   /** Attach standing-model maintenance to a (doc_id, …) document
-    * STREAM via foreachBatch: per micro-batch, `land(batch, batchId)`
-    * persists the batch into the corpus store, then every appendable
-    * standing model absorbs its increment with the batch id committed
-    * per model ([[BatchMetaKey]]) — a replayed batch after a mid-way
-    * crash re-appends exactly the models that missed it. `land`
+    * STREAM via [[graft.streaming.StreamOps.eachBatch]]: per
+    * micro-batch, `land(batch, batchId)` persists the batch into the
+    * corpus store, then every appendable standing model absorbs its
+    * increment with the batch id committed per model ([[BatchMetaKey]])
+    * — a replayed batch after a mid-way crash re-appends exactly the
+    * models that missed it. `land`
     * receives the BATCH ID precisely so the corpus landing can apply
     * the same exactly-once discipline: route it through
     * [[graft.streaming.StreamIngest.applyBatch]] (id-guarded A-layer
@@ -363,9 +367,9 @@ object StandingIngest {
     * to a plain dir is NOT replay-safe on its own (a re-delivered
     * batch would duplicate corpus rows and every fingerprint would
     * advance over the duplicated listing — track the id or write to
-    * an id-named file). The batch is localCheckpoint'd before landing
-    * so the increments read a stable snapshot rather than re-pulling
-    * the streaming source. The pre-batch fingerprints are captured
+    * an id-named file). The loop persists the batch for the body's
+    * scope, so the landing and the increments read it once from the
+    * streaming source. The pre-batch fingerprints are captured
     * BEFORE `land` runs (ADVICE r12), so each model's append verifies
     * it was current up to exactly this batch. `compactEvery = Some(k)`
     * adds the default maintenance cadence (VERDICT r12 item #4): a
@@ -380,20 +384,17 @@ object StandingIngest {
       onBatch: Map[String, WriteResult] => Unit = _ => ())
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint()
-        val pre = capturePre(spark, dir)
-        land(b, batchId)
-        onBatch(appendDocBatch(spark, dir, b, batchId = Some(batchId),
-          pre = Some(pre)))
-        compactEvery.foreach { k =>
-          require(k >= 1, "compactEvery must be >= 1")
-          if ((batchId + 1) % k == 0) {
-            compactStanding(spark, dir, maxFilesPerBucket); ()
-          }
+    graft.streaming.StreamOps.eachBatch(docs) { (batch, batchId) =>
+      val pre = capturePre(spark, dir)
+      land(batch, batchId)
+      onBatch(appendDocBatch(spark, dir, batch, batchId = Some(batchId),
+        pre = Some(pre)))
+      compactEvery.foreach { k =>
+        require(k >= 1, "compactEvery must be >= 1")
+        if ((batchId + 1) % k == 0) {
+          compactStanding(spark, dir, maxFilesPerBucket); ()
         }
-        ()
+      }
     }
 
   /** Embedding-stream twin of [[attach]]: per micro-batch of (vec_id,
@@ -410,14 +411,11 @@ object StandingIngest {
       onBatch: Map[String, WriteResult] => Unit = _ => ())
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint()
-        val pre = capturePreEmbeddings(spark, dir)
-        land(b, batchId)
-        onBatch(appendEmbeddingBatch(spark, dir, b,
-          batchId = Some(batchId), pre = Some(pre)))
-        ()
+    graft.streaming.StreamOps.eachBatch(vecs) { (batch, batchId) =>
+      val pre = capturePreEmbeddings(spark, dir)
+      land(batch, batchId)
+      onBatch(appendEmbeddingBatch(spark, dir, batch,
+        batchId = Some(batchId), pre = Some(pre)))
     }
 
   /** Maintenance compaction over every materialized standing model of

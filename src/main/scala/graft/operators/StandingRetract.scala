@@ -120,13 +120,10 @@ object StandingRetract {
     * materialized, or its guard skipped it into a rebuild).
     */
   def retractDocBatch(spark: SparkSession, dir: String,
-      deleted0: DataFrame, pre: Map[String, String],
+      deleted: DataFrame, pre: Map[String, String],
       batchId: Option[Long] = None)
       : Map[String, WriteResult] = {
     import spark.implicits._
-    // snapshot: the caller has already rewritten the corpus files, so
-    // a lazy frame must not try to re-read them
-    val deleted = deleted0.localCheckpoint()
     // the corpus CHANGED under this process: drop every in-process
     // standing-model memo for the dir (the `built` trust assumes
     // immutability-except-invalidate), so non-advanced models go back
@@ -154,6 +151,24 @@ object StandingRetract {
       .empty[String, WriteResult]
     val reg = Shared.registryOf(spark, dir)
     val a = api(spark, dir)
+
+    // step 4's negative partials are collected here too, as driver-
+    // local rows: like the ids above, everything derived from the
+    // request is read BEFORE the first mutation, so a request frame
+    // that lazily reads state this call rewrites (step 3 physically
+    // deletes from documents_by_doc) is never re-evaluated after it
+    def negatedRows(name: String, inc: => DataFrame): Option[DataFrame] =
+      if (!reg.relationExists(name)) None
+      else {
+        val df = inc
+        Some(spark.createDataFrame(
+          java.util.Arrays.asList(df.collect(): _*), df.schema))
+      }
+    val negBigrams = negatedRows("bigram_counts",
+      TextAnalysis.bigramCountsOf(deleted).withColumn("cnt", -col("cnt")))
+    val negDrift = negatedRows("drift_ref_256",
+      Curation2.driftRefCountsOf(deleted)
+        .withColumn("ref_cnt", -col("ref_cnt")))
 
     // 1. tombstone ids commit FIRST (see crash ordering above). The
     // tombstone model is REQUEST state: registered with a build that
@@ -239,9 +254,8 @@ object StandingRetract {
       .digest(rawIds.mkString(",").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     def negative(name: String, bucketBy: String,
-        inc: => DataFrame): Unit =
-      if (reg.relationExists(name) &&
-          guardOk(spark, dir, name, pre, batchId) &&
+        rows: Option[DataFrame]): Unit = rows.foreach { inc =>
+      if (guardOk(spark, dir, name, pre, batchId) &&
           !reg.pointerMeta(name).get(RetractReqKey).contains(reqId)) {
         val fp = Shared.modelFingerprint(spark, dir, name, bucketBy,
           Seq("documents"), preferMarkerBuckets = true)
@@ -252,12 +266,9 @@ object StandingRetract {
         Shared.markResolved(spark, dir, name)
         results.put(name, res)
       }
-    negative("bigram_counts", bucketOf("bigram_counts"),
-      TextAnalysis.bigramCountsOf(deleted)
-        .withColumn("cnt", -col("cnt")))
-    negative("drift_ref_256", bucketOf("drift_ref_256"),
-      Curation2.driftRefCountsOf(deleted)
-        .withColumn("ref_cnt", -col("ref_cnt")))
+    }
+    negative("bigram_counts", bucketOf("bigram_counts"), negBigrams)
+    negative("drift_ref_256", bucketOf("drift_ref_256"), negDrift)
 
     // 5. gram_shared_10 (and any other non-retractable shape) is
     // deliberately untouched: its stale fingerprint rebuilds it on
@@ -277,10 +288,9 @@ object StandingRetract {
     * a later resolve would retrain.
     */
   def retractEmbeddingBatch(spark: SparkSession, dir: String,
-      deleted0: DataFrame, pre: Map[String, String])
+      deleted: DataFrame, pre: Map[String, String])
       : Map[String, WriteResult] = {
     import spark.implicits._
-    val deleted = deleted0.localCheckpoint()
     // corpus changed: clear the per-process memos (incl. the ivfParams
     // count cache, so geometry re-derives from the rewritten corpus)
     Shared.invalidate(dir)
@@ -355,11 +365,12 @@ object StandingRetract {
 
   /** Attach standing-model RETRACTION maintenance to a stream of
     * deletion requests (full doc rows of the docs to remove) via
-    * foreachBatch — the deletion twin of [[StandingIngest.attach]].
-    * Per micro-batch: the pre-delete fingerprints are captured,
-    * `unland(batch, batchId)` removes the docs' rows from the corpus
-    * store (the caller's rewrite — route it through an id-guarded
-    * store so a replayed batch's rewrite is a no-op), then
+    * [[graft.streaming.StreamOps.eachBatch]] — the deletion twin of
+    * [[StandingIngest.attach]]. Per micro-batch: the pre-delete
+    * fingerprints are captured, `unland(batch, batchId)` removes the
+    * docs' rows from the corpus store (the caller's rewrite — route it
+    * through an id-guarded store so a replayed batch's rewrite is a
+    * no-op), then
     * [[retractDocBatch]] brings every standing model to the
     * post-delete state with the batch id committed per model
     * ([[RetractMetaKey]]) — a replay after a mid-way crash skips
@@ -374,13 +385,10 @@ object StandingRetract {
       onBatch: Map[String, WriteResult] => Unit = _ => ())
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    requests.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint()
-        val pre = StandingIngest.capturePre(spark, dir)
-        unland(b, batchId)
-        onBatch(retractDocBatch(spark, dir, b, pre,
-          batchId = Some(batchId)))
-        ()
+    graft.streaming.StreamOps.eachBatch(requests) { (batch, batchId) =>
+      val pre = StandingIngest.capturePre(spark, dir)
+      unland(batch, batchId)
+      onBatch(retractDocBatch(spark, dir, batch, pre,
+        batchId = Some(batchId)))
     }
 }

@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Similarity
 
 /** Streaming similarity search — query vectors arriving as a stream
   * (a retrieval service, an online near-dup check) probed per
-  * micro-batch against the STANDING IVF index via foreachBatch,
+  * micro-batch ([[StreamOps.eachBatch]]) against the STANDING IVF index,
   * emitting each query's top-5 cosine neighbors.
   *
   * The probe is the SAME kernel the batch query runs
@@ -25,7 +24,7 @@ import graft.operators.Similarity
 object StreamAnn {
 
   /** Top-5 IVF neighbors for ONE micro-batch of (query_id, embedding)
-    * rows. Also the foreachBatch kernel for [[attach]]. */
+    * rows. Runs per micro-batch under [[StreamOps.eachBatch]]. */
   def probeBatch(spark: SparkSession, dir: String,
       batchQueries: DataFrame): DataFrame = {
     // foreachBatch hands frames bound to a CLONED session — register
@@ -39,14 +38,6 @@ object StreamAnn {
     Similarity.ivfProbe(spark, dir, q)
   }
 
-  /** Attach the probe to a (query_id, embedding) stream via
-    * foreachBatch; `sink` receives each micro-batch's neighbor rows.
-    * Caller adds checkpointing/trigger options and starts. */
-  def attach(spark: SparkSession, dir: String, queries: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    queries.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(probeBatch(spark, dir, batch))
-    }
 
   /** Online near-dup check for ONE micro-batch of (query_id,
     * embedding) rows: every standing-index member above 0.95 cosine
@@ -66,12 +57,4 @@ object StreamAnn {
       .withColumn("norm", sqrt(expr("graft_dot_product(emb, emb)")))
     Similarity.ivfDupProbe(spark, dir, q)
   }
-
-  /** [[attach]] for the near-dup check: `sink` receives each
-    * micro-batch's (new_vec, index_vec, cosine) match rows. */
-  def attachDup(spark: SparkSession, dir: String, queries: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    queries.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(dupBatch(spark, dir, batch))
-    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Curation2
 
@@ -34,19 +33,9 @@ object StreamBpe {
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows: per document,
     * the word count and the BPE token count under the standing trained
-    * merges. Also the foreachBatch kernel for [[attach]].
+    * merges. Runs per micro-batch under [[StreamOps.eachBatch]].
     */
   def tokenizeBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame =
     BpeFold.wordTokens(batchDocs, merges(spark, dir))
-
-  /** Attach the tokenizer to a (doc_id, text) stream via foreachBatch;
-    * `sink` receives each micro-batch's (doc_id, n_words, n_tokens)
-    * rows. Caller adds checkpointing/trigger options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(tokenizeBatch(spark, dir, batch))
-    }
 }

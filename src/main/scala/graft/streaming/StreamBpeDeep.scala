@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Curation2
 
@@ -38,20 +37,9 @@ object StreamBpeDeep {
 
   /** Tokenize ONE micro-batch of (doc_id, text) rows under the deep
     * trained tokenizer: per document, word count and deep BPE token
-    * count. Also the foreachBatch kernel for [[attach]].
+    * count. Runs per micro-batch under [[StreamOps.eachBatch]].
     */
   def tokenizeBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame =
     BpeFold.wordTokens(batchDocs, merges(spark, dir))
-
-  /** Attach the deep tokenizer to a (doc_id, text) stream via
-    * foreachBatch; `sink` receives each micro-batch's (doc_id,
-    * n_words, n_tokens) rows. Caller adds checkpointing/trigger
-    * options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(tokenizeBatch(spark, dir, batch))
-    }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Curation2
 
@@ -40,7 +39,7 @@ object StreamBpePhrase {
   /** Tokenize ONE micro-batch of (doc_id, text) rows at full phrase
     * depth: per document, its word count, deep token count, and the
     * '|'-joined segmentation (the `tx_bpe_deep_apply` row shape plus
-    * n_words). Also the foreachBatch kernel for [[attach]]. */
+    * n_words). Runs per micro-batch under [[StreamOps.eachBatch]]. */
   def tokenizeBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame = {
     import spark.implicits._
@@ -60,14 +59,4 @@ object StreamBpePhrase {
       .toDF("doc_id", "n_words", "n_tokens", "segmentation")
       .orderBy("doc_id")
   }
-
-  /** Attach the phrase tokenizer to a (doc_id, text) stream via
-    * foreachBatch; `sink` receives each micro-batch's (doc_id,
-    * n_words, n_tokens, segmentation) rows. Caller adds
-    * checkpointing/trigger options and starts. */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(tokenizeBatch(spark, dir, batch))
-    }
 }

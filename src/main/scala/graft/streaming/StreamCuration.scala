@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.TextAnalysis
 
@@ -59,16 +58,6 @@ object StreamCuration {
         coalesce(col("n_dup_matches") > 0, lit(false)).as("is_dup"))
   }
 
-  /** Attach the curation pipeline to a (doc_id, text) document stream
-    * via foreachBatch; `sink` receives each micro-batch's decision
-    * rows. Caller adds checkpointing/trigger options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(curateBatch(spark, dir, batch))
-    }
-
   /** The full ingest front end-to-end: curation decisions stream into
     * the registered model `name` through [[StreamIngest.applyBatch]]'s
     * idempotent append chain — each micro-batch lands as one
@@ -79,14 +68,11 @@ object StreamCuration {
   def toModel(spark: SparkSession, dir: String, docs: DataFrame,
       api: graft.api.FalApi, name: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamIngest.applyBatch(api, name,
-          curateBatch(spark, dir, batch), batchId)
-        ()
-      }
-      .start()
+    StreamOps.eachBatch(docs) { (batch, batchId) =>
+      StreamIngest.applyBatch(api, name,
+        curateBatch(spark, dir, batch), batchId)
+      ()
+    }.option("checkpointLocation", checkpointDir).start()
 
   /** Route one micro-batch of (doc_id, text, event_ts) rows under the
     * E3 watermark discipline: rows whose event_ts has fallen behind
@@ -136,37 +122,32 @@ object StreamCuration {
         Option(prior.getTimestamp(0))
           .map(t => new java.sql.Timestamp(t.getTime - delaySeconds * 1000L))
       } else None
-    // one materialization of the micro-batch for all four consumers
-    // below (late routing, curation, the max-ts scalar) — an
-    // unpersisted batch would re-evaluate its source lineage per use
-    val cached = batch.persist()
-    try {
-      // a NULL event_ts is "no event-time claim": route it on-time
-      // (curated) at every batch, matching the no-watermark behavior
-      // of batch 0 — a null must never silently match neither filter
-      val late = watermark
-        .map(w => cached.filter(col("event_ts") < lit(w)))
-        .getOrElse(cached.limit(0))
-      val onTime = watermark
-        .map(w => cached.filter(col("event_ts") >= lit(w) ||
-          col("event_ts").isNull))
-        .getOrElse(cached)
-      if (!late.isEmpty)
-        StreamIngest.applyBatch(api, s"${name}_quarantine",
-          late.withColumn("batch_id", lit(batchId)), batchId)
-      StreamIngest.applyBatch(api, name,
-        curateBatch(spark, dir, onTime.select("doc_id", "text")), batchId)
-      // advance the state LAST: a crash before this line replays the
-      // batch against the same watermark; the data appends above are
-      // already committed and no-op on the replay
-      val mx = cached.agg(max(col("event_ts"))).collect()(0)
-        .getTimestamp(0)
-      if (mx != null) {
-        import spark.implicits._
-        StreamIngest.applyBatch(api, wmName,
-          Seq((batchId, mx)).toDF("batch_id", "max_ts"), batchId)
-      }
-    } finally { cached.unpersist(); () }
+    // a NULL event_ts is "no event-time claim": route it on-time
+    // (curated) at every batch, matching the no-watermark behavior of
+    // batch 0 — a null must never silently match neither filter. The
+    // three reads of `batch` below share the persist of
+    // StreamOps.eachBatch.
+    val late = watermark
+      .map(w => batch.filter(col("event_ts") < lit(w)))
+      .getOrElse(batch.limit(0))
+    val onTime = watermark
+      .map(w => batch.filter(col("event_ts") >= lit(w) ||
+        col("event_ts").isNull))
+      .getOrElse(batch)
+    if (!late.isEmpty)
+      StreamIngest.applyBatch(api, s"${name}_quarantine",
+        late.withColumn("batch_id", lit(batchId)), batchId)
+    StreamIngest.applyBatch(api, name,
+      curateBatch(spark, dir, onTime.select("doc_id", "text")), batchId)
+    // advance the state LAST: a crash before this line replays the
+    // batch against the same watermark; the data appends above are
+    // already committed and no-op on the replay
+    val mx = batch.agg(max(col("event_ts"))).collect()(0).getTimestamp(0)
+    if (mx != null) {
+      import spark.implicits._
+      StreamIngest.applyBatch(api, wmName,
+        Seq((batchId, mx)).toDF("batch_id", "max_ts"), batchId)
+    }
   }
 
   /** [[toModel]] with the watermark discipline of
@@ -178,11 +159,8 @@ object StreamCuration {
       docs: DataFrame, api: graft.api.FalApi, name: String,
       checkpointDir: String, delaySeconds: Long = 600L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchWatermarked(spark, dir, api, name, batch, batchId,
-          delaySeconds)
-      }
-      .start()
+    StreamOps.eachBatch(docs) { (batch, batchId) =>
+      applyBatchWatermarked(spark, dir, api, name, batch, batchId,
+        delaySeconds)
+    }.option("checkpointLocation", checkpointDir).start()
 }

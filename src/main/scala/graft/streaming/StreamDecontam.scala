@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Dedup
 
@@ -28,7 +27,8 @@ object StreamDecontam {
   /** Probe ONE micro-batch of newly ingested (doc_id, text) documents
     * against the eval suite; returns per contaminated doc the eval-hit
     * count and the strongest estimate (est-Jaccard ≥ 0.5 gate, same as
-    * the batch query). Also the foreachBatch kernel for [[attach]].
+    * the batch query). Runs per micro-batch under
+    * [[StreamOps.eachBatch]].
     */
   def probeBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame = {
@@ -45,15 +45,4 @@ object StreamDecontam {
       .agg(countDistinct(col("eval_id")).as("n_eval_docs"),
         max(col("est_jaccard")).as("max_est_jaccard"))
   }
-
-  /** Attach the ingest-gate probe to a (doc_id, text) document stream
-    * via foreachBatch; `sink` receives each micro-batch's contaminated
-    * docs (a quarantine model write in production, an accumulator in
-    * tests). Caller adds checkpointing/trigger options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(probeBatch(spark, dir, batch))
-    }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Dedup
 
@@ -28,8 +27,8 @@ object StreamDedup {
 
   /** Probe ONE micro-batch of newly ingested (doc_id, text) documents
     * against the standing LSH index; returns the scored near-dup pairs
-    * (new_doc, index_doc, n_match, est_jaccard ≥ 0.5). Also the
-    * foreachBatch kernel for [[attach]].
+    * (new_doc, index_doc, n_match, est_jaccard ≥ 0.5). Runs per
+    * micro-batch under [[StreamOps.eachBatch]].
     */
   def probeBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame = {
@@ -49,15 +48,4 @@ object StreamDedup {
         "index_doc", "new_doc")
       .select("new_doc", "index_doc", "n_match", "est_jaccard")
   }
-
-  /** Attach the probe to a (doc_id, text) document stream via
-    * foreachBatch; `sink` receives each micro-batch's scored pairs
-    * (an append parquet / model write in production, an accumulator in
-    * tests). Caller adds checkpointing/trigger options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(probeBatch(spark, dir, batch))
-    }
 }

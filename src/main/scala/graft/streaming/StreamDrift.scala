@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{Curation2, TextAnalysis}
 
@@ -31,8 +30,8 @@ import graft.operators.{Curation2, TextAnalysis}
 object StreamDrift {
 
   /** Drift profile of ONE micro-batch of (doc_id, text) rows against
-    * the standing reference distribution. Also the foreachBatch kernel
-    * for [[attach]]. Bucket union is FULL: a bucket seen only in the
+    * the standing reference distribution. Runs per micro-batch under
+    * [[StreamOps.eachBatch]]. Bucket union is FULL: a bucket seen only in the
     * batch (novel vocabulary) or only in the reference still reports,
     * with add-one smoothing covering the zero side.
     */
@@ -53,14 +52,4 @@ object StreamDrift {
         coalesce(col("cand_cnt"), lit(0L)).as("cand_cnt"))
     Curation2.driftReadout(byB)
   }
-
-  /** Attach the monitor to a (doc_id, text) stream via foreachBatch;
-    * `sink` receives each micro-batch's per-bucket drift rows. Caller
-    * adds checkpointing/trigger options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(driftBatch(spark, dir, batch))
-    }
 }

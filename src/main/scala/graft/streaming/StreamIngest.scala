@@ -1,14 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.api.FalApi
 
 /** Streaming → A-layer ingest: sink a stream into a registered model
-  * through `foreachBatch` + the metadata-only append chain. This is
-  * the continual-ingest shape the reference's users run as externally
-  * fed incremental models: each micro-batch lands as ONE new version
+  * through [[StreamOps.eachBatch]] + the metadata-only append chain.
+  * This is the continual-ingest shape the reference's users run as
+  * externally fed incremental models: each micro-batch lands as ONE new version
   * directory holding only the increment (O(batch) write cost no matter
   * how large the accumulated model gets), readers always see a
   * consistent pointer, and `compactModel` folds long chains on
@@ -71,10 +71,7 @@ object StreamIngest {
     */
   def toModel(stream: DataFrame, api: FalApi, name: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(api, name, batch, batchId); ()
-      }
-      .start()
+    StreamOps.eachBatch(stream) { (batch, batchId) =>
+      applyBatch(api, name, batch, batchId); ()
+    }.option("checkpointLocation", checkpointDir).start()
 }

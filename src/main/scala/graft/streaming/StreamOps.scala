@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
 /** Structured Streaming shapes for the event operators (SURVEY.md §2e
   * E1–E4). The reference has no streaming surface; these are the
@@ -17,6 +18,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the batch shuffle does.
   */
 object StreamOps {
+
+  /** The one micro-batch loop: `body` runs on every micro-batch of
+    * `stream` with its batch id. The batch is persisted for the body's
+    * scope and released in `finally`, so a body that reads it more than
+    * once reads the source once, and a lost block recomputes from the
+    * micro-batch's replayable source offsets instead of failing. Every
+    * per-batch kernel (`StreamScrub.scrubBatch`, `StreamAnn.probeBatch`,
+    * …) runs through here: `eachBatch(docs)((b, _) => sink(kernel(b)))`.
+    * Caller adds checkpointing/trigger options and starts.
+    */
+  def eachBatch(stream: DataFrame)(body: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val b = batch.persist()
+      try body(b, batchId) finally { b.unpersist(); () }
+    }
 
   /** Normalize the events `ts` column to session-TZ TimestampType for
     * either source encoding (int64 nanos under nanosAsLong → µs

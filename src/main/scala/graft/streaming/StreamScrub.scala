@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Curation2
 
@@ -33,7 +32,7 @@ import graft.operators.Curation2
 object StreamScrub {
 
   /** Scrub ONE micro-batch of (doc_id, text) rows against the standing
-    * corpus grams. Also the foreachBatch kernel for [[attach]].
+    * corpus grams. Runs per micro-batch under [[StreamOps.eachBatch]].
     */
   def scrubBatch(spark: SparkSession, dir: String,
       batchDocs: DataFrame): DataFrame = {
@@ -42,14 +41,4 @@ object StreamScrub {
     Curation2.scrubAgainst(docs, Curation2.gramHashes(docs),
       Curation2.sharedGrams(spark, dir))
   }
-
-  /** Attach the scrub to a (doc_id, text) stream via foreachBatch;
-    * `sink` receives each micro-batch's scrub-profile rows. Caller
-    * adds checkpointing/trigger options and starts.
-    */
-  def attach(spark: SparkSession, dir: String, docs: DataFrame)(
-      sink: DataFrame => Unit): DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(scrubBatch(spark, dir, batch))
-    }
 }

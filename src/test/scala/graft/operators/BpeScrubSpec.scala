@@ -321,40 +321,20 @@ class BpeScrubSpec extends AnyFunSuite
 
   test("BPE training leaves no executor-local checkpoint and no leaked " +
       "cache") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     // a private copy of the corpus, so all six standing BPE models train
     val dir = Files.createTempDirectory("graft_bpe_train_fix").toString
     fixtureDirs += dir
     Files.copy(java.nio.file.Paths.get(sfDir, "documents.parquet"),
       java.nio.file.Paths.get(dir, "documents.parquet"))
-    val marker = "bpe-train-plans-done"
-    val plans = new ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        plans.add(qe.optimizedPlan.toString + qe.executedPlan.toString); ()
-      }
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     spark.sharedState.cacheManager.clearCache()
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    spark.listenerManager.register(listener)
-    try {
+    val all = TestSpark.plansIn {
       for (q <- Seq("tx_bpe_merges", "tx_bpe_batch", "tx_bpe_deep",
           "tx_bpe_apply", "tx_bpe_apply_deep", "tx_bpe_deep_apply")) {
         val df = graft.SparkEntry.queries(q)(spark, dir)
         assert(df.collect().nonEmpty, q)
       }
-      // listener events arrive in order: once the marker query is seen,
-      // every training and query execution before it has been recorded
-      spark.range(1).select(lit(marker)).collect()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!plans.toArray.exists(_.toString.contains(marker)) &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    val all = plans.toArray.map(_.toString).toSeq
-    assert(all.exists(_.contains(marker)))
+    }
     for (m <- Seq("bpe_seg_3", "bpe_merges_3", "bpe_seg_b12x16",
         "bpe_merges_b12x16", "bpe_phrase_seg_84", "bpe_phrase_merges_84"))
       assert(Shared.buildCounts.get((dir, m)).contains(1L), m)

@@ -29,8 +29,9 @@ class StreamAnnSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, Array[Float])]
     val got = mutable.Buffer[(Long, Long, Long, Double)]()
-    val q = StreamAnn.attach(spark, dir,
-        input.toDF().toDF("query_id", "embedding")) { hits =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("query_id", "embedding")) { (b, _) =>
+      val hits = StreamAnn.probeBatch(spark, dir, b)
       got ++= hits.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     }.start()
@@ -63,8 +64,9 @@ class StreamAnnSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, Array[Float])]
     val got = mutable.Buffer[(Long, Long, Double)]()
-    val q = StreamAnn.attachDup(spark, dir,
-        input.toDF().toDF("query_id", "embedding")) { hits =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("query_id", "embedding")) { (b, _) =>
+      val hits = StreamAnn.dupBatch(spark, dir, b)
       got ++= hits.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }.start()

@@ -63,8 +63,9 @@ class StreamBpeDeepSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[(Long, Long, Long)]()
-    val q = StreamBpeDeep.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { out =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val out = StreamBpeDeep.tokenizeBatch(spark, dir, b)
       got ++= out.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2)))
     }.start()

@@ -83,10 +83,12 @@ class StreamBpePhraseSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val seen = scala.collection.mutable.Buffer
       .empty[(Long, Long, Long, String)]
-    val q = StreamBpePhrase.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text"))(
-      out => seen ++= out.as[(Long, Long, Long, String)](
-        org.apache.spark.sql.Encoders.product).collect()).start()
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val out = StreamBpePhrase.tokenizeBatch(spark, dir, b)
+      seen ++= out.as[(Long, Long, Long, String)](
+        org.apache.spark.sql.Encoders.product).collect()
+    }.start()
     try {
       input.addData(b1); q.processAllAvailable()
       input.addData(b2); q.processAllAvailable()

@@ -64,8 +64,9 @@ class StreamBpeSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[(Long, Long, Long)]()
-    val q = StreamBpe.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { out =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val out = StreamBpe.tokenizeBatch(spark, dir, b)
       got ++= out.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2)))
     }.start()

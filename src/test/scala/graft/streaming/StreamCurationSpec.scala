@@ -39,8 +39,9 @@ class StreamCurationSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[(Long, String, Long, Double, Double, Long,
       Long, Double, Boolean)]()
-    val q = StreamCuration.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { decisions =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val decisions = StreamCuration.curateBatch(spark, dir, b)
       got ++= rows(decisions)
     }.start()
     try {

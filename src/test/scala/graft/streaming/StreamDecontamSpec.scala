@@ -31,8 +31,9 @@ class StreamDecontamSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[(Long, Long, Double)]()
-    val q = StreamDecontam.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { flagged =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val flagged = StreamDecontam.probeBatch(spark, dir, b)
       got ++= flagged.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }.start()

@@ -29,8 +29,9 @@ class StreamDedupSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[(Long, Long, Long, Double)]()
-    val q = StreamDedup.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { pairs =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val pairs = StreamDedup.probeBatch(spark, dir, b)
       got ++= pairs.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     }.start()

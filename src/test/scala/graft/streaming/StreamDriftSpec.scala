@@ -37,8 +37,9 @@ class StreamDriftSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val batches = mutable.Buffer[Seq[DriftRow]]()
-    val q = StreamDrift.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { out =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val out = StreamDrift.driftBatch(spark, dir, b)
       batches += rows(out)
     }.start()
     try {

@@ -47,8 +47,9 @@ class StreamScrubSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[ScrubRow]()
-    val q = StreamScrub.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { out =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val out = StreamScrub.scrubBatch(spark, dir, b)
       got ++= rows(out)
     }.start()
     try {
@@ -90,8 +91,9 @@ class StreamScrubSpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, String)]
     val got = mutable.Buffer[ScrubRow]()
-    val q = StreamScrub.attach(spark, dir,
-        input.toDF().toDF("doc_id", "text")) { out =>
+    val q = StreamOps.eachBatch(
+        input.toDF().toDF("doc_id", "text")) { (b, _) =>
+      val out = StreamScrub.scrubBatch(spark, dir, b)
       got ++= rows(out)
     }.start()
     try {
