@@ -12,7 +12,8 @@ union-find — a different algorithm from the Spark side's hierarchical
 contraction — produces the exact min-label per component in O(E a(N)).
 
 Usage:
-  sbt "runMain graft.MidScaleResolve <copies> <outdir>"
+  sbt "runMain graft.DataGen <sf0.1 dir> testdata/sf0.<copies> <copies>"
+  sbt "runMain graft.Verify testdata/sf0.<copies> <outdir> dd_simhash_resolve,dd_minhash_resolve,dd_minhash_hi_resolve"
   python3 scripts/check_resolve_midscale.py testdata/sf0.<copies> <outdir>
 """
 import sys, json, os, re

@@ -4,29 +4,23 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.tune(spark)
-    // JIT/codegen warmup so the first timed query isn't charged for
-    // session spin-up (~4-5s of JVM warmup otherwise lands on one query)
-    spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 7)")
-      .collect()
+    val spark = GraftConf.session()
+    SparkEntry.warmUp(spark)
     // Run every query once untimed at the TARGET dir: warms generated
     // code + JIT, the file-index/parquet-footer caches, and AQE stats
     // for exactly the plans the timed pass runs, so the metric reports
     // steady-state throughput (the number that scales) rather than
     // one-time class loading and file listing. Warmup time is not part
     // of the reported metric; BASELINE.md records the same policy.
-    SparkEntry.queries.valuesIterator.foreach { fn =>
-      try fn(spark, sfDir).count()
+    // Each run's scope drops the caches its query made: 100+ retained
+    // caches otherwise eat executor memory and the GC/eviction pressure
+    // lands on whichever queries run late in the loop (measured:
+    // dd_contamination 1.0 s alone vs 5.6 s late in a retain-everything
+    // pass), and a query's own .cache() must not leak into the next
+    // measurement (cold-cache per query, steady-state JIT).
+    SparkEntry.queries.keysIterator.foreach { name =>
+      try SparkEntry.run(spark, name, sfDir)(_.count())
       catch { case _: Throwable => () }
-      // several queries .cache() intermediates; drop each one's blocks
-      // immediately — 100+ retained caches otherwise eat executor
-      // memory and the GC/eviction pressure lands on whichever queries
-      // run late in the loop (measured: dd_contamination 1.0 s alone vs
-      // 5.6 s late in a retain-everything pass)
-      spark.sharedState.cacheManager.clearCache()
     }
     // SPARK_GRAFT_BENCH_REPS>1 → median-of-N per query (stable numbers
     // for tuning); default 1 keeps the driver's single-shot timing.
@@ -36,18 +30,14 @@ object Bench {
     // protocol line carries an "errors" count (round 6 hid ~20 broken
     // queries behind their time-to-throw).
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    val results = SparkEntry.queries.map { case (name, _) =>
       val times = (1 to reps).map { _ =>
-        // clear per-run: a query's own .cache() must not leak into the
-        // next measurement (cold-cache per query, steady-state JIT)
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
+        try SparkEntry.run(spark, name, sfDir)(_.count())._2 catch {
           case t: Throwable =>
             failed.getOrElseUpdate(name,
               s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(160)}")
+            -1.0
         }
-        (System.nanoTime() - t0) / 1e9
       }.sorted
       val median = times((reps - 1) / 2)
       name -> (if (failed.contains(name)) -1.0 else median)

@@ -110,10 +110,9 @@ object Cli {
     val storage = resolved.storage
     val threads = resolved.threads
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // target-declared session confs (shuffle partitions, AQE knobs…) —
+    val spark = GraftConf.session()
+    // target-declared session confs (shuffle partitions, AQE knobs…),
+    // applied after the tuned defaults so the target's settings win —
     // runtime confs only; a static conf here fails loudly, like a bad
     // profile would in the reference
     resolved.sparkConf.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -33,45 +33,63 @@ object DataGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dest = if (args.length > 1) args(1) else "testdata/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.tune(spark)
+    val spark = GraftConf.session(8)
 
-    def read(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+    def stride(table: String, key: String): Long =
+      DataGen.stride(spark, src, table, key)
+    def tile(table: String, files: Int, shifts: Map[String, Long],
+        regen: Map[String, Column] = Map.empty): Unit =
+      DataGen.tile(spark, src, dest, copies, table, files, shifts, regen)
 
-    def stride(df: DataFrame, key: String): Long =
-      df.agg(max(col(key))).head.getAs[Number](0).longValue() + 1L
+    val cStride = stride("customer", "c_custkey")
+    val sStride = stride("supplier", "s_suppkey")
+    val pStride = stride("part", "p_partkey")
+    val oStride = stride("orders", "o_orderkey")
+    // events' ts encoding (int64 nanos via nanosAsLong, or
+    // timestamp[µs]) is preserved as-read; Tables.load handles either
+    // on the way back in
+    val eStride = stride("events", "event_id")
+    val uStride = stride("events", "user_id")
 
-    val customer = read("customer")
-    val supplier = read("supplier")
-    val part = read("part")
-    val orders = read("orders")
-    // ts encoding (int64 nanos via nanosAsLong, or timestamp[µs]) is
-    // preserved as-read; Tables.load handles either on the way back in
-    val events = read("events")
-    val documents = read("documents")
-    val embeddings = read("embeddings")
+    // fixed dimensions: nationkey/regionkey domains are not scaled
+    // (TPC-H keeps nation/region constant across sf)
+    Seq("region", "nation").foreach(t =>
+      write(spark.read.parquet(s"$src/$t.parquet"), dest, t, 1))
 
-    val cStride = stride(customer, "c_custkey")
-    val sStride = stride(supplier, "s_suppkey")
-    val pStride = stride(part, "p_partkey")
-    val oStride = stride(orders, "o_orderkey")
-    val eStride = stride(events, "event_id")
-    val uStride = stride(events, "user_id")
-    val dStride = stride(documents, "doc_id")
-    val vStride = stride(embeddings, "vec_id")
+    tile("customer", 2, Map("c_custkey" -> cStride),
+      Map("c_name" -> format_string("Customer#%09d", col("c_custkey"))))
+    tile("supplier", 1, Map("s_suppkey" -> sStride),
+      Map("s_name" -> format_string("Supplier#%09d", col("s_suppkey"))))
+    tile("part", 2, Map("p_partkey" -> pStride))
+    tile("orders", 4, Map("o_orderkey" -> oStride, "o_custkey" -> cStride))
+    tile("lineitem", 8, Map("l_orderkey" -> oStride, "l_partkey" -> pStride,
+      "l_suppkey" -> sStride))
+    tile("events", 4, Map("event_id" -> eStride, "user_id" -> uStride))
+    tileDocuments(spark, src, dest, copies)
+    tileEmbeddings(spark, src, dest, copies)
 
-    /** `copies` shifted unions of `df` in one scan: broadcast-crossjoin
-      * a tiny copy index, add `idx * stride` to each key (cast back to
-      * its source type), then re-derive any key-embedding columns.
-      */
-    def tile(df: DataFrame, shifts: Map[String, Long],
-        regen: Map[String, Column] = Map.empty): DataFrame = {
-      val withIdx = df.crossJoin(
-        broadcast(spark.range(copies).toDF("__copy")))
-      val shifted = withIdx.select(df.schema.fields.map { f =>
+    spark.stop()
+  }
+
+  /** One past the largest `key` of `src/table`: the per-copy shift. */
+  private def stride(spark: SparkSession, src: String, table: String,
+      key: String): Long =
+    spark.read.parquet(s"$src/$table.parquet").agg(max(col(key))).head
+      .getAs[Number](0).longValue() + 1L
+
+  /** The one tiling rule: `copies` shifted unions of `src/table` in one
+    * scan — broadcast-crossjoin a tiny copy index, add `copy * stride`
+    * to each key in `shifts` (cast back to its source type), re-derive
+    * the key-embedding columns in `regen` — written to `dest/table` as
+    * `files` files.
+    */
+  private def tile(spark: SparkSession, src: String, dest: String,
+      copies: Int, table: String, files: Int, shifts: Map[String, Long],
+      regen: Map[String, Column] = Map.empty): Unit = {
+    val df = spark.read.parquet(s"$src/$table.parquet")
+    val shifted = df
+      .crossJoin(broadcast(spark.range(copies).toDF("__copy")))
+      .select(df.schema.fields.map { f =>
         shifts.get(f.name) match {
           case Some(s) =>
             (col(f.name) + col("__copy") * lit(s)).cast(f.dataType)
@@ -79,47 +97,25 @@ object DataGen {
           case None => col(f.name)
         }
       }.toIndexedSeq: _*)
-      regen.foldLeft(shifted) { case (d, (name, expr)) =>
-        d.withColumn(name, expr)
-      }
-    }
+    write(regen.foldLeft(shifted) { case (d, (name, expr)) =>
+      d.withColumn(name, expr)
+    }, dest, table, files)
+  }
 
-    def write(df: DataFrame, name: String, files: Int): Unit = {
-      df.repartition(files).write.mode("overwrite")
-        .parquet(s"$dest/$name.parquet")
-      Tables.invalidate(dest, name) // see Tables.schemaCache scaladoc
-      // standing models memoized for this dir were built from the
-      // pre-rewrite files (ADVICE r11): drop the in-process trust (the
-      // durable layer self-heals via the corpus fingerprint)
-      graft.operators.Shared.invalidate(dest)
-      println(s"[datagen] $name -> $dest/$name.parquet ($files files)")
-    }
-
-    // fixed dimensions: nationkey/regionkey domains are not scaled
-    // (TPC-H keeps nation/region constant across sf)
-    write(read("region"), "region", 1)
-    write(read("nation"), "nation", 1)
-
-    write(tile(customer, Map("c_custkey" -> cStride),
-      Map("c_name" ->
-        format_string("Customer#%09d", col("c_custkey")))),
-      "customer", 2)
-    write(tile(supplier, Map("s_suppkey" -> sStride),
-      Map("s_name" ->
-        format_string("Supplier#%09d", col("s_suppkey")))),
-      "supplier", 1)
-    write(tile(part, Map("p_partkey" -> pStride)), "part", 2)
-    write(tile(orders,
-      Map("o_orderkey" -> oStride, "o_custkey" -> cStride)), "orders", 4)
-    write(tile(read("lineitem"), Map(
-      "l_orderkey" -> oStride, "l_partkey" -> pStride,
-      "l_suppkey" -> sStride)), "lineitem", 8)
-    write(tile(events,
-      Map("event_id" -> eStride, "user_id" -> uStride)), "events", 4)
-    write(tile(documents, Map("doc_id" -> dStride)), "documents", 2)
-    tileEmbeddings(spark, src, dest, copies)
-
-    spark.stop()
+  /** Write `df` as `dest/table` in `files` files, dropping what this
+    * process remembers of the table's previous files. */
+  private def write(df: DataFrame, dest: String, table: String,
+      files: Int): Unit = {
+    df.repartition(files).write.mode("overwrite")
+      .parquet(s"$dest/$table.parquet")
+    // the process-wide schema cache must not serve a pre-rewrite entry
+    // (see Tables.schemaCache scaladoc); standing models memoized for
+    // this dir were built from the pre-rewrite files (ADVICE r11): drop
+    // the in-process trust (the durable layer self-heals via the corpus
+    // fingerprint)
+    Tables.invalidate(dest, table)
+    graft.operators.Shared.invalidate(dest)
+    println(s"[datagen] $table -> $dest/$table.parquet ($files files)")
   }
 
   /** Tile ONLY the embeddings table `src` → `dest` — the one table the
@@ -127,48 +123,20 @@ object DataGen {
     * this on demand in a fresh checkout (VERDICT r8 #8: the spec used
     * to `assume()`-skip without a pre-generated `testdata/sf1`, so a
     * clean clone silently lost its only at-scale recall evidence);
-    * sub-second at 10× sf0.1. The full multi-table fixture is still
-    * `sbt "runMain graft.DataGen"`.
+    * sub-second at 10× sf0.1. Same rule and file count as the full
+    * fixture, so an on-demand tile equals the fixture's copy of the
+    * table (a different layout would give a timing-sensitive sf1 probe
+    * different scan parallelism).
     */
-  /* Keep the shift rule here in lockstep with main's tile(): both are
-   * `key + copy * (max(key)+1)` with the same per-field cast-back; a
-   * change to the tiling rule must land in both or the on-demand
-   * single-table tiles diverge from the full fixture's copies of the
-   * same tables. */
-  private def tileOne(spark: SparkSession, src: String, dest: String,
-      copies: Int, table: String, key: String, files: Int): Unit = {
-    val df = spark.read.parquet(s"$src/$table.parquet")
-    val stride = df.agg(max(col(key))).head
-      .getAs[Number](0).longValue() + 1L
-    val shifted = df
-      .crossJoin(broadcast(spark.range(copies).toDF("__copy")))
-      .select(df.schema.fields.map { f =>
-        if (f.name == key)
-          (col(f.name) + col("__copy") * lit(stride)).cast(f.dataType)
-            .as(f.name)
-        else col(f.name)
-      }.toIndexedSeq: _*)
-    // match the full fixture's canonical per-table file count (ADVICE
-    // r9): an on-demand tile with a different layout would give any
-    // timing-sensitive sf1 probe different scan parallelism than a
-    // DataGen-generated fixture over the same rows
-    shifted.repartition(files).write.mode("overwrite")
-      .parquet(s"$dest/$table.parquet")
-    // the process-wide schema cache must not serve a pre-rewrite entry
-    // for a table this process just (re)generated; same for standing
-    // models memoized from the pre-rewrite files (ADVICE r11)
-    Tables.invalidate(dest, table)
-    graft.operators.Shared.invalidate(dest)
-    println(s"[datagen] $table -> $dest/$table.parquet ($files files)")
-  }
-
   def tileEmbeddings(spark: SparkSession, src: String, dest: String,
       copies: Int): Unit =
-    tileOne(spark, src, dest, copies, "embeddings", "vec_id", 1)
+    tile(spark, src, dest, copies, "embeddings", 1,
+      Map("vec_id" -> stride(spark, src, "embeddings", "vec_id")))
 
   /** On-demand tile of the documents table — the dedup twins' at-scale
     * fixture, same never-skip rationale as [[tileEmbeddings]]. */
   def tileDocuments(spark: SparkSession, src: String, dest: String,
       copies: Int): Unit =
-    tileOne(spark, src, dest, copies, "documents", "doc_id", 2)
+    tile(spark, src, dest, copies, "documents", 2,
+      Map("doc_id" -> stride(spark, src, "documents", "doc_id")))
 }

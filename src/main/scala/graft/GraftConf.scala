@@ -5,10 +5,23 @@ import org.apache.spark.sql.SparkSession
 /** One place for the engine's scale knobs (SURVEY.md §7 step 6:
   * "partition-count and AQE settings surfaced in one config object").
   * Build-time settings go through [[builder]]; [[tune]] applies the
-  * runtime-settable subset to an existing session (the driver-owned
-  * Verify/Bench sessions).
+  * runtime-settable subset to an existing session. Every harness main
+  * builds its session through [[session]].
   */
 object GraftConf {
+
+  /** The one harness session: `local[SPARK_GRAFT_CPUS]` (default
+    * `defaultCpus`) with as many shuffle partitions, WARN logging and
+    * [[tune]] applied, so every main plans under the same settings.
+    */
+  def session(defaultCpus: Int = 4): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+      .toInt
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
+    spark
+  }
 
   /** Runtime-settable tuning: AQE with partition coalescing and skew
     * join splitting — the knobs that matter when the same plans move
@@ -52,8 +65,8 @@ object GraftConf {
     // the bench tail.
     // (package-level: the logWarning sits in WindowExecBase but the
     // Logging trait names loggers after the runtime class)
-    // Scoped to harness runs (quietWindowLog=true, the default for
-    // Bench/Verify/QueryTime mains); the interactive Shell passes false
+    // Scoped to harness runs (quietWindowLog=true, the default that
+    // [[session]] applies); the interactive Shell passes false
     // so user-added unpartitioned windows still warn.
     if (quietWindowLog)
       org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -27,9 +27,7 @@ import graft.operators.{Curation2, Dedup, Shared, StandingIngest,
 object IngestDemo {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftConf.builder("local[4]", 4).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.tune(spark)
+    val spark = GraftConf.session()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

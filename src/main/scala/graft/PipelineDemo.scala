@@ -18,10 +18,7 @@ import graft.plans._
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftConf.session()
 
     val root = Files.createTempDirectory("graft-demo").toString
     val registry = new Registry(root)

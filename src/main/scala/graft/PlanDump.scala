@@ -10,9 +10,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftConf.session()
 
     val picks = Seq(
       "c8_agg" -> "pushdown + partial aggregation",
@@ -62,12 +60,11 @@ object PlanDump {
       "`HashAggregate`, `TakeOrderedAndProject` for top-k, and " +
       "`WholeStageCodegen` spans covering the hot expressions.\n")
     picks.foreach { case (name, why) =>
-      // drop the previous query's caches, as the runners do, so no plan
-      // reads another query's cached frame
-      spark.sharedState.cacheManager.clearCache()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      // each query's scope drops its caches, so no plan reads another
+      // query's cached frame
+      val (plan, _) = SparkEntry.run(spark, name, sfDir)(
+        _.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
       sb.append(s"\n## $name — $why\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)

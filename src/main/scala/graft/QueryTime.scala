@@ -3,11 +3,13 @@ package graft
 /** Dev micro-bench: time one or more named queries cold and warm.
   * Comma-separate names to amortize session spin-up over a list.
   *
-  * The default sink is `count()`, the Bench metric. A fourth argument
-  * `noop` writes to the noop sink instead, so the FULL plan runs —
-  * `count()` lets Catalyst prune final projections (md5/filter stages),
-  * which understates rewrite-heavy queries; this is the same
-  * methodology ScalingProbe uses.
+  * The fourth argument picks the sink. The default, `count`, is the
+  * Bench metric. `noop` writes to the noop sink instead, so the FULL
+  * plan runs — `count()` lets Catalyst prune final projections
+  * (md5/filter stages), which understates rewrite-heavy queries; this is
+  * the same methodology ScalingProbe uses. `explain` prints the
+  * formatted physical plan — the review loop for pushdown, broadcast
+  * and codegen regressions.
   *
   * After each run, one `[qt] build <model> <s>` line per standing model
   * that run built (its [[graft.operators.Shared.buildSeconds]] entry),
@@ -16,31 +18,33 @@ package graft
   * {{{ sbt "runMain graft.QueryTime dd_ngram_jaccard /root/testdata/sf0.1 3" }}}
   * {{{ sbt "runMain graft.QueryTime q_rfm,q_sssp /root/testdata/sf0.1 3" }}}
   * {{{ sbt "runMain graft.QueryTime dd_substring_scrub testdata/sf1 3 noop" }}}
+  * {{{ sbt "runMain graft.QueryTime c8_agg <sf0.01 dir> 1 explain" }}}
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val noop = args.length > 3 && args(3) == "noop"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftConf.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.tune(spark)
-    spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 7)")
-      .collect()
+    val sink = if (args.length > 3) args(3) else "count"
+    require(Set("count", "noop", "explain").contains(sink),
+      s"sink must be count, noop or explain, got: $sink")
+    val spark = GraftConf.session()
+    SparkEntry.warmUp(spark)
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>
-        spark.sharedState.cacheManager.clearCache()
         val builtBefore = graft.operators.Shared.buildSeconds.toMap
-        val t0 = System.nanoTime()
-        val rows =
-          if (noop) {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            "noop sink"
-          } else s"${fn(spark, dir).count()} rows"
-        println(f"[qt] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($rows)")
+        val (rows, sec) = SparkEntry.run(spark, name, dir) { df =>
+          sink match {
+            case "noop" =>
+              df.write.format("noop").mode("overwrite").save()
+              "noop sink"
+            case "explain" =>
+              df.explain("formatted")
+              "plan"
+            case _ => s"${df.count()} rows"
+          }
+        }
+        println(f"[qt] $name run$i: $sec%.2f s ($rows)")
         graft.operators.Shared.buildSeconds.toSeq.sortBy(_._1)
           .filterNot { case (m, s) => builtBefore.get(m).contains(s) }
           .foreach { case (m, s) => println(f"[qt] build $m $s%.2f") }

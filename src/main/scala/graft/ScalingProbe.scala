@@ -14,12 +14,9 @@ package graft
   */
 object ScalingProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.tune(spark)
-    spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 7)")
-      .collect()
+    val spark = GraftConf.session()
+    SparkEntry.warmUp(spark)
+    val cpus = spark.sparkContext.defaultParallelism
 
     // sf1 (repo-local, DataGen-tiled ×10 from sf0.1) joins the sweep
     // when present — a 1000× total span, the strongest local evidence
@@ -109,13 +106,9 @@ object ScalingProbe {
     // Full-plan execution: a noop-sink write runs every operator
     // including the final sort/project that `.count()` would let
     // Catalyst prune away — sort-heavy queries otherwise understate.
-    def timeOnce(name: String, dir: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timeOnce(name: String, dir: String): Double =
+      SparkEntry.run(spark, name, dir)(
+        _.write.format("noop").mode("overwrite").save())._2
 
     val rows = picks.map { case (name, what) =>
       val times = sfs.map { case (_, dir) =>
@@ -298,14 +291,7 @@ object ScalingProbe {
             .write.format("noop").mode("overwrite").save()
         }
         def readTimes(): Seq[Double] = probes.map { case (q, _) =>
-          def once(): Double = {
-            spark.sharedState.cacheManager.clearCache()
-            val t0 = System.nanoTime()
-            SparkEntry.queries(q)(spark, tmp)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          once(); math.min(once(), once())
+          timeOnce(q, tmp); math.min(timeOnce(q, tmp), timeOnce(q, tmp))
         }
         val odd = all.filter(col("doc_id") % 2 === 1)
         val checkpoints = scala.collection.mutable

@@ -18,13 +18,9 @@ import org.apache.spark.sql.functions.col
   */
 object Sf10Probe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.tune(spark)
-    spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 7)")
-      .collect()
+    val spark = GraftConf.session(32)
+    SparkEntry.warmUp(spark)
+    val cpus = spark.sparkContext.defaultParallelism
     require(java.nio.file.Files.exists(
         java.nio.file.Paths.get("testdata/sf10")),
       "generate sf10 first: sbt \"runMain graft.DataGen testdata/sf1 " +
@@ -62,13 +58,9 @@ object Sf10Probe {
       "sim_knn_graph" ->
         "corpus k-NN graph (pair-linear LSH band self-join + top-3 limit)")
 
-    def timeOnce(name: String, dir: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timeOnce(name: String, dir: String): Double =
+      SparkEntry.run(spark, name, dir)(
+        _.write.format("noop").mode("overwrite").save())._2
     def f(v: Double) = String.format(
       java.util.Locale.ROOT, "%.2f", Double.box(v))
 

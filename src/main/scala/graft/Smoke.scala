@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 check: `SparkEntry.entry`
   * on sf0.001 must return rows. Also prints the plan of the flagship so
   * plan regressions (lost broadcast, lost pushdown) are visible.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftConf.session()
     val df = SparkEntry.entry(spark)
     if (args.contains("--explain")) df.explain("formatted")
     println(s"ENTRY_ROWS=${df.count()}")

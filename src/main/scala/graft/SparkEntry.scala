@@ -37,4 +37,28 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     packs.flatMap(_.oracles).toMap
+
+  /** The one query scope: build query `name` over `dir`, apply `action`
+    * to it, and return its result with the seconds that construction
+    * plus action took. Several queries `.cache()` an intermediate; the
+    * scope then releases every cached relation of the session, outside
+    * the timed span, so no query's blocks outlive it or reach the next
+    * query's measurement.
+    */
+  def run[A](spark: SparkSession, name: String, dir: String)(
+      action: DataFrame => A): (A, Double) = {
+    val fn = queries(name)
+    try {
+      val t0 = System.nanoTime()
+      val result = action(fn(spark, dir))
+      (result, (System.nanoTime() - t0) / 1e9)
+    } finally spark.sharedState.cacheManager.clearCache()
+  }
+
+  /** JIT/codegen warm-up for the timing mains, so the first timed query
+    * is not charged with session spin-up (~4-5 s of JVM warm-up). */
+  def warmUp(spark: SparkSession): Unit = {
+    spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 7)")
+      .collect()
+  }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.OutputMode
-
 /** Runnable streaming surface (the specs drive the same transforms
   * through MemoryStream; this main shows them against the real testdata
   * as micro-batched file streams):
@@ -15,22 +13,11 @@ import org.apache.spark.sql.streaming.OutputMode
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.GraftConf.builder("local[4]", 4).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftConf.tune(spark)
-    import org.apache.spark.sql.functions._
-
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def source() = StreamOps.tsToTimestamp(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(sfDir))
+    val spark = graft.GraftConf.session()
 
     // 1. windowed aggregation to a queryable in-memory sink
-    val q1 = StreamOps.tumblingCounts(source())
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode(OutputMode.Append()).start()
-    q1.processAllAvailable(); q1.stop()
-    val windows = spark.table("tumbling").count()
+    StreamOps.demo(spark, sfDir)
+    val windows = spark.table("tumbling_demo").count()
     println(s"STREAM_TUMBLING_WINDOWS=$windows")
 
     // 2. dedup into a checkpointed parquet sink; stage the events into

@@ -19,19 +19,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * builds must be comparator-sortable, i.e. scalar-only at the top
   * level, before it is counted (`GateSchemaSpec.assertScalarTopLevel`,
   * which `GateSchemaSpec` also asserts per query without executing).
+  *
+  * Each query runs through `SparkEntry.run`, the scope every harness
+  * main runs it in, and each test then checks that the scope retained
+  * nothing: no cached relation and no persistent RDD the query made.
   */
 class SmokeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"smoke: $name executes on sf0.001") {
-      try {
-        val df = fn(spark, dir)
+      // the suites share one session; count only what this query left
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      SparkEntry.run(spark, name, dir) { df =>
         GateSchemaSpec.assertScalarTopLevel(name, df)
-        val n = df.count()
-        assert(n >= 0)
-      } finally spark.sharedState.cacheManager.clearCache()
+        assert(df.count() >= 0)
+      }
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a cached relation")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+      assert(left.isEmpty, s"$name left persistent RDDs $left")
     }
   }
 }

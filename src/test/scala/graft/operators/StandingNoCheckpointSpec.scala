@@ -21,8 +21,9 @@ import graft.{Tables, TestSpark}
   *      and no persistent RDD behind once their query stops;
   *   3. a retraction request that lazily reads the standing state the
   *      call rewrites still retracts exactly;
-  *   4. the main sources keep zero `localCheckpoint` calls and one
-  *      `foreachBatch` loop.
+  *   4. the main sources keep zero `localCheckpoint` calls, one
+  *      `foreachBatch` loop, one per-query cache release and one
+  *      harness session constructor.
   *
   * The plan check is scoped to direct calls: Spark's ForeachBatchSink
   * hands every micro-batch over as a `LogicalRDD` itself.
@@ -321,5 +322,15 @@ class StandingNoCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val loops = calls("""\.foreachBatch\b""")
     assert(loops.size <= 1,
       s"more than one foreachBatch loop:\n${loops.mkString("\n")}")
+    val releases = calls("""cacheManager\.clearCache\(\)""")
+    assert(releases.size <= 1,
+      s"more than one cache release:\n${releases.mkString("\n")}")
+    // GraftConf.session builds every harness session; RaceAppender's
+    // child JVM builds its own
+    val builders = calls("""GraftConf\.builder\(""").filterNot(c =>
+      c.startsWith("graft/GraftConf.scala:") ||
+        c.startsWith("graft/operators/RaceAppender.scala:"))
+    assert(builders.isEmpty,
+      s"sessions built outside GraftConf.session:\n${builders.mkString("\n")}")
   }
 }
